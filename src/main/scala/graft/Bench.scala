@@ -399,7 +399,8 @@ object Bench {
           (if (job == "spin") sys.env.getOrElse("SPARK_GRAFT_SPIN_N", "100000000000") else scaleN.toString),
           reps.toString, job)
         val out = new StringBuilder
-        val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(false).start()
+        val proc = new ProcessBuilder(cmd: _*)
+          .redirectError(ProcessBuilder.Redirect.INHERIT).start()
         val rdr = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
         var line = rdr.readLine()
         while (line != null) { out.append(line).append('\n'); line = rdr.readLine() }

@@ -42,7 +42,8 @@ object BenchExtra {
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", System.getProperty("java.class.path"),
       "graft.ScalingRun", p.toString, n.toString, reps.toString, job)
-    val pb = new ProcessBuilder(cmd: _*)
+    // stderr drains to ours: a chatty child never blocks on a full pipe
+    val pb = new ProcessBuilder(cmd: _*).redirectError(ProcessBuilder.Redirect.INHERIT)
     extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
     val proc = pb.start()
     val out = new StringBuilder

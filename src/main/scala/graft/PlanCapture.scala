@@ -15,10 +15,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
  *
  *   sbt "runMain graft.PlanCapture <out-dir> <suffix> <q1,q2,...>"
  *
- * "before" files are produced from the same binary with the round-6 plan
- * toggles disabled (SPARK_GRAFT_SMALL_STEP=0 SPARK_GRAFT_FIXTURE_AQE=true),
- * "after" with the defaults — so the claimed plan-shape deltas (shuffle
- * exchanges vs plan-time broadcasts, stage counts) are directly diffable.
+ * It captures the current plans only. The committed "before" files are the
+ * historical round-5 shapes, captured while the small-step broadcast plan
+ * still had a kill switch; "after" files regenerate from the defaults.
  */
 object PlanCapture {
   def main(args: Array[String]): Unit = {

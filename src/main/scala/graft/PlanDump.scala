@@ -61,7 +61,7 @@ object PlanDump {
     val (j0, t0) = clock.snap()
     val w0 = System.nanoTime()
     val r2 = graft.sched.Superstep.run(spark, f2, b2, idx, robots, projects, 2.0, cfg)
-    val union = Crawler.carryUnionForDump(r2.frontier, r2.budgets,
+    val union = Crawler.carryUnion(r2.frontier, r2.budgets,
       Crawler.emptyResults(spark), Some(r2.counters), None)
     println("==== PHYSICAL PLAN OF THE FUSED CARRY ====")
     union.explain("formatted")

@@ -123,26 +123,33 @@ object Udfs {
     * SLOWER at local[32] than local[8]), whereas a real deployment writes
     * snapshots to a distributed FS whose aggregate bandwidth scales with
     * the executor count. Durable stores (Main --checkpoint) keep whatever
-    * path the user gives. Override with SPARK_GRAFT_SCRATCH. */
-  def scratchDir(prefix: String): java.nio.file.Path = {
-    val base = sys.env.get("SPARK_GRAFT_SCRATCH").map(java.nio.file.Paths.get(_)).getOrElse {
+    * path the user gives. Override the base with SPARK_GRAFT_SCRATCH. */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    scratchDirIn(sys.env.get("SPARK_GRAFT_SCRATCH").map(java.nio.file.Paths.get(_)).getOrElse {
       val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) java.nio.file.Paths.get("/dev/shm/graft-scratch")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    }
-    java.nio.file.Files.createDirectories(base)
+      java.nio.file.Paths.get(
+        if (shm.isDirectory && shm.canWrite) "/dev/shm" else System.getProperty("java.io.tmpdir"))
+    }, prefix)
+
+  /** [[scratchDir]] under `base`: every scratch directory lives in the
+    * graft-owned `base/graft-scratch` and is named `graft-*`. */
+  private[graft] def scratchDirIn(base: java.nio.file.Path,
+      prefix: String): java.nio.file.Path = {
+    val owned = java.nio.file.Files.createDirectories(base.resolve("graft-scratch"))
     // RAM-backed scratch is cleaned best-effort at each call site, but a
     // crashed/killed run (forked scaling JVMs, bench section failures) leaks
-    // its directory until reboot (ADVICE r05). Purge siblings old enough
-    // that no live run can still own them (age >= 6h; any legitimate
-    // bench/oracle run completes well inside that).
+    // its directory until reboot (ADVICE r05). Purge graft-* entries of the
+    // owned directory old enough that no live run can still own them (age
+    // >= 6h; any legitimate bench/oracle run completes well inside that).
+    // Nothing else is touched: the base may be a shared temp directory.
     try {
       val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
-      val ls = java.nio.file.Files.list(base)
+      val ls = java.nio.file.Files.list(owned)
       try {
         ls.iterator().forEachRemaining { p =>
           try {
-            if (java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff) {
+            if (p.getFileName.toString.startsWith("graft-") &&
+                java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff) {
               import scala.jdk.CollectionConverters._
               java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
                 .foreach(f => java.nio.file.Files.deleteIfExists(f))
@@ -151,7 +158,8 @@ object Udfs {
         }
       } finally ls.close()
     } catch { case _: Throwable => }
-    java.nio.file.Files.createTempDirectory(base, prefix)
+    java.nio.file.Files.createTempDirectory(owned,
+      if (prefix.startsWith("graft-")) prefix else s"graft-$prefix")
   }
 
   /** Session factory used by mains/tests: graft extensions + UDFs + sane

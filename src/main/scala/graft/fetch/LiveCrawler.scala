@@ -2,17 +2,17 @@ package graft.fetch
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sched.{Crawler, Superstep}
+import graft.sched.{Crawler, StepDriver, Superstep}
 
 /**
  * Live-backend crawl loop (S9 as a deployment mode, not just a seam test):
  * each superstep live-captures the POLITENESS-SELECTED slice of the frontier
- * (Superstep.selectReady: W2 ready -> A7 token budget -> W1/W5 ranking, the
- * same selection the superstep itself re-derives) through [[LiveFetch]] into
- * a transient pages table and advances the standard superstep against it —
- * identical crawl semantics to the archived-capture path because both feed
- * the same `Superstep.preparePages` interface, and the per-host token bucket
- * bounds REAL network traffic, not just post-hoc classification.
+ * (Superstep.selectReady: W2 ready -> A7 token budget -> W1/W5 ranking)
+ * through [[LiveFetch]] into a transient pages index and hands both to the
+ * shared [[StepDriver]] step — identical crawl semantics to the
+ * archived-capture path because both feed the same `Superstep.preparePages`
+ * interface, and the per-host token bucket bounds REAL network traffic, not
+ * just post-hoc classification.
  * Robots-disallowed urls are pre-filtered with the cached rules before any
  * socket is touched (a compliant crawler never issues the request); the
  * superstep's own F9 gate then classifies them as fetch failures.
@@ -23,16 +23,12 @@ import graft.sched.{Crawler, Superstep}
  * superstep fetches only content urls. The cache is driver state
  * deliberately — hosts-with-a-ready-task per step is politeness-bounded
  * (W1/A7), orders of magnitude smaller than the frontier, the same class of
- * bounded driver state as Crawler's per-project counters. A failed robots
+ * bounded driver state as the per-project counters. A failed robots
  * capture (404 / transport) is cached as allow-all for the TTL, exactly like
- * the reference's error branch (tornado_fetcher.py:303-306).
+ * the reference's error branch (tornado_fetcher.py:303-306). The cached
+ * rules are also the superstep's robots side.
  */
 object LiveCrawler {
-
-  final case class LiveRun(steps: Int, frontier: DataFrame, results: DataFrame,
-      totalScheduled: Long, totalFresh: Long,
-      /** robots.txt GETs actually issued (cache misses), for observability */
-      robotsFetches: Long)
 
   def run(spark: SparkSession, projects: DataFrame, seeds: Seq[(String, String)],
       maxSteps: Int, cfg: Superstep.Config = Superstep.Config(),
@@ -45,92 +41,27 @@ object LiveCrawler {
         * bootstrap/commit/resume protocol as [[Crawler.run]], so a killed
         * live crawl resumes from the last committed snapshot and the J1
         * seen-probe runs against the bucketed bloom index */
-      store: Option[graft.frontier.SnapshotStore] = None): LiveRun = {
+      store: Option[graft.frontier.SnapshotStore] = None): Crawler.CrawlRun = {
     import spark.implicits._
 
-    store.foreach { s =>
-      if (s.currentId.isEmpty) {
-        val sf = Crawler.seedFrontier(spark, seeds, now0)
-        s.writeIncremental(spark, 0, now0, sf, sf.select("project", "url_hash"),
-          Crawler.emptyBudgets(spark), Crawler.emptyResults(spark),
-          Crawler.emptyCounters(spark))
-      }
-    }
-    val resumed = store.flatMap(_.read(spark))
-    var step = resumed.map(_.step).getOrElse(0)
-    var frontier = resumed.map(_.frontier)
-      .getOrElse(Crawler.seedFrontier(spark, seeds, now0).localCheckpoint())
-    var budgets = resumed.map(_.budgets).getOrElse(Crawler.emptyBudgets(spark))
-    var results = resumed.map(_.results).getOrElse(Crawler.emptyResults(spark))
     // host -> (capturedAtVirtualTime, robots bytes | null = allow-all)
     val robotsCache = scala.collection.mutable.Map.empty[String, (Double, Array[Byte])]
     var robotsFetches = 0L
-    var totalScheduled = 0L
-    var totalFresh = 0L
+    // same termination contract as Crawler.run — live steps are
+    // politeness-small, so a per-step frontier count job would be the
+    // largest job of the step (verdict r04 item 2)
+    val driver = new StepDriver(spark, projects, store, now0, tick, seeds, terminates = true)
 
-    // termination gate, same contract (and same mechanism) as Crawler.run:
-    // ONE frontier scan at start/resume establishes the remaining-ACTIVE
-    // count over RUNNING (schedulable) projects, then pure arithmetic from
-    // each step's counter deltas — live mode is the mode where steps are
-    // politeness-small and per-step fixed cost dominates, so a per-step
-    // full-frontier count job would be the largest job of the step at 100x
-    // scale (verdict r04 item 2). ACTIVE tasks of non-RUNNING
-    // (STOP/FINISHED) projects are parked — the lifecycle gate never
-    // selects them, so counting them would keep the live loop burning empty
-    // supersteps (and, with a store, committing no-op snapshots). Checked
-    // BEFORE the first step too: resuming an already-drained store must not
-    // run (and commit) one spurious superstep.
-    val runningSet: Set[String] = (
-      if (projects.columns.contains("status"))
-        projects.where(coalesce($"status", lit("RUNNING")) === "RUNNING")
-      else projects).select($"name").collect().map(_.getString(0)).toSet
-    var activeRemaining: Long = frontier
-      .where($"status" === graft.model.TaskStatus.Active)
-      .groupBy($"project").count().collect()
-      .collect { case r if runningSet(r.getString(0)) => r.getLong(1) }.sum
-    var done = activeRemaining == 0
-
-    // previous step's localCheckpointed RDDs (selected/pages/robots +, in
-    // no-store mode, the fused carry): released one step late — the
-    // frontier checkpoint of step k feeds step k+1's selection, and relying
-    // on ContextCleaner would let cached blocks pile up between driver GCs
-    // in a long-running live deployment. Only the RDD ids of frames THIS
-    // loop checkpointed are tracked (ADVICE r05: a context-wide
-    // persistent-RDD diff would force-unpersist a concurrent workload's
-    // RDDs cached in the same window).
-    val sc = spark.sparkContext
-    var prevStepRdds: Set[Int] = Set.empty
-    def ckRddId(df: DataFrame): Option[Int] =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-    // running committed totals (store mode): per-step counter deltas derive
-    // from consecutive snapshots' manifest totals
-    var storeTotals: Map[String, Map[String, Long]] =
-      resumed.map(_.counterTotals).getOrElse(Map.empty)
-    // small-step broadcast gate, same arithmetic bound as Crawler.run —
-    // live mode IS the politeness-small regime this plan shape targets
-    val smallThreshold = spark.conf.getOption("spark.graft.smallStepBroadcastRows")
-      .map(_.toLong).getOrElse(100000L)
-    // unknown resumed row count (-1) disables the small plan (see Crawler)
-    var stateRows: Long = (resumed match {
-      case Some(s) if s.frontierRows >= 0 => s.frontierRows
-      case Some(_) => Long.MaxValue / 2
-      case None => seeds.size.toLong
-    }) + storeTotals.values.map(_.getOrElse("scheduled", 0L)).sum
-
-    while (step < maxSteps && !done) {
-      step += 1
-      val now = now0 + step * tick
+    while (driver.steps < maxSteps && !driver.done) {
+      val now = driver.nextNow
 
       // ---- the politeness-selected slice FIRST (W2 -> A7 -> W1 -> W5),
       // before any socket is touched: the token-bucket budget must bound
       // real network traffic, not post-hoc classify it — the reference's
       // fetcher only ever receives what the scheduler dispatched
-      // (scheduler.py:328-346). Selection is deterministic, so the
-      // superstep below re-derives exactly this slice internally.
+      // (scheduler.py:328-346). The superstep reuses this slice.
       val selected = Superstep
-        .selectReady(spark, frontier, budgets, projects, now, cfg)
+        .selectReady(spark, driver.frontier, driver.budgets, projects, now, cfg)
         .selected.localCheckpoint()
 
       // ---- robots refresh for hosts of the SELECTED slice (politeness-
@@ -156,13 +87,14 @@ object LiveCrawler {
       if (cfg.respectRobots) {
         val stale = hosts.filter(h =>
           robotsCache.get(h).forall(now - _._1 > robotsTtlSeconds))
+        // host -> robots.txt bytes of the probes that succeeded
+        def probe(urls: Seq[String]): Map[String, Array[Byte]] = {
+          robotsFetches += urls.size
+          fetch(spark, urls.toDF("url")).select("url", "html").collect()
+            .map(r => graft.url.UrlCanon.hostOf(r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
+        }
         if (stale.nonEmpty) {
-          robotsFetches += stale.size
-          val captured = fetch(spark,
-            stale.map(h => s"${hostSchemes(h)}://$h/robots.txt").toDF("url"))
-            .select("url", "html").collect()
-            .map(r => graft.url.UrlCanon.hostOf(r.getAs[String]("url")) ->
-              r.getAs[Array[Byte]]("html")).toMap
+          val captured = probe(stale.map(h => s"${hostSchemes(h)}://$h/robots.txt"))
           // A host with BOTH schemes in the slice whose chosen-scheme probe
           // (https, the hardened endpoint) failed must not cache allow-all
           // while the other scheme actually serves rules (ADVICE r05; RFC
@@ -172,34 +104,23 @@ object LiveCrawler {
           // TTL, tornado_fetcher.py:303-306) with no extra traffic.
           val retry = stale.filter(h => captured.getOrElse(h, null) == null &&
             hostSchemeSets.getOrElse(h, Nil).size > 1)
-          val altCaptured: Map[String, Array[Byte]] =
-            if (retry.isEmpty) Map.empty
-            else {
-              robotsFetches += retry.size
-              fetch(spark, retry.map { h =>
-                  val alt = if (hostSchemes(h) == "https") "http" else "https"
-                  s"$alt://$h/robots.txt"
-                }.toDF("url"))
-                .select("url", "html").collect()
-                .map(r => graft.url.UrlCanon.hostOf(r.getAs[String]("url")) ->
-                  r.getAs[Array[Byte]]("html")).toMap
-            }
+          val altCaptured =
+            if (retry.isEmpty) Map.empty[String, Array[Byte]]
+            else probe(retry.map { h =>
+              s"${if (hostSchemes(h) == "https") "http" else "https"}://$h/robots.txt"
+            })
           stale.foreach(h => robotsCache(h) =
             (now, Option(captured.getOrElse(h, null))
               .getOrElse(altCaptured.getOrElse(h, null))))
         }
       }
 
-      // cached robots rows in pages-table shape (the robots side of
-      // preparePages reads /robots.txt rows); scheme irrelevant — the gate
-      // joins by host
-      val ts0 = new java.sql.Timestamp(0L)
-      val robotsRows = hosts
-        .flatMap(h => robotsCache.get(h).flatMap(v => Option(v._2))
-          .map(bytes => (s"http://$h/robots.txt", ts0, bytes, "", "en",
-            200, null: String, null: String, null: String)))
-        .toDF("url", "warc_ts", "html", "text", "lang", "http_status",
-          "location", "etag", "last_modified")
+      // the cached rules of this step's hosts: they gate the fetch below and
+      // are the superstep's robots side, so no capture enters its lineage
+      val rules = hosts.flatMap(h => robotsCache.get(h).map(h -> _._2))
+        .toDF("host", "r_html")
+        .select($"host", expr("extract_text(r_html)").as("robots_txt"))
+        .localCheckpoint()
 
       // ---- compliance pre-filter: a robots-disallowed url must never be
       // GET-fetched at all — the rules are already in hand (cache above), so
@@ -213,93 +134,24 @@ object LiveCrawler {
         lower(substring($"url", 1, 5)) === "http:" ||
         lower(substring($"url", 1, 6)) === "https:")
       val fetchTargets =
-        if (cfg.respectRobots && hosts.nonEmpty) {
-          val rules = hosts.flatMap(h => robotsCache.get(h).map(h -> _._2))
-            .toDF("host", "r_html")
-            .withColumn("r_txt", expr("extract_text(r_html)")).drop("r_html")
+        if (cfg.respectRobots && hosts.nonEmpty)
           httpOnly.join(broadcast(rules), Seq("host"), "left_outer")
-            .where(call_udf("robots_can_fetch", $"r_txt", lit(cfg.userAgent),
+            .where(call_udf("robots_can_fetch", $"robots_txt", lit(cfg.userAgent),
               expr("parse_url(url, 'PATH')")))
-            .drop("r_txt")
-        } else httpOnly
+            .drop("robots_txt")
+        else httpOnly
 
-      // ---- transient pages table: live content capture of the selected,
-      // robots-allowed slice + cached robots rows. localCheckpoint BOTH
-      // outputs: the step's pages index otherwise embeds the whole
-      // capture+selection subplan into every downstream job — AQE re-renders
-      // those nested plans on each stage update (observed: minutes of driver
-      // CPU per superstep, multi-MB task binaries) — and the index is
-      // politeness-bounded per step, so materializing it once is cheap.
+      // ---- transient pages index: live content capture of the selected,
+      // robots-allowed slice, checkpointed ONCE — the one job that runs the
+      // capture, so each page is requested once per step. Without the cut
+      // the index embeds the capture+selection subplan into every
+      // downstream job, and AQE re-renders those nested plans on each stage
+      // update (observed: minutes of driver CPU per superstep).
       val content = fetch(spark, fetchTargets.select("url", "etag", "last_modified"))
-      val (pagesIdx0, robots0) =
-        Superstep.preparePages(spark, content.unionByName(robotsRows))
-      val pagesIdx = pagesIdx0.localCheckpoint()
-      val robots = robots0.localCheckpoint()
-
-      // LAZY counters: the aggregate fuses into the step's materialization
-      // action (carry checkpoint / store commit) — live mode is the mode
-      // where steps are politeness-small and per-step fixed cost dominates
-      val r = Superstep.run(spark, frontier, budgets, pagesIdx, robots,
-        projects, now, cfg.copy(collectCounters = false,
-          smallStep = stateRows < smallThreshold),
-        store.flatMap(_.seenFilter(spark)), preselected = Some(selected))
-      // first-writer-wins delta derived from each task's crawled_ok history
-      // — O(step), no anti-join against cumulative results (verdict r04
-      // item 1, same fix as Crawler.run)
-      val delta = r.firstResults
-      var counterRows: Seq[org.apache.spark.sql.Row] = Nil
-      store match {
-        case Some(s) =>
-          s.writeIncremental(spark, step, now, r.upserts, r.freshKeys,
-            r.budgets, delta, r.counters)
-          val snap = s.read(spark).get
-          frontier = snap.frontier; budgets = snap.budgets; results = snap.results
-          // per-step deltas from the committed totals (the commit collected
-          // the counters concurrently with its write jobs)
-          counterRows = snap.counterTotals.toSeq.sortBy(_._1).map { case (p, after) =>
-            val before = storeTotals.getOrElse(p, Map.empty[String, Long])
-            new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-              r.counters.schema.fieldNames.map {
-                case "project" => p: Any
-                case n => (after.getOrElse(n, 0L) - before.getOrElse(n, 0L)): Any
-              }, r.counters.schema)
-          }
-          storeTotals = snap.counterTotals
-        case None =>
-          // ONE fused materialization job for the three carry frames AND
-          // the counters aggregate, same rationale as Crawler.run
-          val (f2, b2, r2, rows, _) = Crawler.checkpointCarryFused(r.frontier,
-            r.budgets, results.unionByName(delta), Some(r.counters), None)
-          frontier = f2; budgets = b2; results = r2
-          counterRows = rows
-      }
-      var stepFresh = 0L; var stepDone = 0L; var stepFailed = 0L
-      counterRows.foreach { row =>
-        totalScheduled += row.getAs[Long]("scheduled")
-        stateRows += row.getAs[Long]("scheduled")
-        stepFresh += row.getAs[Long]("new_tasks")
-        stepDone += row.getAs[Long]("done_success")
-        stepFailed += row.getAs[Long]("failed_now")
-      }
-      totalFresh += stepFresh
-      stateRows += stepFresh
-      r.unpersistAll()
-      // release the PREVIOUS step's checkpointed RDDs (this step's outputs
-      // are all materialized above; the ids unpersisted by r.unpersistAll()
-      // are already gone from getPersistentRDDs, so the lookup skips them)
-      prevStepRdds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      // the no-store carry's three split frames share ONE checkpoint RDD
-      // (frontier's analyzed plan reaches it); store mode's frontier is a
-      // parquet view (no LogicalRDD -> not tracked, nothing to release)
-      prevStepRdds = (Seq(selected, pagesIdx, robots, frontier).flatMap(ckRddId)).toSet
-
-      // live mode has no global pages table to drain: stop when no
-      // schedulable ACTIVE task remains (backoff'd retries keep the crawl
-      // ticking, same contract as Crawler) — tracked arithmetically from
-      // the step's own status deltas, never a frontier scan
-      activeRemaining += stepFresh - (stepDone + stepFailed)
-      done = activeRemaining == 0
+      val pagesIdx = Superstep.preparePages(spark, content)._1.localCheckpoint()
+      driver.step(pagesIdx, rules, cfg, preselected = Some(selected),
+        checkpoints = Seq(selected, pagesIdx, rules))
     }
-    LiveRun(step, frontier, results, totalScheduled, totalFresh, robotsFetches)
+    driver.result(robotsFetches)
   }
 }

@@ -295,11 +295,11 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
         // every commit — two materialized exchanges of pure fixed cost at
         // politeness-small step sizes (same rationale as
         // Superstep.Config.smallStep; threshold shared)
-        val smallThreshold = spark.conf.getOption("spark.graft.smallStepBroadcastRows")
-          .map(_.toLong).getOrElse(100000L)
         val upRows = incStats.collect { case ((0, _), n) => n }.sum
         val upKeys0 = up.select(keyCols.map(col): _*)
-        val upKeys = if (!full && upRows < smallThreshold) broadcast(upKeys0) else upKeys0
+        val upKeys =
+          if (!full && upRows < graft.sched.StepDriver.SmallStepRows) broadcast(upKeys0)
+          else upKeys0
         val merged0 = oldTouched match {
           case None => up
           case Some(old) =>

@@ -3,15 +3,16 @@ package graft.sched
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.frontier.{FrontierStore, SnapshotStore}
+import graft.frontier.SnapshotStore
 import graft.model.TaskStatus
 
 /**
- * Superstep crawl driver: seeds -> frontier generations -> checkpointed
- * snapshots, resumable (SURVEY §3.2 resume contract: state = frontier table
- * + politeness tokens, both persisted; a resumed run continues the exact
- * deterministic schedule because `now` advances as now0 + step*tick, never
- * wall clock).
+ * Batch crawl loop: seeds -> frontier generations -> checkpointed
+ * snapshots over a pages table prepared once, resumable (SURVEY §3.2 resume
+ * contract: state = frontier table + politeness tokens, both persisted).
+ * The per-step bookkeeping shared with the live and streaming loops lives
+ * in [[StepDriver]]; this object also holds the seed-frontier and
+ * fused-carry helpers every loop uses.
  */
 object Crawler {
 
@@ -47,7 +48,9 @@ object Crawler {
         * + scheduler.py:135-137) */
       counterTotals: Map[String, Map[String, Long]] = Map.empty,
       /** wall seconds per superstep of THIS run (bench attribution) */
-      stepSeconds: Seq[Double] = Nil)
+      stepSeconds: Seq[Double] = Nil,
+      /** robots.txt GETs actually issued (cache misses) by a live crawl */
+      robotsFetches: Long = 0L)
 
   val resultSchema: StructType = StructType(Seq(
     StructField("project", StringType), StructField("url_hash", LongType),
@@ -101,26 +104,9 @@ object Crawler {
     (f2, b2, r2)
   }
 
-  /** [[checkpointCarry]] with optional extra legs fused into the SAME
-    * one-job materialization (guide §1.2: at small step sizes every extra
-    * action is a full round of driver planning + AQE stage waves — measured
-    * ~20 stage-jobs for the counters action alone):
-    *  - `counters` (tag 3): the step's LAZY counters aggregate
-    *    (Superstep.Config.collectCounters=false) rides the checkpoint as
-    *    (project, CSV-of-numeric-fields in the r_type slot); the returned
-    *    Rows are recovered with a narrow filter-collect over the already-
-    *    cached checkpoint RDD — values identical to the eager collect (same
-    *    aggregate plan, same input), only the action count changes.
-    *  - `packed` (tag 4): a (step,url,status,retried,exetime) projection
-    *    (p7's per-step trajectory rows); `step` travels in the priority
-    *    slot. Returned conformed back to its input schema. */
-  /** The tagged-union plan the fused carry materializes (exposed for the
+  /** The tagged-union plan the fused carry materializes (also read by the
     * PlanDump dev harness — plan-shape inspection without running it). */
-  private[graft] def carryUnionForDump(frontier: DataFrame, budgets: DataFrame,
-      results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame]): DataFrame =
-    carryUnion(frontier, budgets, results, counters, packed)
-
-  private def carryUnion(frontier: DataFrame, budgets: DataFrame,
+  private[graft] def carryUnion(frontier: DataFrame, budgets: DataFrame,
       results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame]): DataFrame = {
     val fc = Superstep.frontierCols
     val fSchema = graft.frontier.FrontierStore.frontierSchema
@@ -140,13 +126,13 @@ object Crawler {
     }) ++ Seq(nul("double", "b_tokens"), nul("double", "b_last_update"),
       col("type").as("r_type"), col("data").as("r_data")): _*)
     val cPart = counters.map { cdf =>
-      val names = cdf.schema.fieldNames.filter(_ != "project").toSeq
-      val csv = concat_ws(",", names.map(n => col(n).cast("string")): _*)
+      val byName = map(cdf.schema.fieldNames.filter(_ != "project").toSeq.flatMap(n =>
+        Seq(lit(n), coalesce(col(n).cast("string"), lit("0")))): _*)
       cdf.select((lit(3).as("tag") +: fc.map {
         case "project" => col("project")
         case other => fnull(other)
       }) ++ Seq(nul("double", "b_tokens"), nul("double", "b_last_update"),
-        csv.as("r_type"), nul("map<string,string>", "r_data")): _*)
+        nul("string", "r_type"), byName.cast("map<string,string>").as("r_data")): _*)
     }
     val pPart = packed.map { pdf =>
       pdf.select((lit(4).as("tag") +: fc.map {
@@ -159,6 +145,20 @@ object Crawler {
     (Seq(fPart, bPart, rPart) ++ cPart ++ pPart).reduce(_ unionByName _)
   }
 
+  /** [[checkpointCarry]] with optional extra legs fused into the SAME
+    * one-job materialization (guide §1.2: at small step sizes every extra
+    * action is a full round of driver planning + AQE stage waves — measured
+    * ~20 stage-jobs for the counters action alone):
+    *  - `counters` (tag 3): the step's LAZY counters aggregate
+    *    (Superstep.Config.collectCounters=false) rides the checkpoint as
+    *    (project, counter name -> value in the r_data map slot); the
+    *    returned Rows are recovered by name with a narrow filter-collect
+    *    over the already-cached checkpoint RDD — values identical to the
+    *    eager collect (same aggregate plan, same input), only the action
+    *    count changes. A null sum travels as 0.
+    *  - `packed` (tag 4): a (step,url,status,retried,exetime) projection
+    *    (p7's per-step trajectory rows); `step` travels in the priority
+    *    slot. Returned conformed back to its input schema. */
   private[graft] def checkpointCarryFused(frontier: DataFrame, budgets: DataFrame,
       results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame])
       : (DataFrame, DataFrame, DataFrame,
@@ -200,13 +200,14 @@ object Crawler {
       case None => Nil
       case Some(cdf) =>
         val schema = cdf.schema
-        val names = schema.fieldNames.filter(_ != "project").toSeq
-        ck.where($"tag" === 3).select($"project", $"r_type").collect().toIndexedSeq.map { r =>
-          val vals = r.getString(1).split(",", -1).map(_.toLong)
+        ck.where($"tag" === 3).select($"project", $"r_data").collect().toIndexedSeq.map { r =>
+          val byName = r.getMap[String, String](1)
           new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
             schema.fieldNames.map {
               case "project" => r.getString(0): Any
-              case n => vals(names.indexOf(n)): Any
+              case n =>
+                require(byName.contains(n), s"counter '$n' missing from the carry checkpoint")
+                byName(n).toLong: Any
             }, schema)
         }
     }
@@ -229,7 +230,7 @@ object Crawler {
       StructType(Seq(StructField("project", StringType))))
 
   /**
-   * Run (or resume) a crawl.
+   * Run (or resume) a crawl over a prepared pages table.
    *
    * @param store   optional snapshot store; None = in-memory with
    *                localCheckpoint lineage truncation (benchmarks)
@@ -237,179 +238,19 @@ object Crawler {
   def run(spark: SparkSession, pages: DataFrame, projects: DataFrame,
       seeds: Seq[(String, String)], cfg: CrawlConfig,
       store: Option[SnapshotStore] = None): CrawlRun = {
-
     val (pagesIdx, robots) = Superstep.preparePages(spark, pages)
     pagesIdx.persist(cfg.pagesStorage)
     robots.persist()
     // size-gate the robots broadcast ONCE per crawl (robots is persisted, the
     // count is one cheap scan): at web scale (one row per host) an
     // unconditional broadcast would OOM the driver/executors
-    val robotsHosts = robots.count()
     val stepCfg = cfg.step.copy(broadcastRobots =
-      cfg.step.broadcastRobots && robotsHosts <= cfg.broadcastRobotsMaxHosts)
-
-    // resume or init. With a store, the seed frontier is committed as
-    // snapshot 1 (bootstrap) so the seen-index covers seeds and a killed
-    // run resumes from exactly the committed state.
-    store.foreach { s =>
-      if (s.currentId.isEmpty) {
-        val sf = seedFrontier(spark, seeds, cfg.now0)
-        s.writeIncremental(spark, 0, cfg.now0, sf,
-          sf.select("project", "url_hash"), emptyBudgets(spark),
-          emptyResults(spark), emptyCounters(spark))
-      }
-    }
-    val resumed = store.flatMap(_.read(spark))
-    var stepNo = resumed.map(_.step).getOrElse(0)
-    var frontier = resumed.map(_.frontier)
-      .getOrElse(seedFrontier(spark, seeds, cfg.now0).localCheckpoint())
-    var budgets = resumed.map(_.budgets).getOrElse(emptyBudgets(spark))
-    var results = resumed.map(_.results).getOrElse(emptyResults(spark))
-
-    var totalScheduled = 0L
-    var totalFresh = 0L
-    val counters = Seq.newBuilder[DataFrame]
-    var done = false // set from activeRemaining after the init scan below
-    // exact remaining-ACTIVE count: one scan at start/resume, then pure
-    // arithmetic from the per-step status deltas (fresh inserts are ACTIVE;
-    // terminal transitions are SUCCESS/FAILED). "Nothing dispatched this
-    // tick" is NOT emptiness — retry backoff (exetime in the future) and
-    // sub-1-token politeness refills legitimately schedule 0 while ACTIVE
-    // tasks remain, and the crawl must keep ticking.
-    // per-project ACTIVE counts: one scan at start/resume, then arithmetic
-    // from the per-project counter rows; a project draining to zero is
-    // FINISHED (on_finished)
-    val activeByProject = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    frontier.where(col("status") === TaskStatus.Active)
-      .groupBy("project").count().collect()
-      .foreach(r => activeByProject(r.getString(0)) = r.getLong(1))
-    // termination counts ACTIVE tasks only over RUNNING (schedulable)
-    // projects — a STOP/FINISHED project's parked tasks must not keep the
-    // loop burning empty supersteps (the lifecycle gate never selects them)
-    val runningSet: Set[String] =
-      (if (projects.columns.contains("status"))
-        projects.where(coalesce(col("status"), lit("RUNNING")) === "RUNNING")
-      else projects).select("name").collect().map(_.getString(0)).toSet
-    var activeRemaining =
-      activeByProject.collect { case (p, n) if runningSet(p) => n }.sum
-    // nothing schedulable at all (every project STOP/FINISHED/drained):
-    // don't burn a single empty superstep
-    done = activeRemaining == 0
-    val finished = Seq.newBuilder[String]
-    // cumulative counter totals: resume from the snapshot's persisted totals
-    // (counter reload semantics), then fold each step's counter rows
-    val totals = scala.collection.mutable.Map.empty[String, Map[String, Long]]
-    resumed.foreach(_.counterTotals.foreach { case (p, m) => totals(p) = m })
-
-    val stepSecs = Seq.newBuilder[Double]
-    // small-step broadcast gate (Superstep.Config.smallStep): an UPPER BOUND
-    // on the rows of state a superstep's broadcast-hinted build sides can
-    // contain — frontier rows (seeds + cumulative fresh) plus budget-state
-    // rows (bounded by cumulative scheduled: only consuming hosts get state
-    // rows). Tracked arithmetically, never a job; scale-adaptive: a crawl
-    // that outgrows the threshold switches itself back to shuffle plans.
-    val smallThreshold = spark.conf.getOption("spark.graft.smallStepBroadcastRows")
-      .map(_.toLong).getOrElse(100000L)
-    // a resumed snapshot with UNKNOWN row count (-1, e.g. a SnapshotStore
-    // implementation without lineage counts) must disable the small plan,
-    // not enable it
-    var stateRows: Long = (resumed match {
-      case Some(s) if s.frontierRows >= 0 => s.frontierRows
-      case Some(_) => Long.MaxValue / 2
-      case None => seeds.size.toLong
-    }) + totals.values.map(_.getOrElse("scheduled", 0L)).sum
-    // both branches run the superstep with LAZY counters
-    // (Config.collectCounters=false): the counters aggregate is fused into
-    // the step's one materialization action (the carry checkpoint / the
-    // store commit) instead of costing its own full round of driver
-    // planning + ~20 AQE stage-jobs per step (guide §1.2)
-    val lazyCfg = stepCfg.copy(collectCounters = false)
-    while (!done && stepNo < cfg.maxSteps) {
-      val tStep = System.nanoTime()
-      val now = cfg.now0 + (stepNo + 1) * cfg.tick
-      // with a store, the URL-seen probe is the bucketed bloom side-file
-      // index (partition-local, no driver round-trip); without, the exact
-      // anti-join runs against the in-memory frontier keys
-      val seenF = store.flatMap(_.seenFilter(spark))
-      val r = Superstep.run(spark, frontier, budgets, pagesIdx, robots, projects,
-        now, lazyCfg.copy(smallStep = stateRows < smallThreshold), seenF)
-
-      // first-writer-wins upsert by url_hash (REPLACE INTO + one-crawl-per-url,
-      // resultdb.py:52-66): the superstep derives the delta from each task's
-      // own crawled_ok history — O(step) per step, never a scan/anti-join of
-      // the cumulative results table (verdict r04 item 1)
-      val newResultsDelta = r.firstResults
-
-      stepNo += 1
-      // this step's per-project counter rows, recovered from whichever
-      // action materialized the step (carry checkpoint / store manifest)
-      var counterRows: Seq[org.apache.spark.sql.Row] = Nil
-      store match {
-        case Some(s) =>
-          s.writeIncremental(spark, stepNo, now, r.upserts, r.freshKeys,
-            r.budgets, newResultsDelta, r.counters)
-          val snap = s.read(spark).get
-          frontier = snap.frontier; budgets = snap.budgets; results = snap.results
-          // per-step deltas = committed totals minus the running totals —
-          // the store's commit already folded this step's counters into the
-          // manifest (collected concurrently with the write jobs), so no
-          // separate counters action runs
-          val cSchema = r.counters.schema
-          counterRows = snap.counterTotals.toSeq.sortBy(_._1).flatMap { case (p, after) =>
-            val before = totals.getOrElse(p, Map.empty[String, Long])
-            val delta = cSchema.fieldNames.map {
-              case "project" => p: Any
-              case n => (after.getOrElse(n, 0L) - before.getOrElse(n, 0L)): Any
-            }
-            if (delta.exists { case l: Long => l != 0L; case _ => false })
-              Some(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-                delta, cSchema))
-            else None
-          }
-        case None =>
-          // ONE fused materialization job for the three carry frames AND the
-          // counters aggregate (see checkpointCarryFused) — the old shape
-          // paid a separate counters-collect action (a full plan + ~20 AQE
-          // stage waves) on top of the carry job every step
-          val (f2, b2, r2, rows, _) = checkpointCarryFused(r.frontier, r.budgets,
-            results.unionByName(newResultsDelta), Some(r.counters), None)
-          frontier = f2; budgets = b2; results = r2
-          counterRows = rows
-      }
-      val countersLocal = spark.createDataFrame(
-        java.util.Arrays.asList(counterRows: _*), r.counters.schema)
-      counters += countersLocal.withColumn("step", lit(stepNo))
-
-      // per-project lifecycle: apply this step's status deltas; a project
-      // whose ACTIVE set just drained is FINISHED
-      var stepScheduled = 0L; var stepFresh = 0L; var stepDone = 0L; var stepFailed = 0L
-      counterRows.foreach { row =>
-        val p = row.getAs[String]("project")
-        val before = activeByProject(p)
-        val after = before + row.getAs[Long]("new_tasks") -
-          (row.getAs[Long]("done_success") + row.getAs[Long]("failed_now"))
-        activeByProject(p) = after
-        if (before > 0 && after == 0) finished += p
-        totals(p) = FrontierStore.foldCounterRowOne(totals.getOrElse(p, Map.empty), row)
-        stepScheduled += row.getAs[Long]("scheduled")
-        stepFresh += row.getAs[Long]("new_tasks")
-        stepDone += row.getAs[Long]("done_success")
-        stepFailed += row.getAs[Long]("failed_now")
-      }
-      totalScheduled += stepScheduled
-      totalFresh += stepFresh
-      stateRows += stepFresh + stepScheduled
-      r.unpersistAll()
-      // terminate only when no ACTIVE task remains anywhere — scheduled==0
-      // alone can be a backoff/politeness lull, not emptiness
-      activeRemaining += stepFresh - (stepDone + stepFailed)
-      done = activeRemaining == 0
-      stepSecs += (System.nanoTime() - tStep) / 1e9
-    }
-
+      cfg.step.broadcastRobots && robots.count() <= cfg.broadcastRobotsMaxHosts)
+    val driver = new StepDriver(spark, projects, store, cfg.now0, cfg.tick, seeds,
+      terminates = true)
+    while (!driver.done && driver.steps < cfg.maxSteps) driver.step(pagesIdx, robots, stepCfg)
     pagesIdx.unpersist(false)
     robots.unpersist(false)
-    CrawlRun(stepNo, totalScheduled, totalFresh, frontier, results, counters.result(),
-      finished.result(), totals.toMap, stepSecs.result())
+    driver.result()
   }
 }

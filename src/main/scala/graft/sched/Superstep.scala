@@ -52,9 +52,10 @@ object Superstep {
         * re-optimization round) even when the runtime converts the join to
         * broadcast — measured ~25 stage-jobs per fixture superstep, ~40-90 ms
         * of driver fixed cost each. Join strategy never changes results;
-        * only plan shape and stage count change. Crawl loops derive this
-        * per step from their exact arithmetic state counts (scale-adaptive:
-        * a growing crawl switches itself back to shuffle plans), so the
+        * only plan shape and stage count change. [[StepDriver]] derives
+        * this per step from the state's row count against
+        * `StepDriver.SmallStepRows` (scale-adaptive: a growing crawl
+        * switches itself back to shuffle plans), so the
         * politeness-small live regime — the deployment mode where per-step
         * fixed cost dominates (VERDICT r05) — gets the small plan at any
         * corpus scale. */
@@ -323,6 +324,13 @@ object Superstep {
   final case class Selection(selected: DataFrame, budgeted: DataFrame,
       projRB: DataFrame)
 
+  /** The projects the lifecycle gate schedules: status RUNNING, or no
+    * status column at all. */
+  private[graft] def runningProjects(projects: DataFrame): DataFrame =
+    if (projects.columns.contains("status"))
+      projects.where(coalesce(col("status"), lit("RUNNING")) === "RUNNING")
+    else projects
+
   /**
    * W2 ready filter → A7 politeness budget → W1 ranked selection → W5 fair
    * share, factored out of [[run]] so a live-fetch deployment can compute
@@ -333,18 +341,11 @@ object Superstep {
    * (frontier, budgets, projects, now, cfg) — a caller that pre-computes the
    * slice and then runs [[run]] sees the identical selection inside it.
    */
-  /** A/B kill-switch for the small-step broadcast plan (diagnosis +
-    * before/after plan dumps): SPARK_GRAFT_SMALL_STEP=0 disables the hints
-    * everywhere regardless of caller gating. */
-  private[graft] val smallStepEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_STEP", "1") != "0"
-  private def smallOn(cfg: Config): Boolean = cfg.smallStep && smallStepEnabled
-
   def selectReady(spark: SparkSession, frontier: DataFrame, budgets: DataFrame,
       projects: DataFrame, now: Double, cfg: Config = Config()): Selection = {
     import spark.implicits._
     // Config.smallStep: plan-time broadcast of state-bounded build sides
-    def maybeB(df: DataFrame): DataFrame = if (smallOn(cfg)) broadcast(df) else df
+    def maybeB(df: DataFrame): DataFrame = if (cfg.smallStep) broadcast(df) else df
 
     // ---- W2: ready = exetime arrived (time queue folds into the filter).
     // Project lifecycle gate (scheduler.py:637-649 + F2): only tasks of
@@ -357,15 +358,9 @@ object Superstep {
     // row set — after the semi join every surviving project was in projRB
     // anyway, so inner ≡ semi + outer (guide §2.4: fewer operators, same
     // result; a broadcast build is its own job at superstep cadence).
-    val projGate = broadcast({
-      val base =
-        if (projects.columns.contains("status"))
-          projects.where(coalesce($"status", lit("RUNNING")) === "RUNNING")
-        else projects
-      base.select($"name".as("project"),
-        coalesce($"rate", lit(cfg.defaultRate)).as("p_rate"),
-        coalesce($"burst", lit(cfg.defaultBurst)).as("p_burst"))
-    })
+    val projGate = broadcast(runningProjects(projects).select($"name".as("project"),
+      coalesce($"rate", lit(cfg.defaultRate)).as("p_rate"),
+      coalesce($"burst", lit(cfg.defaultBurst)).as("p_burst")))
     val ready = frontier
       .where($"status" === TaskStatus.Active && $"exetime" <= RuntimeConst.stepConst(now))
       .join(projGate, Seq("project"), "inner")
@@ -471,7 +466,7 @@ object Superstep {
       preselected: Option[DataFrame] = None): StepResult = {
     import spark.implicits._
     // Config.smallStep: plan-time broadcast of state-bounded build sides
-    def maybeB(df: DataFrame): DataFrame = if (smallOn(cfg)) broadcast(df) else df
+    def maybeB(df: DataFrame): DataFrame = if (cfg.smallStep) broadcast(df) else df
 
     val sel = selectReady(spark, frontier, budgets, projects, now, cfg)
     val selected = preselected.getOrElse(sel.selected)
@@ -600,7 +595,7 @@ object Superstep {
         candidates.join(
           maybeB(frontier.select($"project", $"url_hash").withColumn("f_seen", lit(true))),
           Seq("project", "url_hash"), "left_outer")
-      case Some(sf) if smallOn(cfg) && sf.deltaChain.map(_._2.size).sum <= 64 =>
+      case Some(sf) if cfg.smallStep && sf.deltaChain.map(_._2.size).sum <= 64 =>
         // small-chain fast path: the whole committed key set spans at most
         // a few dozen tiny delta files (known from the manifest lineage,
         // zero IO) — probing blooms first would cost a collect job (the

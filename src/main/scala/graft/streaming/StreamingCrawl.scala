@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.frontier.{FrontierStore, SnapshotStore}
-import graft.sched.{Crawler, Superstep}
+import graft.frontier.SnapshotStore
+import graft.sched.{Crawler, StepDriver, Superstep}
 
 /**
  * Continuous-mode wrapper (SURVEY §2.10): the reference is a long-running
@@ -38,84 +38,47 @@ object StreamingCrawl {
     val (pagesIdx, robots) = Superstep.preparePages(spark, pages)
     pagesIdx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     robots.persist()
+    // resumes whatever the store holds; after each commit it reads the new
+    // snapshot back, so a batch starts from the last committed state
+    val driver = new StepDriver(spark, projects, Some(store), now0, tickSeconds, Nil,
+      terminates = false)
 
     val writer = seedStream.writeStream
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val snap = store.read(spark)
-        val step = snap.map(_.step).getOrElse(0)
-        val now = now0 + (step + 1) * tickSeconds
-        var frontier = snap.map(_.frontier)
-          .getOrElse(Crawler.seedFrontier(spark, Seq.empty, now0))
-        val budgets = snap.map(_.budgets).getOrElse(Crawler.emptyBudgets(spark))
-
         // merge newly arrived seeds with full on_request semantics (J1/F5/F6:
         // unknown -> insert; known + force_update/itag/age -> restart). The
         // seeds stay a DataFrame end-to-end (no driver collect), and every
         // frontier-side operation is a scan probed by the BROADCAST seed
         // keys — a micro-batch never shuffles or full-outer-joins the
         // frontier: the on_request merge itself runs over only the frontier
-        // rows whose keys appear in the batch.
+        // rows whose keys appear in the batch. Empty batches (pure superstep
+        // ticks) skip the seed joins outright.
         val keys = Seq("project", "url_hash")
-        var seedUpserts = frontier.limit(0)
-        var seedFreshKeys = frontier.select(keys.map(functions.col): _*).limit(0)
-        var extraSeen: Option[DataFrame] = None
-        val batchEmpty = batch.isEmpty
-        if (!batchEmpty) {
+        val merge = if (batch.isEmpty) None else {
+          val now = driver.nextNow
           val seedRows = Crawler.seedFrontierDf(spark,
             batch.selectExpr("project", "url as raw_url"), now).localCheckpoint()
           val incKeys = seedRows.select(keys.map(functions.col): _*)
-          val existing = frontier.join(broadcast(incKeys), keys, "left_semi")
-          val mergedSeed = Superstep.mergeIncoming(existing, seedRows, now)
-            .localCheckpoint()
-          seedUpserts = mergedSeed
-          seedFreshKeys = incKeys.join(
-            broadcast(existing.select(keys.map(functions.col): _*)), keys, "left_anti")
-          frontier = frontier.join(broadcast(incKeys), keys, "left_anti")
-            .unionByName(mergedSeed)
-          // this batch's seed keys postdate the snapshot seen-index — the
-          // superstep treats them as seen via a broadcast overlay
-          extraSeen = Some(incKeys)
+          val existing = driver.frontier.join(broadcast(incKeys), keys, "left_semi")
+          val mergedSeed = Superstep.mergeIncoming(existing, seedRows, now).localCheckpoint()
+          Some(StepDriver.SeedMerge(
+            frontier = driver.frontier.join(broadcast(incKeys), keys, "left_anti")
+              .unionByName(mergedSeed),
+            upserts = mergedSeed,
+            freshKeys = incKeys.join(
+              broadcast(existing.select(keys.map(functions.col): _*)), keys, "left_anti"),
+            // this batch's seed keys postdate the snapshot seen-index
+            seen = incKeys))
         }
-
         // J1 probes the snapshot's bucketed bloom side-file index (+ the
         // in-batch seed overlay) — never an exact join against the full
         // frontier key set per micro-batch
-        // LAZY counters: the aggregate collects on the store commit's
-        // concurrent future (FrontierStore.writeIncremental) instead of its
-        // own serial action per micro-batch. Small-step broadcast gate from
-        // the snapshot's lineage row count (every hinted build side is
-        // bounded by frontier+budget state, not by the seed batch size).
-        val smallThreshold = spark.conf.getOption("spark.graft.smallStepBroadcastRows")
-          .map(_.toLong).getOrElse(100000L)
-        // unknown row count (-1) disables the small plan (see Crawler)
-        val stateRows = (snap match {
-          case Some(s) if s.frontierRows >= 0 => s.frontierRows
-          case Some(_) => Long.MaxValue / 2
-          case None => 0L
-        }) + snap.map(_.counterTotals.values.map(_.getOrElse("scheduled", 0L)).sum)
-          .getOrElse(0L)
-        val r = Superstep.run(spark, frontier, budgets, pagesIdx, robots,
-          projects, now, cfg.copy(collectCounters = false,
-            smallStep = stateRows < smallThreshold),
-          store.seenFilter(spark), extraSeen)
-        // first-writer-wins delta from each task's crawled_ok history —
-        // O(batch), no anti-join against the snapshot's cumulative results
-        val newResultsDelta = r.firstResults
-        // superstep upserts win over seed upserts when the same task was
-        // both merged and selected this tick. Empty batches (pure superstep
-        // ticks) skip the seed-union joins outright — an anti-join against a
-        // limit(0) side still plans and executes two exchanges per commit.
-        val upserts =
-          if (batchEmpty) r.upserts
-          else r.upserts.unionByName(
-            seedUpserts.join(r.upserts.select(keys.map(functions.col): _*), keys, "left_anti"))
-        val freshKeys =
-          if (batchEmpty) r.freshKeys else r.freshKeys.unionByName(seedFreshKeys)
-        store.writeIncremental(spark, step + 1, now, upserts, freshKeys,
-          r.budgets, newResultsDelta, r.counters)
-        r.unpersistAll()
+        // the batch's checkpoints: the merged seeds, and the seed rows
+        // under their keys
+        driver.step(pagesIdx, robots, cfg, seedMerge = merge,
+          checkpoints = merge.toSeq.flatMap(m => Seq(m.upserts, m.seen)))
       }
 
     queryCheckpointDir.foreach(d => writer.option("checkpointLocation", d))

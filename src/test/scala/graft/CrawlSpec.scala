@@ -226,6 +226,60 @@ class CrawlSpec extends AnyFunSuite {
         java.nio.file.Paths.get(dir, f"snap-${store.currentId.get}%06d", "blooms"))
       .count()
     assert(blooms > 0)
+
+    // the live loop over the same pages (a fixture fetch serving the table)
+    // agrees with the batch loop, with and without a store
+    def fixtureFetch(s: org.apache.spark.sql.SparkSession, urls: DataFrame): DataFrame =
+      pages.join(urls.select(expr("canonicalize_url(url)").as("want")),
+        expr("canonicalize_url(url)") === $"want", "left_semi")
+    val liveDir = java.nio.file.Files.createTempDirectory("graft-seen-live").toString
+    val liveExact = graft.fetch.LiveCrawler.run(spark, projects, seeds, maxSteps = 4,
+      now0 = now0, fetch = fixtureFetch)
+    val liveStored = graft.fetch.LiveCrawler.run(spark, projects, seeds, maxSteps = 4,
+      now0 = now0, fetch = fixtureFetch, store = Some(new FrontierStore(liveDir, 8,
+        seenBuckets = 16, bloomItemsPerBucket = 4096)))
+    def rows(df: DataFrame) = df.orderBy("project", "url_hash").collect().toSeq
+    for ((name, run) <- Seq("stored" -> stored, "live" -> liveExact,
+        "live+store" -> liveStored)) {
+      assert(rows(run.frontier.select(Superstep.frontierCols.map(col): _*)) ==
+        rows(exact.frontier.select(Superstep.frontierCols.map(col): _*)), s"$name frontier")
+      assert(rows(run.results) == rows(exact.results), s"$name results")
+      assert(run.counterTotals == exact.counterTotals, s"$name counter totals")
+      assert(run.finishedProjects == exact.finishedProjects, s"$name finished projects")
+    }
+    assert(exact.counterTotals("p1")("scheduled") == exact.totalScheduled)
+
+    // a no-store crawl releases each step's carry checkpoint one step late:
+    // six steps end holding no more persisted RDDs than two
+    def persistedBy(steps: Int): (Int, Crawler.CrawlRun) = {
+      val mark = spark.sparkContext.emptyRDD[Int].id
+      val run = Crawler.run(spark, pages, projects, seeds,
+        Crawler.CrawlConfig(maxSteps = steps, now0 = now0))
+      (spark.sparkContext.getPersistentRDDs.keys.count(_ > mark), run)
+    }
+    // strong references to every RDD persisted meanwhile: only an explicit
+    // unpersist, not a driver GC, takes one out of the count
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val hold = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        spark.sparkContext.getPersistentRDDs.values.foreach(held.add)
+    }
+    spark.sparkContext.addSparkListener(hold)
+    val ((two, run2), (six, run6)) =
+      try (persistedBy(2), persistedBy(6))
+      finally spark.sparkContext.removeSparkListener(hold)
+    assert(run2.steps == 2 && run6.steps == 6)
+    assert(six <= two, s"6 steps left $six persisted RDDs, 2 steps left $two")
+  }
+
+  test("fused carry: counters travel keyed by name; a null counter reads back as 0") {
+    val counters = Seq(("p1", Some(3L), Option.empty[Long], Some(7L)))
+      .toDF("project", "a", "b", "c")
+    val (_, _, _, rows, _) = Crawler.checkpointCarryFused(
+      mkFrontier(Seq(("x", 1L, 0, 0.0))), Crawler.emptyBudgets(spark),
+      Crawler.emptyResults(spark), Some(counters), None)
+    assert(rows.map(r => (r.getAs[String]("project"), r.getAs[Long]("a"),
+      r.getAs[Long]("b"), r.getAs[Long]("c"))) == Seq(("p1", 3L, 0L, 7L)))
   }
 
   test("F4 INQUEUE_LIMIT caps admitted new tasks per project") {

@@ -171,6 +171,23 @@ class LiveFetchSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("LiveCrawler: each selected page is requested once per step") {
+    val (server, base, seen) = fixtureServer()
+    try {
+      val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
+      // step 1 selects /start, step 2 /next, /redir and the robots-denied
+      // /private, step 3 nothing (the /private retry backs off 30 s): each
+      // page is selected in exactly one step, so each is requested once
+      val run = graft.fetch.LiveCrawler.run(spark, projects,
+        Seq("p1" -> s"$base/start"), maxSteps = 3)
+      assert(run.steps == 3)
+      val perPath = seen.toArray.map(_.toString.takeWhile(_ != ' ')).toSeq
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+      assert(perPath == Map("/robots.txt" -> 1, "/start" -> 1, "/next" -> 1, "/redir" -> 1),
+        s"requests per path: $perPath")
+    } finally server.stop(0)
+  }
+
   test("live 304 echoes the STORED validators: a weak-form server echo (W/\"v1\") must not break the not_modified compare") {
     val (server, base, _) = fixtureServer()
     // nginx-with-gzip behavior: 304 answers carry the WEAK form of the etag
