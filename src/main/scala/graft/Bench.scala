@@ -310,8 +310,7 @@ object Bench {
       var bestStoreRate = -1.0
       (1 to storeRounds).foreach { _ =>
         val dir = Udfs.scratchDir("graft-bench-store")
-        val store = new graft.frontier.FrontierStore(dir.toString, 32,
-          seenBuckets = 32, bloomItemsPerBucket = 1 << 20)
+        val store = new graft.frontier.FrontierStore(dir.toString, 32, seenBuckets = 32)
         val (st, sec) = time(crawlBench(spark, Some(store)))
         val urls = st._1 + st._2
         val rate = urls / sec
@@ -355,8 +354,7 @@ object Bench {
         // scaling_store's near-identical step walls at local[8] and
         // local[32] (divide it out of step_sec_* to see the executor slice)
         val dir2 = Udfs.scratchDir("graft-bench-storefloor")
-        val store2 = new graft.frontier.FrontierStore(dir2.toString, 32,
-          seenBuckets = 32, bloomItemsPerBucket = 1 << 20)
+        val store2 = new graft.frontier.FrontierStore(dir2.toString, 32, seenBuckets = 32)
         val run2 = Crawler.run(spark, tinyPages, tinyProjects,
           Seq("tiny" -> "http://host1.example.com/page/1"),
           Crawler.CrawlConfig(maxSteps = 3), Some(store2))
@@ -390,7 +388,7 @@ object Bench {
         ).flatMap(m => Seq("--add-opens", s"$m=ALL-UNNAMED"))
         // fixed pre-touched heap: an elastic heap makes the kernel zero pages
         // inside the measurement (observed 35-87% SYSTEM cpu at 32 threads)
-        val xmx = sys.env.getOrElse("SPARK_GRAFT_SCALE_MEM", "16g")
+        val xmx = sys.env.getOrElse("SPARK_GRAFT_SCALE_MEM", Udfs.halfRamHeap)
         val cmd = Seq(javaBin) ++ opens ++ Seq(
           s"-Xms$xmx", s"-Xmx$xmx", "-XX:+AlwaysPreTouch",
           "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
@@ -505,8 +503,7 @@ object Bench {
       val projects = Seq(("life", 4.0, 4.0)).toDF("name", "rate", "burst")
       val seeds = (0 until cfg.nHosts).map(h => "life" -> s"http://host$h.example.com/page/1")
       val dir = Udfs.scratchDir("graft-bench-life")
-      val store = new graft.frontier.FrontierStore(dir.toString, 32,
-        seenBuckets = 32, bloomItemsPerBucket = 1 << 20)
+      val store = new graft.frontier.FrontierStore(dir.toString, 32, seenBuckets = 32)
       val run = Crawler.run(spark, pages, projects, seeds,
         Crawler.CrawlConfig(maxSteps = lifeSteps), Some(store))
       pages.unpersist()

@@ -36,7 +36,7 @@ object BenchExtra {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).flatMap(m => Seq("--add-opens", s"$m=ALL-UNNAMED"))
-    val xmx = sys.env.getOrElse("SPARK_GRAFT_SCALE_MEM", "16g")
+    val xmx = sys.env.getOrElse("SPARK_GRAFT_SCALE_MEM", Udfs.halfRamHeap)
     val cmd = Seq(javaBin) ++ opens ++ Seq(
       s"-Xms$xmx", s"-Xmx$xmx", "-XX:+AlwaysPreTouch",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",

@@ -34,8 +34,7 @@ object ScalingRun {
     import spark.implicits._
     val projects = Seq(("bench", 1e9, 1e9)).toDF("name", "rate", "burst")
     val dir = graft.Udfs.scratchDir("graft-scale-store")
-    val store = new graft.frontier.FrontierStore(dir.toString, 32,
-      seenBuckets = 32, bloomItemsPerBucket = 1 << 20)
+    val store = new graft.frontier.FrontierStore(dir.toString, 32, seenBuckets = 32)
     val t0 = System.nanoTime()
     val run = graft.sched.Crawler.run(spark, pages, projects, seeds,
       graft.sched.Crawler.CrawlConfig(maxSteps = steps), Some(store))
@@ -150,13 +149,12 @@ object ScalingRun {
       println(f"RATE ${n / best}%.0f")
       return
     }
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_MULT", "1").toInt
     // a real N-vs-4N comparison holds the JOB configuration fixed and varies
     // only the compute: shuffle partitioning is part of the job, so the
     // store pair pins it (default 32) at both levels instead of tying it to
     // the thread count
     val shuf = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
-      .getOrElse(if (job == "store") 32 else p * mult)
+      .getOrElse(if (job == "store") 32 else p)
     val s = Udfs.newSession(s"local[$p]", shuf, s"graft-scaling-$p")
     s.sparkContext.setLogLevel("ERROR")
     // per-stage record: the "which stage stopped scaling" evidence the
@@ -183,10 +181,6 @@ object ScalingRun {
           m.shuffleWriteMetrics.bytesWritten, m.shuffleReadMetrics.totalBytesRead,
           m.diskBytesSpilled, si.numTasks)
         stages.synchronized(stages += rec)
-        if (sys.env.contains("SPARK_GRAFT_STAGE_DEBUG"))
-          System.err.println(f"STAGE ${rec.id}%3d wall=${rec.wallMs}ms tasks=${rec.tasks} " +
-            f"cpu=${rec.cpuMs}ms run=${rec.runMs}ms gc=${rec.gcMs}ms " +
-            f"shW=${rec.shW / 1048576}MB shR=${rec.shR / 1048576}MB spill=${rec.spill / 1048576}MB")
       }
     })
     if (job == "store") {

@@ -149,7 +149,7 @@ object SparkEntry {
       // cost to the round's query wall (verdict r03 item 7)
       val rootDir = Udfs.scratchDir("graft-c3")
       val store = new graft.frontier.FrontierStore(
-        rootDir.toString, 4, seenBuckets = 8, bloomItemsPerBucket = 4096)
+        rootDir.toString, 4, seenBuckets = 8)
       Crawler.run(s, pages, projects, Seq("p1" -> "http://host0.example.com/page/1"),
         Crawler.CrawlConfig(maxSteps = 1), Some(store))
       // simulate a kill mid-superstep-2: BOTH failure shapes the commit
@@ -1169,7 +1169,7 @@ object SparkEntry {
         val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
         val rootDir = Udfs.scratchDir("graft-c6")
         val store = new graft.frontier.FrontierStore(
-          rootDir.toString, 4, seenBuckets = 8, bloomItemsPerBucket = 4096)
+          rootDir.toString, 4, seenBuckets = 8)
         implicit val sqlCtx = s.sqlContext
         val seeds =
           org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]

@@ -162,6 +162,17 @@ object Udfs {
       if (prefix.startsWith("graft-")) prefix else s"graft-$prefix")
   }
 
+  /** Default heap of a forked JVM: half of RAM (`MemTotal`), clamped to
+    * 2-8 GB — the same default build.sbt gives SPARK_DRIVER_MEM. */
+  def halfRamHeap: String = {
+    val kb = scala.util.Try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/meminfo")).asScala
+        .collectFirst { case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong }.get
+    }.getOrElse(0L)
+    s"${math.min(8L, math.max(2L, kb / 2097152))}g"
+  }
+
   /** Session factory used by mains/tests: graft extensions + UDFs + sane
     * local-mode scale defaults (AQE on, shuffle partitions = cores). */
   def newSession(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession = {
@@ -184,8 +195,7 @@ object Udfs {
       // Spark 4's runtime row-level bloom filter injection for shuffle joins
       // (SURVEY §4: evaluate before hand-rolling) — complements the explicit
       // driver-held seen-set Bloom in Crawler
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_RUNTIME_BLOOM", "true"))
+      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       // Spark 4 per-session artifact isolation installs an ExecutorClassLoader

@@ -26,14 +26,24 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
  *                                    APPEND deltas of newly-seen URLs,
  *                                    bucketed by pmod(xxhash64(project,
  *                                    url_hash), seenBuckets)
- *   root/snap-N/blooms/B.bloom       full Bloom per touched seen-bucket
- *                                    (old bloom + this step's keys); the
- *                                    partition-local probe (SeenFilter)
+ *   root/snap-N/blooms/B.bloom       delta Bloom of the same keys, sized to
+ *                                    them; the manifest's seen_chain (which
+ *                                    snapshots added keys to which buckets)
+ *                                    is the one lineage of deltas and blooms,
+ *                                    and the partition-local probe
+ *                                    (SeenFilter) ORs a bucket's chain
  *   root/snap-N/budgets/, results-delta/
  *
  * A write is O(touched buckets + step size), not O(frontier). Every
  * `compactEvery` snapshots a FULL rewrite (compaction) re-bases the lineage
  * so the chain stays bounded, and older snapshots are garbage-collected.
+ * A seen chain therefore holds at most `compactEvery` blooms. Each is built
+ * for `bloomFpp / (2 * compactEvery)` at its key count (at least
+ * [[FrontierStore.MinBloomItems]]), so by the union bound their OR stays
+ * under `bloomFpp`. The factor 2 is headroom: a bloom filled to its key
+ * count sits slightly above its design rate (its hash count is rounded), and
+ * a full 32-bloom chain sized at `bloomFpp / compactEvery` measured 1.01 %
+ * false positives at a 1 % budget.
  * Writes stage into `snap-N.tmp/` and commit via atomic directory rename +
  * VERSION pointer swap — a reader never observes a half-written snapshot
  * (resume contract, SURVEY §3.2).
@@ -44,6 +54,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
  */
 final class FrontierStore(rootDir: String, numPartitions: Int,
     val seenBuckets: Int = 64,
+    /** Ignored: each delta bloom is sized to the keys it holds. Kept so
+      * existing callers still compile. */
     bloomItemsPerBucket: Long = 1L << 22,
     bloomFpp: Double = 0.01,
     compactEvery: Int = 32,
@@ -55,7 +67,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
   private val root: Path = Paths.get(rootDir)
   Files.createDirectories(root)
 
-  private def snapDir(id: Long): Path = root.resolve(f"snap-$id%06d")
+  private def snapDir(id: Long): Path = root.resolve(FrontierStore.snapName(id))
 
   def currentId: Option[Long] = {
     val v = root.resolve("VERSION")
@@ -73,12 +85,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
 
   private final case class Manifest(id: Long, step: Int, now: Double, base: Long,
       frontierOwner: Array[Long], rowsPerBucket: Array[Long],
-      seenOwner: Array[Long], resultSnaps: Seq[Long],
-      seenChain: Seq[(Long, Set[Int])],
-      /** cumulative seen-key count per seen-bucket — drives bloom re-sizing */
-      seenRows: Array[Long],
-      /** current bloom capacity (expectedNumItems) per seen-bucket */
-      seenCap: Array[Long],
+      resultSnaps: Seq[Long], seenChain: Seq[(Long, Set[Int])],
       /** cumulative per-project counter totals across all steps (reference
         * reloads counters on restart: scheduler.py:135-137) */
       counterTotals: Map[String, Map[String, Long]])
@@ -115,10 +122,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
       req(m, "step", id).toInt, req(m, "now", id).toDouble,
       req(m, "base", id).toLong,
       longs(req(m, "frontier_owner", id)), longs(req(m, "rows_per_bucket", id)),
-      longs(req(m, "seen_owner", id)), longs(req(m, "results_snaps", id)).toSeq,
-      chain,
-      longs(req(m, "seen_rows", id)), longs(req(m, "seen_cap", id)),
-      totals)
+      longs(req(m, "results_snaps", id)).toSeq, chain, totals)
   }
 
   // ---------------- read ----------------
@@ -160,7 +164,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
     * the first write). */
   def seenFilter(spark: SparkSession): Option[SeenFilter] = currentId.map { id =>
     val mf = parseManifest(id)
-    SeenFilter(seenBuckets, rootDir, mf.seenOwner, mf.seenChain)
+    SeenFilter(seenBuckets, rootDir, mf.seenChain)
   }
 
   // ---------------- write ----------------
@@ -168,7 +172,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
   /**
    * Commit one superstep as a new snapshot: copy-on-write of the frontier
    * buckets touched by `upserts`, append-only seen-key + results deltas,
-   * bloom refresh for touched seen-buckets. O(touched + step), never
+   * one delta bloom per touched seen-bucket. O(touched + step), never
    * O(frontier) — except on compaction snapshots.
    *
    * @param upserts   full frontier rows to insert-or-replace (frontierCols)
@@ -182,7 +186,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
     val prev = if (prevId == 0) None else Some(parseManifest(prevId))
     val id = prevId + 1
     val full = prev.isEmpty || (id - prev.get.base) >= compactEvery
-    val tmp = root.resolve(f"snap-$id%06d.tmp")
+    val tmp = root.resolve(FrontierStore.snapName(id) + ".tmp")
     deleteRecursively(tmp)
     Files.createDirectories(tmp)
 
@@ -376,20 +380,20 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
     val fResultsFull: Option[Future[Boolean]] =
       if (full) Some(Future(resultsSection(keepProjects))) else None
 
-    // ---- seen index: delta + bloom refresh (append-only; compaction
+    // ---- seen index: key delta + delta bloom (append-only; compaction
     // rewrites the full key set so the chain re-bases). The whole section
     // runs as ANOTHER concurrent write future: on incremental snapshots it
     // is independent of the frontier COW (on full ones keepProjects was
     // already awaited above), and its jobs' driver-side planning gaps
     // overlap the frontier write's instead of summing — the superstep
     // commit path is fixed-cost-bound at small step sizes.
-    def seenSection(): (Array[Long], Array[Long], Array[Long], Seq[(Long, Set[Int])]) = {
+    def seenSection(): Seq[(Long, Set[Int])] = {
     val seenKeyed = seenKeyedInc.getOrElse {
       // full snapshot: re-base from the whole committed key set + fresh keys
       val seenSrc0 =
         if (prev.nonEmpty)
-          prev.map(mf => SeenFilter(seenBuckets, rootDir, mf.seenOwner, mf.seenChain)
-            .keysFor(spark, 0 until seenBuckets)).get
+          SeenFilter(seenBuckets, rootDir, prev.get.seenChain)
+            .keysFor(spark, 0 until seenBuckets)
             .unionByName(freshKeys.select("project", "url_hash"))
         else freshKeys.select("project", "url_hash")
       // compaction cleanup: a dropped (drained) project's seen keys go with
@@ -403,61 +407,24 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
         .withColumn("bucket", seenBucket(col("skey")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val freshPerBucket: Map[Int, Long] =
+    val keysPerBucket: Map[Int, Long] =
       if (full)
         seenKeyed.groupBy("bucket").count().collect()
           .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("count")).toMap
       else incStats.collect { case ((1, b), n) => b -> n }
-    val seenTouched: Array[Int] = freshPerBucket.keys.toArray.sorted
-    val prevSeenRows = prev.map(_.seenRows).getOrElse(Array.fill(seenBuckets)(0L))
-    val prevSeenCap = prev.map(_.seenCap)
-      .getOrElse(Array.fill(seenBuckets)(bloomItemsPerBucket))
-    // cumulative item count per bucket; on full, seenSrc IS the full key set
-    // so the per-bucket counts are exact re-bases
-    val seenRows = Array.tabulate(seenBuckets) { b =>
-      if (full) freshPerBucket.getOrElse(b, 0L)
-      else prevSeenRows(b) + freshPerBucket.getOrElse(b, 0L)
-    }
-    val prevOwner = prev.map(_.seenOwner).getOrElse(Array.fill(seenBuckets)(0L))
-    // Bloom capacity guard: append-only merging keeps the ORIGINAL filter's
-    // sizing, so once a bucket's cumulative count crosses ~80% of capacity
-    // the FPP starts collapsing (probe selectivity, not correctness — the
-    // exact anti-join backstops). Rebuild that bucket's bloom from its full
-    // key set at 2x the current count.
-    val rebuild: Array[Boolean] = Array.tabulate(seenBuckets) { b =>
-      !full && prevOwner(b) != 0L && freshPerBucket.contains(b) &&
-        seenRows(b) > (prevSeenCap(b) * 4 / 5)
-    }
-    val capThisSnap = Array.tabulate(seenBuckets) { b =>
-      if (full || rebuild(b) || prevOwner(b) == 0L)
-        math.max(bloomItemsPerBucket, seenRows(b) * 2)
-      else prevSeenCap(b)
-    }
+    val seenTouched: Array[Int] = keysPerBucket.keys.toArray.sorted
     if (seenTouched.nonEmpty) {
       seenKeyed.repartition(math.max(1, seenTouched.length), col("bucket"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("bucket").parquet(tmp.resolve("seen-delta").toString)
-      // bloom refresh: executors write side-files into the staged snapshot
-      // (shared FS — same contract as any shuffle/output commit); file names
-      // are deterministic so task retries overwrite identically
+      // delta blooms: executors write side-files into the staged snapshot
+      // (shared FS — same contract as any shuffle/output commit), each sized
+      // to its bucket's keys in this snapshot; file names are deterministic
+      // so task retries overwrite identically
       Files.createDirectories(tmp.resolve("blooms"))
-      val rootStr = rootDir; val tmpStr = tmp.toString
-      val fpp = bloomFpp
-      val isFull = full
-      val rebuildArr = rebuild; val capArr = capThisSnap; val ownerArr = prevOwner
-      // rebuild buckets re-insert their ENTIRE committed key set (pruned
-      // chain read of only those buckets) alongside this step's fresh keys
-      val rebuildBuckets = (0 until seenBuckets).filter(rebuildArr(_))
-      val bloomFeed0 = seenKeyed.select(col("bucket"), col("skey"))
-      val bloomFeed =
-        if (rebuildBuckets.isEmpty) bloomFeed0
-        else bloomFeed0.unionByName(
-          prev.map(mf => SeenFilter(seenBuckets, rootDir, mf.seenOwner, mf.seenChain)
-            .keysFor(spark, rebuildBuckets)).get
-            .withColumn("skey", xxhash64(col("project"), col("url_hash")))
-            .withColumn("bucket", seenBucket(col("skey")))
-            .select(col("bucket"), col("skey")))
-      bloomFeed.as[(Int, Long)](
+      val tmpStr = tmp.toString
+      val fpp = bloomFpp / (2 * compactEvery)
+      seenKeyed.select(col("bucket"), col("skey")).as[(Int, Long)](
           org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaInt,
             org.apache.spark.sql.Encoders.scalaLong))
         .repartition(math.max(1, seenTouched.length), col("bucket"))
@@ -465,14 +432,9 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
           val byBucket = scala.collection.mutable.HashMap
             .empty[Int, org.apache.spark.util.sketch.BloomFilter]
           it.foreach { case (b, k) =>
-            val bloom = byBucket.getOrElseUpdate(b, {
-              if (!isFull && !rebuildArr(b) && ownerArr(b) != 0L) {
-                val in = Files.newInputStream(
-                  Paths.get(SeenFilter.bloomPath(rootStr, ownerArr(b), b)))
-                try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
-              } else org.apache.spark.util.sketch.BloomFilter.create(capArr(b), fpp)
-            })
-            bloom.putLong(k)
+            byBucket.getOrElseUpdate(b,
+              org.apache.spark.util.sketch.BloomFilter.create(
+                math.max(keysPerBucket(b), FrontierStore.MinBloomItems), fpp)).putLong(k)
           }
           byBucket.foreach { case (b, bloom) =>
             val out = Files.newOutputStream(Paths.get(s"$tmpStr/blooms/$b.bloom"))
@@ -480,28 +442,15 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
           }
         }
     }
-    val seenOwner = Array.tabulate(seenBuckets) { b =>
-      if (seenTouched.contains(b)) id
-      else if (full) 0L
-      else prev.map(_.seenOwner(b)).getOrElse(0L)
-    }
-    val seenCap = Array.tabulate(seenBuckets) { b =>
-      if (seenTouched.contains(b)) capThisSnap(b)
-      else if (full) bloomItemsPerBucket
-      else prevSeenCap(b)
-    }
-    val seenChain =
-      if (full) Seq(id -> seenTouched.toSet)
-      else prev.map(_.seenChain).getOrElse(Seq.empty) ++
-        (if (seenTouched.nonEmpty) Seq(id -> seenTouched.toSet) else Seq.empty)
     seenKeyed.unpersist(false)
-    (seenOwner, seenCap, seenRows, seenChain)
+    val delta = if (seenTouched.nonEmpty) Seq(id -> seenTouched.toSet) else Seq.empty
+    if (full) delta else prev.map(_.seenChain).getOrElse(Seq.empty) ++ delta
     }
     val fSeen = Future(seenSection())
 
     // ---- join the concurrent frontier/budgets/results/seen writes
     val writtenCounts: Map[Int, Long] = Await.result(fFrontier, Duration.Inf)
-    val (seenOwner, seenCap, seenRows, seenChain) = Await.result(fSeen, Duration.Inf)
+    val seenChain = Await.result(fSeen, Duration.Inf)
     val frontierOwner = Array.tabulate(numPartitions) { b =>
       if (writtenCounts.contains(b)) id
       // a touched-but-now-empty bucket must NOT keep pointing at an old
@@ -554,9 +503,6 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
          |"frontier_rows":$total,
          |"frontier_owner":"${frontierOwner.mkString(",")}",
          |"rows_per_bucket":"${rowsPerBucket.mkString(",")}",
-         |"seen_owner":"${seenOwner.mkString(",")}",
-         |"seen_rows":"${seenRows.mkString(",")}",
-         |"seen_cap":"${seenCap.mkString(",")}",
          |"seen_chain":"${seenChain.map { case (s, bs) => s"$s:${bs.toSeq.sorted.mkString("|")}" }.mkString(";")}",
          |"results_snaps":"${resultSnaps.mkString(",")}",
          |"counter_totals":"${FrontierStore.encodeCounterTotals(counterTotals)}",
@@ -592,8 +538,22 @@ object FrontierStore {
   /** Bumped whenever the snapshot/manifest layout changes — a mismatched
     * store fails fast with a descriptive error instead of a regex NPE.
     * v4: frontier rows carry `crawled_ok` (first-writer-wins result dedup
-    * without an O(history) anti-join). */
-  val FormatVersion = 4
+    * without an O(history) anti-join).
+    * v5: the seen index is one lineage, `seen_chain`, of per-snapshot key
+    * deltas and delta blooms (no `seen_owner`/`seen_rows`/`seen_cap`). */
+  val FormatVersion = 5
+
+  /** Smallest key count a delta bloom is built for. Spark's bloom indexes
+    * its bits by double hashing modulo the bit count, which degenerates in
+    * small bit arrays: a full chain of 32 blooms built for 10 keys each
+    * measured 13 % false positives at a 1 % budget; at 256 keys, 0.9 %. */
+  val MinBloomItems = 256L
+
+  /** Snapshot directory name, `snap-` + the id zero-padded to six digits. */
+  def snapName(id: Long): String = {
+    val s = id.toString
+    "snap-" + "000000".substring(math.min(6, s.length)) + s
+  }
 
   /** Static schemas of the store's own layouts: every read passes them
     * explicitly, so no superstep pays parquet schema inference (a listing +

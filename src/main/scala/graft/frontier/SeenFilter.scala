@@ -13,11 +13,16 @@ import org.apache.spark.util.sketch.BloomFilter
  * URLs a 1% Bloom is ~12 GB on one node — a hard ceiling).
  *
  * Here the seen set is sharded into `numBuckets` buckets by
- * `pmod(xxhash64(project, url_hash), numBuckets)`; each bucket owns
- *  - a Bloom side-file (`snap-N/blooms/<b>.bloom`), rewritten only when the
- *    bucket receives fresh keys (manifest lineage tracks the owning
- *    snapshot), and
- *  - key-delta parquet (`snap-N/seen-delta/bucket=<b>/`), append-only.
+ * `pmod(xxhash64(project, url_hash), numBuckets)`. Every snapshot that adds
+ * keys to bucket `b` writes, for exactly those keys,
+ *  - key-delta parquet (`snap-N/seen-delta/bucket=<b>/`), and
+ *  - a delta Bloom (`snap-N/blooms/<b>.bloom`) sized to them.
+ * `deltaChain` (the manifest's `seen_chain`) is the one lineage for both: a
+ * bucket's seen set is the union of its chain, and the probe ORs the
+ * chain's blooms (a scalable Bloom filter, Almeida et al. 2007). Compaction
+ * re-bases the chain every `compactEvery` snapshots, so a chain holds at
+ * most that many blooms; the store sizes each for its share of the FPR
+ * budget (union bound, [[FrontierStore]]).
  *
  * The probe is a partition-local function: each executor lazily loads the
  * blooms for the buckets its rows touch (JVM-wide cache keyed by file path
@@ -30,10 +35,20 @@ import org.apache.spark.util.sketch.BloomFilter
 final case class SeenFilter(
     numBuckets: Int,
     root: String,
-    /** bloom-owning snapshot id per bucket; 0 = bucket has no keys yet */
-    bloomOwner: Array[Long],
     /** (snapshotId, seen-buckets touched in it) — the delta chain */
     deltaChain: Seq[(Long, Set[Int])]) {
+
+  /** Bloom paths of each bucket's chain, oldest first, built once here so
+    * the per-row probe formats no path. */
+  private val chainPaths: Array[Array[String]] = Array.tabulate(numBuckets) { b =>
+    deltaChain.collect { case (snap, bs) if bs.contains(b) => SeenFilter.bloomPath(root, snap, b) }
+      .toArray
+  }
+
+  /** Newest snapshot in each bucket's chain; 0 = bucket has no keys yet. */
+  lazy val bloomOwner: Array[Long] = Array.tabulate(numBuckets) { b =>
+    deltaChain.collect { case (snap, bs) if bs.contains(b) => snap }.lastOption.getOrElse(0L)
+  }
 
   def bucketCol(project: Column, urlHash: Column): Column =
     pmod(xxhash64(project, urlHash), lit(numBuckets)).cast("int")
@@ -44,12 +59,12 @@ final case class SeenFilter(
     * dispatch + Int/Long boxing would be the single highest-volume per-row
     * overhead in the crawl. */
   def probe: (Column, Column) => Column = {
-    val r = root; val owners = bloomOwner
+    val chains = chainPaths
     (bucket, skey) =>
       org.apache.spark.sql.GraftColumnShim.column(BloomSeenProbe(
         org.apache.spark.sql.GraftColumnShim.expression(bucket),
         org.apache.spark.sql.GraftColumnShim.expression(skey),
-        r, owners))
+        chains))
   }
 
   /** Exact seen keys (project, url_hash) for the given buckets only —
@@ -73,18 +88,16 @@ final case class SeenFilter(
 
 object SeenFilter {
   def bloomPath(root: String, snap: Long, bucket: Int): String =
-    f"$root/snap-$snap%06d/blooms/$bucket.bloom"
+    root + "/" + FrontierStore.snapName(snap) + "/blooms/" + bucket + ".bloom"
   def deltaPath(root: String, snap: Long, bucket: Int): String =
-    f"$root/snap-$snap%06d/seen-delta/bucket=$bucket"
+    root + "/" + FrontierStore.snapName(snap) + "/seen-delta/bucket=" + bucket
 
   /** Executor-JVM-wide bloom cache. Snapshot files are immutable so an
-    * entry is never WRONG — but every superstep that touches a bucket
-    * writes a NEW bloom file under the new snapshot id, so a path-keyed
-    * unbounded cache grows by ~bloom-size per touched bucket per step for
-    * the JVM's life (stale snapshots' entries linger after GC). Bounded
-    * byte-budget LRU: stale paths simply age out. */
-  private val maxBytes: Long =
-    sys.env.getOrElse("GRAFT_BLOOM_CACHE_BYTES", (512L * 1024 * 1024).toString).toLong
+    * entry is never WRONG — but every snapshot adds new bloom files and
+    * compaction garbage-collects old ones, so a path-keyed unbounded cache
+    * would keep every bloom the JVM ever probed (stale snapshots' entries
+    * linger after GC). Bounded byte-budget LRU: stale paths simply age out. */
+  private val maxBytes: Long = 512L * 1024 * 1024
   private var cachedBytes = 0L
   private val cache = new java.util.LinkedHashMap[String, (BloomFilter, Long)](64, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, (BloomFilter, Long)]): Boolean =
@@ -116,28 +129,39 @@ object SeenFilter {
       }
     }
   }
-  /** test hooks */
-  private[frontier] def cacheSize: Int = cache.synchronized(cache.size())
-  private[frontier] def cacheBytes: Long = cache.synchronized(cachedBytes)
 
-  /** Static single-probe entry point for codegen (called from generated
-    * Java): owner-0 short-circuiting lives in the generated code. */
-  def probeOne(root: String, owner: Long, bucket: Int, key: Long): Boolean =
-    load(bloomPath(root, owner, bucket)).mightContainLong(key)
+  /** One bloom of a bucket's chain: the delta that snapshot `snap` wrote. */
+  def probeOne(root: String, snap: Long, bucket: Int, key: Long): Boolean =
+    load(bloomPath(root, snap, bucket)).mightContainLong(key)
+
+  /** The blooms of one bucket's chain, through the cache. */
+  def loadChain(paths: Array[String]): Array[BloomFilter] = paths.map(load)
+
+  /** Static chain probe, called from generated Java and from `nullSafeEval`:
+    * true when any bloom of the chain might contain `key`. */
+  def mightContain(chain: Array[BloomFilter], key: Long): Boolean = {
+    var i = 0
+    while (i < chain.length) {
+      if (chain(i).mightContainLong(key)) return true
+      i += 1
+    }
+    false
+  }
 }
 
 /**
  * Codegen'd Bloom-probe predicate `(bucket:int, skey:long) -> boolean` over
  * the filter's side-files — stays inside whole-stage codegen with primitive
- * locals (the generated code indexes the owners array and calls the static
- * [[SeenFilter.probeOne]]), replacing the boxed per-row ScalaUDF that used
- * to sit on the J1 dedup hot path (SURVEY §2.4; verdict r03 item 2).
+ * locals (the generated code loads each bucket's chain once per partition
+ * and calls the static [[SeenFilter.mightContain]]), replacing the boxed
+ * per-row ScalaUDF that used to sit on the J1 dedup hot path (SURVEY §2.4;
+ * verdict r03 item 2).
  */
 case class BloomSeenProbe(
     left: org.apache.spark.sql.catalyst.expressions.Expression,
     right: org.apache.spark.sql.catalyst.expressions.Expression,
-    root: String,
-    owners: Array[Long])
+    /** bloom paths per bucket, built once by [[SeenFilter]] */
+    chains: Array[Array[String]])
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 
@@ -146,20 +170,20 @@ case class BloomSeenProbe(
     org.apache.spark.sql.types.BooleanType
   override def prettyName: String = "bloom_seen_probe"
 
-  override protected def nullSafeEval(b: Any, k: Any): Any = {
-    val bi = b.asInstanceOf[Int]
-    val o = owners(bi)
-    o != 0L && SeenFilter.probeOne(root, o, bi, k.asInstanceOf[Long])
-  }
+  override protected def nullSafeEval(b: Any, k: Any): Any =
+    SeenFilter.mightContain(SeenFilter.loadChain(chains(b.asInstanceOf[Int])), k.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ownersRef = ctx.addReferenceObj("bloomOwners", owners, "long[]")
-    val rootRef = ctx.addReferenceObj("bloomRoot", root, "java.lang.String")
-    val o = ctx.freshName("owner")
+    val bloomCls = classOf[BloomFilter].getName
+    val chainsRef = ctx.addReferenceObj("bloomChains", chains, "java.lang.String[][]")
+    // a bucket's blooms are resolved on its first probe in the partition:
+    // later rows take no cache lock
+    val loaded = ctx.addMutableState(s"$bloomCls[][]", "bloomChain",
+      v => s"$v = new $bloomCls[${chains.length}][];")
     nullSafeCodeGen(ctx, ev, (b, k) =>
       s"""
-         |final long $o = $ownersRef[$b];
-         |${ev.value} = $o != 0L && graft.frontier.SeenFilter.probeOne($rootRef, $o, $b, $k);
+         |if ($loaded[$b] == null) $loaded[$b] = graft.frontier.SeenFilter.loadChain($chainsRef[$b]);
+         |${ev.value} = graft.frontier.SeenFilter.mightContain($loaded[$b], $k);
        """.stripMargin)
   }
 

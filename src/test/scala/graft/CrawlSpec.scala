@@ -215,7 +215,7 @@ class CrawlSpec extends AnyFunSuite {
     val exact = Crawler.run(spark, pages, projects, seeds,
       Crawler.CrawlConfig(maxSteps = 4, now0 = now0))
     val dir = java.nio.file.Files.createTempDirectory("graft-seen").toString
-    val store = new FrontierStore(dir, 8, seenBuckets = 16, bloomItemsPerBucket = 4096)
+    val store = new FrontierStore(dir, 8, seenBuckets = 16)
     val stored = Crawler.run(spark, pages, projects, seeds,
       Crawler.CrawlConfig(maxSteps = 4, now0 = now0), Some(store))
     assert(exact.frontier.select("url_hash").orderBy("url_hash").as[Long].collect().toSeq ==
@@ -237,7 +237,7 @@ class CrawlSpec extends AnyFunSuite {
       now0 = now0, fetch = fixtureFetch)
     val liveStored = graft.fetch.LiveCrawler.run(spark, projects, seeds, maxSteps = 4,
       now0 = now0, fetch = fixtureFetch, store = Some(new FrontierStore(liveDir, 8,
-        seenBuckets = 16, bloomItemsPerBucket = 4096)))
+        seenBuckets = 16)))
     def rows(df: DataFrame) = df.orderBy("project", "url_hash").collect().toSeq
     for ((name, run) <- Seq("stored" -> stored, "live" -> liveExact,
         "live+store" -> liveStored)) {
@@ -465,48 +465,102 @@ class CrawlSpec extends AnyFunSuite {
     assert(e.getMessage.contains("manifest format"))
   }
 
-  test("bloom capacity: a bucket past ~80% capacity is rebuilt larger (manifest tracks rows+cap)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloomcap").toString
-    val store = new FrontierStore(dir, 4, seenBuckets = 1, bloomItemsPerBucket = 64)
-    def batch(lo: Int, n: Int) = Crawler.seedFrontier(spark,
-      (lo until lo + n).map(i => "p1" -> s"http://h0.test/u$i"), now0)
-    // snap 1 (full): 100 keys > 64 default -> sized to 2x count = 200
-    val b1 = batch(0, 100)
-    store.writeIncremental(spark, 1, now0, b1, b1.select("project", "url_hash"),
+  private def seedBatch(lo: Int, n: Int): DataFrame = Crawler.seedFrontier(spark,
+    (lo until lo + n).map(i => "p1" -> s"http://h0.test/u$i"), now0)
+
+  /** Commit `batch`'s rows, all fresh, as one snapshot of `store`. */
+  private def commitFresh(store: FrontierStore, step: Int, batch: DataFrame): Long =
+    store.writeIncremental(spark, step, now0 + step, batch, batch.select("project", "url_hash"),
       Crawler.emptyBudgets(spark), Crawler.emptyResults(spark), Crawler.emptyCounters(spark))
-    def capsAndRows(id: Long) = {
-      val m = store.manifestJson(id)
-      ("\"seen_cap\":\"([^\"]*)\"".r.findFirstMatchIn(m).get.group(1).toLong,
-        "\"seen_rows\":\"([^\"]*)\"".r.findFirstMatchIn(m).get.group(1).toLong)
+
+  /** Every committed seen key of `sf` with its bucket and skey, read back
+    * from the delta parquet (a file scan, so the probe runs codegen'd). */
+  private def committedKeys(sf: graft.frontier.SeenFilter): DataFrame =
+    sf.keysFor(spark, 0 until sf.numBuckets)
+      .withColumn("skey", xxhash64(col("project"), col("url_hash")))
+      .withColumn("b", sf.bucketCol(col("project"), col("url_hash")))
+
+  test("seen delta blooms: no false negative over a full chain or after compaction") {
+    val every = 8
+    val perSnap = 2000
+    val dir = java.nio.file.Files.createTempDirectory("graft-bloomchain").toString
+    val store = new FrontierStore(dir, 4, seenBuckets = 2, compactEvery = every)
+    // snapshot 1 is the base, 2..every add every - 1 deltas: the longest chain
+    (0 until every).foreach(i => commitFresh(store, i + 1, seedBatch(i * perSnap, perSnap)))
+    val sf = store.seenFilter(spark).get
+    assert(sf.deltaChain.map(_._2) == Seq.fill(every)(Set(0, 1)))
+    def misses(sf: graft.frontier.SeenFilter, keys: Long): Long = {
+      val all = committedKeys(sf)
+      assert(all.count() == keys)
+      all.where(!sf.probe(col("b"), col("skey"))).count()
     }
-    assert(capsAndRows(1) == ((200L, 100L)))
-    // snap 2: +100 keys -> 200 rows > 0.8*200 -> rebuild at 2x400
-    val b2 = batch(100, 100)
-    store.writeIncremental(spark, 2, now0 + 1, b2, b2.select("project", "url_hash"),
-      Crawler.emptyBudgets(spark), Crawler.emptyResults(spark), Crawler.emptyCounters(spark))
-    assert(capsAndRows(2) == ((400L, 200L)))
-    // the rebuilt bloom still contains EVERY key ever written (old + new)
-    val sf2 = store.seenFilter(spark).get
-    val all = batch(0, 200).select(col("project"), col("url_hash"),
-      org.apache.spark.sql.functions.xxhash64(col("project"), col("url_hash")).as("skey"))
-    val misses = all
-      .withColumn("b", sf2.bucketCol(col("project"), col("url_hash")))
-      .where(!sf2.probe(col("b"), col("skey"))).count()
-    assert(misses == 0, s"$misses committed keys missing from the rebuilt bloom")
+    assert(misses(sf, every * perSnap) == 0)
+    // measured false-positive rate of the chain's OR over non-member keys
+    val nonMembers = 200000
+    val probes = spark.range(nonMembers).select(xxhash64(col("id"), lit("non-member")).as("skey"))
+      .withColumn("b", pmod(col("skey"), lit(sf.numBuckets)).cast("int"))
+    val fpr = probes.where(sf.probe(col("b"), col("skey"))).count().toDouble / nonMembers
+    assert(fpr <= 0.01, s"chain of $every blooms: FPR $fpr > bloomFpp 0.01")
+    // the next snapshot compacts: one bloom per bucket, every key still in it
+    commitFresh(store, every + 1, seedBatch(every * perSnap, perSnap))
+    val compacted = store.seenFilter(spark).get
+    assert(compacted.deltaChain.map(_._2) == Seq(Set(0, 1)))
+    assert(misses(compacted, (every + 1) * perSnap) == 0)
     // the probe is a codegen'd native expression on the J1 hot path — it
     // must appear in the executed plan by name with no boxed ScalaUDF
     // dispatch. Probe over a range (not a LocalRelation): a local source
     // lets ConvertToLocalRelation evaluate the deterministic filter at
     // optimize time, leaving no observable plan
-    val planDf = spark.range(0, 200)
-      .selectExpr("'p1' as project", "xxhash64(cast(id as string)) as url_hash",
-        "xxhash64(cast(id as string), 7) as skey")
-      .withColumn("b", sf2.bucketCol(col("project"), col("url_hash")))
-      .where(!sf2.probe(col("b"), col("skey")))
+    val planDf = probes.where(!sf.probe(col("b"), col("skey")))
     planDf.count() // force execution through codegen (compiles the generated probe call)
     val plan = planDf.queryExecution.executedPlan.toString
     assert(plan.contains("bloom_seen_probe"), s"probe expr missing from plan:\n${plan.take(800)}")
     assert(!plan.contains("UDF"), s"probe must not be a ScalaUDF:\n${plan.take(800)}")
+  }
+
+  test("bloom chain probe: codegen and nullSafeEval agree on a chain of 3+ deltas") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bloomeval").toString
+    val store = new FrontierStore(dir, 4, seenBuckets = 4)
+    (0 until 4).foreach(i => commitFresh(store, i + 1, seedBatch(i * 300, 300)))
+    val sf = store.seenFilter(spark).get
+    assert(sf.deltaChain.size == 4)
+    val members = committedKeys(sf).select(col("b"), col("skey"))
+    val others = spark.range(3000).select(xxhash64(col("id"), lit("other")).as("skey"))
+      .withColumn("b", pmod(col("skey"), lit(sf.numBuckets)).cast("int")).select("b", "skey")
+    val probed = members.unionByName(others).withColumn("hit", sf.probe(col("b"), col("skey")))
+    val rows = probed.as[(Int, Long, Boolean)].collect()
+    assert(probed.queryExecution.executedPlan.toString.linesIterator
+      .exists(l => l.contains("*(") && l.contains("bloom_seen_probe")),
+      "probe not inside whole-stage codegen")
+    assert(rows.length == 4 * 300 + 3000)
+    assert(rows.count(_._3) >= 4 * 300 && rows.exists(!_._3))
+    import org.apache.spark.sql.GraftColumnShim.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    for ((b, k, hit) <- rows) {
+      val eval = expression(sf.probe(column(Literal(b)), column(Literal(k)))).eval()
+      // the per-snapshot entry point ORed over the chain: the same answer
+      val perSnap = sf.deltaChain.exists { case (snap, bs) =>
+        bs.contains(b) && graft.frontier.SeenFilter.probeOne(sf.root, snap, b, k)
+      }
+      assert(eval == hit && perSnap == hit, s"bucket $b key $k: codegen $hit, eval $eval")
+    }
+  }
+
+  test("seen commit is O(step) at the default sizing; a format-4 store is rejected") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-seenstep")
+    val store = new FrontierStore(dir.toString, 4) // 64 seen buckets, defaults
+    commitFresh(store, 1, seedBatch(0, 1000))
+    val id = commitFresh(store, 2, seedBatch(1000, 100))
+    val blooms = java.nio.file.Files.list(dir.resolve(FrontierStore.snapName(id)).resolve("blooms"))
+    val bytes = try blooms.mapToLong(java.nio.file.Files.size(_)).sum() finally blooms.close()
+    assert(bytes > 0 && bytes < 64 * 1024, s"a 100-key commit wrote $bytes B of blooms")
+    val m = store.manifestJson(id)
+    for (gone <- Seq("seen_owner", "seen_rows", "seen_cap")) assert(!m.contains(gone), gone)
+    val mPath = dir.resolve(FrontierStore.snapName(id)).resolve("manifest.json")
+    java.nio.file.Files.writeString(mPath,
+      m.replace("\"format\":" + FrontierStore.FormatVersion, "\"format\":4"))
+    val e = intercept[IllegalStateException](store.read(spark))
+    assert(e.getMessage.contains("manifest format 4"))
   }
 
   test("result sink is O(step): the superstep loop never scans results history (verdict r04 item 1)") {
@@ -540,7 +594,7 @@ class CrawlSpec extends AnyFunSuite {
       hotHosts = 1, hotFactor = 2, fanout = 3)).toDF()
     val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
     val dir = java.nio.file.Files.createTempDirectory("graft-resscan")
-    val store = new FrontierStore(dir.toString, 4, seenBuckets = 8, bloomItemsPerBucket = 4096)
+    val store = new FrontierStore(dir.toString, 4, seenBuckets = 8)
     spark.listenerManager.register(listener)
     val run = try {
       val r = Crawler.run(spark, pages, projects,

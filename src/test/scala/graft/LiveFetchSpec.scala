@@ -297,8 +297,7 @@ class LiveFetchSpec extends AnyFunSuite {
 
     // resuming an already-drained store: no spurious superstep, no snapshot
     val root = java.nio.file.Files.createTempDirectory("graft-live-drained")
-    val store = new graft.frontier.FrontierStore(root.toString, 4,
-      seenBuckets = 8, bloomItemsPerBucket = 4096)
+    val store = new graft.frontier.FrontierStore(root.toString, 4, seenBuckets = 8)
     val pages = Map(
       "http://one.example/robots.txt" -> "User-agent: *\nAllow: /\n".getBytes("UTF-8"),
       "http://one.example/only" -> "<html><body>fin</body></html>".getBytes("UTF-8"))
@@ -319,8 +318,7 @@ class LiveFetchSpec extends AnyFunSuite {
     try {
       val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
       val root = java.nio.file.Files.createTempDirectory("graft-live-store")
-      val store = new graft.frontier.FrontierStore(root.toString, 4,
-        seenBuckets = 8, bloomItemsPerBucket = 4096)
+      val store = new graft.frontier.FrontierStore(root.toString, 4, seenBuckets = 8)
 
       // run 1: seed bootstrap (snapshot 1) + superstep 1 (snapshot 2), then
       // "killed" — leave half-staged debris like a real mid-write crash

@@ -203,7 +203,7 @@ class FrontierStoreContractSpec extends SnapshotStoreContract {
 
   override def newCompactingStore(every: Int): Option[SnapshotStore] =
     Some(new FrontierStore(tmp(), 4, seenBuckets = 8,
-      bloomItemsPerBucket = 4096, compactEvery = every))
+      compactEvery = every))
 
   /** Both debris shapes the parquet commit protocol can leave: a half-staged
     * `snap-N.tmp` (killed mid-write) and an orphan renamed `snap-N` whose
@@ -225,7 +225,7 @@ class FrontierStoreContractSpec extends SnapshotStoreContract {
   private def storeRoots(s: SnapshotStore): java.nio.file.Path = roots.get(s)
   override def newStore(): SnapshotStore = {
     val dir = tmp()
-    val s = new FrontierStore(dir, 4, seenBuckets = 8, bloomItemsPerBucket = 4096)
+    val s = new FrontierStore(dir, 4, seenBuckets = 8)
     roots.put(s, java.nio.file.Paths.get(dir))
     s
   }
