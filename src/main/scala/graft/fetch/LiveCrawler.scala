@@ -1,8 +1,9 @@
 package graft.fetch
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sched.{Crawler, StepDriver, Superstep}
+import graft.text.Encoding
 
 /**
  * Live-backend crawl loop (S9 as a deployment mode, not just a seam test):
@@ -17,16 +18,28 @@ import graft.sched.{Crawler, StepDriver, Superstep}
  * socket is touched (a compliant crawler never issues the request); the
  * superstep's own F9 gate then classifies them as fetch failures.
  *
- * robots.txt captures are cached per host for `robotsTtlSeconds` of VIRTUAL
- * crawl time, matching the reference's fetcher-side per-domain cache with
- * `robot_txt_age = 60*60` (tornado_fetcher.py:82,291-314): a steady-state
- * superstep fetches only content urls. The cache is driver state
- * deliberately — hosts-with-a-ready-task per step is politeness-bounded
- * (W1/A7), orders of magnitude smaller than the frontier, the same class of
- * bounded driver state as the per-project counters. A failed robots
- * capture (404 / transport) is cached as allow-all for the TTL, exactly like
- * the reference's error branch (tornado_fetcher.py:303-306). The cached
- * rules are also the superstep's robots side.
+ * A step's fixed cost follows what the step holds. Two checkpoints
+ * materialize its inputs: the selection, which also observes the (scheme,
+ * host) pairs selected, and the capture, the one job that runs the fetch,
+ * which also counts the responses that are redirect hops
+ * (`Dataset.observe` adds no job). The pages index is the deduped
+ * capture, built through the F11 redirect walk (and then checkpointed)
+ * only when that count is above 0; the robots side is a local relation of
+ * the cached rules.
+ *
+ * robots.txt captures are cached per (scheme, host) for `robotsTtlSeconds`
+ * of VIRTUAL crawl time, matching the reference's fetcher-side per-domain
+ * cache with `robot_txt_age = 60*60` (tornado_fetcher.py:82,291-314): a
+ * steady-state superstep fetches only content urls. RFC 9309 scopes a
+ * robots.txt to one scheme and authority, so each url is gated by its own
+ * scheme's rules; only while that probe has failed do a dual-scheme host's
+ * other-scheme rules apply. The cache is driver state deliberately —
+ * hosts-with-a-ready-task per step is politeness-bounded (W1/A7), orders of
+ * magnitude smaller than the frontier, the same class of bounded driver
+ * state as the per-project counters. A failed robots capture (404 /
+ * transport) is cached as allow-all for the TTL, exactly like the
+ * reference's error branch (tornado_fetcher.py:303-306). The cached rules
+ * are also the superstep's robots side.
  */
 object LiveCrawler {
 
@@ -44,8 +57,8 @@ object LiveCrawler {
       store: Option[graft.frontier.SnapshotStore] = None): Crawler.CrawlRun = {
     import spark.implicits._
 
-    // host -> (capturedAtVirtualTime, robots bytes | null = allow-all)
-    val robotsCache = scala.collection.mutable.Map.empty[String, (Double, Array[Byte])]
+    // (scheme, host) -> (capturedAtVirtualTime, robots bytes | null = allow-all)
+    val robotsCache = scala.collection.mutable.Map.empty[(String, String), (Double, Array[Byte])]
     var robotsFetches = 0L
     // same termination contract as Crawler.run — live steps are
     // politeness-small, so a per-step frontier count job would be the
@@ -54,73 +67,53 @@ object LiveCrawler {
 
     while (driver.steps < maxSteps && !driver.done) {
       val now = driver.nextNow
+      def fresh(k: (String, String)): Option[Array[Byte]] =
+        robotsCache.get(k).filter(now - _._1 <= robotsTtlSeconds).map(_._2)
 
       // ---- the politeness-selected slice FIRST (W2 -> A7 -> W1 -> W5),
       // before any socket is touched: the token-bucket budget must bound
       // real network traffic, not post-hoc classify it — the reference's
       // fetcher only ever receives what the scheduler dispatched
-      // (scheduler.py:328-346). The superstep reuses this slice.
+      // (scheduler.py:328-346). The superstep reuses this slice. Its
+      // checkpoint job also yields the (scheme, host) pairs to probe.
+      val schemes = Observation()
       val selected = Superstep
         .selectReady(spark, driver.frontier, driver.budgets, projects, now, cfg)
-        .selected.localCheckpoint()
+        .observe(schemes, collect_set(when($"host".isNotNull && $"host" =!= "",
+          struct(lower(expr("parse_url(url, 'PROTOCOL')")), $"host"))).as("pairs"))
+        .localCheckpoint()
+      // robots.txt is requested over the schemes the host's tasks actually
+      // use — an https-only site must not get a doomed http:// probe that
+      // caches as allow-all
+      val pairs = schemes.get("pairs").asInstanceOf[Seq[Row]]
+        .map(r => (r.getString(0), r.getString(1)))
+        .filter(p => p._1 == "http" || p._1 == "https").sorted
 
-      // ---- robots refresh for hosts of the SELECTED slice (politeness-
-      // bounded) whose cache entry is absent or older than the TTL (virtual
-      // clock, like every other time in the crawl). robots.txt is requested
-      // over the scheme the host's tasks actually use — an https-only site
-      // must not get a doomed http:// probe that caches as allow-all.
-      // max, not min: a host with BOTH http and https tasks in one step gets
-      // its robots.txt probed over https ("https" > "http" lexicographically)
-      // — the hardened endpoint is the one that must not be cached allow-all
-      // if the plaintext probe would be refused
-      val hostSchemeSets: Map[String, Seq[String]] = selected
-        .where($"host".isNotNull && $"host" =!= "")
-        .groupBy($"host")
-        .agg(collect_set(lower(expr("parse_url(url, 'PROTOCOL')"))).as("schemes"))
-        .collect()
-        .map(r => r.getString(0) ->
-          r.getSeq[String](1).filter(s => s == "http" || s == "https").sorted)
-        .toMap
-      val hostSchemes: Map[String, String] =
-        hostSchemeSets.map { case (h, ss) => h -> ss.lastOption.getOrElse("http") }
-      val hosts = hostSchemes.keys.toSeq.sorted
+      // ---- robots refresh for the (scheme, host) pairs of the SELECTED
+      // slice (politeness-bounded) whose cache entry is absent or older
+      // than the TTL (virtual clock, like every other time in the crawl)
       if (cfg.respectRobots) {
-        val stale = hosts.filter(h =>
-          robotsCache.get(h).forall(now - _._1 > robotsTtlSeconds))
-        // host -> robots.txt bytes of the probes that succeeded
-        def probe(urls: Seq[String]): Map[String, Array[Byte]] = {
-          robotsFetches += urls.size
-          fetch(spark, urls.toDF("url")).select("url", "html").collect()
-            .map(r => graft.url.UrlCanon.hostOf(r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
-        }
+        val stale = pairs.filter(fresh(_).isEmpty)
         if (stale.nonEmpty) {
-          val captured = probe(stale.map(h => s"${hostSchemes(h)}://$h/robots.txt"))
-          // A host with BOTH schemes in the slice whose chosen-scheme probe
-          // (https, the hardened endpoint) failed must not cache allow-all
-          // while the other scheme actually serves rules (ADVICE r05; RFC
-          // 9309 scopes robots per scheme+authority): re-probe the
-          // alternate scheme for exactly those hosts. Single-scheme hosts
-          // keep the reference's error branch (failure -> allow-all for the
-          // TTL, tornado_fetcher.py:303-306) with no extra traffic.
-          val retry = stale.filter(h => captured.getOrElse(h, null) == null &&
-            hostSchemeSets.getOrElse(h, Nil).size > 1)
-          val altCaptured =
-            if (retry.isEmpty) Map.empty[String, Array[Byte]]
-            else probe(retry.map { h =>
-              s"${if (hostSchemes(h) == "https") "http" else "https"}://$h/robots.txt"
-            })
-          stale.foreach(h => robotsCache(h) =
-            (now, Option(captured.getOrElse(h, null))
-              .getOrElse(altCaptured.getOrElse(h, null))))
+          robotsFetches += stale.size
+          val captured = fetch(spark, stale.map { case (s, h) => s"$s://$h/robots.txt" }
+              .toDF("url")).select("url", "html").collect()
+            .map(r => robotsKey(r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
+          stale.foreach(k => robotsCache(k) = (now, captured.getOrElse(k, null)))
         }
       }
 
-      // the cached rules of this step's hosts: they gate the fetch below and
-      // are the superstep's robots side, so no capture enters its lineage
-      val rules = hosts.flatMap(h => robotsCache.get(h).map(h -> _._2))
-        .toDF("host", "r_html")
-        .select($"host", expr("extract_text(r_html)").as("robots_txt"))
-        .localCheckpoint()
+      // the rules of this step's (scheme, host) pairs, decoded on the
+      // driver into a local relation: they gate the fetch below and are the
+      // superstep's robots side, so no capture enters its lineage. A failed
+      // probe (null) falls back to the host's other-scheme rules while
+      // those are fresh: a dual-scheme host whose https endpoint serves no
+      // robots.txt must not be crawled allow-all past its http rules.
+      val rules = (if (cfg.respectRobots) pairs else Nil).map { case k @ (s, h) =>
+        val sibling = (if (s == "https") "http" else "https", h)
+        val bytes = fresh(k).flatMap(Option(_)).orElse(fresh(sibling).flatMap(Option(_)))
+        (h, s, bytes.map(Encoding.extractText(_, null)).orNull)
+      }.toDF("host", "scheme", "robots_txt")
 
       // ---- compliance pre-filter: a robots-disallowed url must never be
       // GET-fetched at all — the rules are already in hand (cache above), so
@@ -134,24 +127,48 @@ object LiveCrawler {
         lower(substring($"url", 1, 5)) === "http:" ||
         lower(substring($"url", 1, 6)) === "https:")
       val fetchTargets =
-        if (cfg.respectRobots && hosts.nonEmpty)
-          httpOnly.join(broadcast(rules), Seq("host"), "left_outer")
+        if (cfg.respectRobots && pairs.nonEmpty)
+          Superstep.withRobots(httpOnly, broadcast(rules))
             .where(call_udf("robots_can_fetch", $"robots_txt", lit(cfg.userAgent),
               expr("parse_url(url, 'PATH')")))
             .drop("robots_txt")
         else httpOnly
 
-      // ---- transient pages index: live content capture of the selected,
-      // robots-allowed slice, checkpointed ONCE — the one job that runs the
-      // capture, so each page is requested once per step. Without the cut
-      // the index embeds the capture+selection subplan into every
-      // downstream job, and AQE re-renders those nested plans on each stage
-      // update (observed: minutes of driver CPU per superstep).
-      val content = fetch(spark, fetchTargets.select("url", "etag", "last_modified"))
-      val pagesIdx = Superstep.preparePages(spark, content)._1.localCheckpoint()
+      // ---- live content capture of the selected, robots-allowed slice
+      val (capture, pagesIdx) = pagesIndex(spark,
+        fetch(spark, fetchTargets.select("url", "etag", "last_modified")))
       driver.step(pagesIdx, rules, cfg, preselected = Some(selected),
-        checkpoints = Seq(selected, pagesIdx, rules))
+        checkpoints = Seq(selected, capture, pagesIdx))
     }
     driver.result(robotsFetches)
   }
+
+  /**
+   * A step's pages index over a live capture (`fetch`'s output). The
+   * capture is checkpointed ONCE — the one job that runs the fetch, so each
+   * page is requested once per step — and that job also counts the
+   * capture's redirect hops ([[Superstep.isRedirect]]). With none, the
+   * index is the dedup aggregate over the capture checkpoint, left lazy:
+   * the superstep's persisted fetch join computes it once, and its plan is
+   * a few operators. With some, the F11 walk reads the materialized
+   * capture, never the fetch subplan, and is checkpointed itself, so its
+   * joins never enter the superstep's plans.
+   *
+   * @return the capture checkpoint, released with the step, and the index
+   */
+  private[graft] def pagesIndex(spark: SparkSession,
+      content: DataFrame): (DataFrame, DataFrame) = {
+    val redirects = Observation()
+    val counted = Superstep.carriesRedirects(content)
+    val capture = (if (counted) content.observe(redirects,
+      count_if(Superstep.isRedirect).as("n")) else content).localCheckpoint()
+    if (counted && redirects.get("n").asInstanceOf[Long] > 0)
+      (capture, Superstep.preparePages(spark, capture)._1.localCheckpoint())
+    else
+      (capture, Superstep.preparePages(spark, capture.drop("http_status", "location"))._1)
+  }
+
+  /** The robots cache key, (scheme, host), of a robots.txt url. */
+  private def robotsKey(url: String): (String, String) =
+    (url.takeWhile(_ != ':').toLowerCase, graft.url.UrlCanon.hostOf(url))
 }

@@ -122,18 +122,21 @@ private[graft] final class StepDriver(spark: SparkSession, projects: DataFrame,
     // upper bound on the rows a broadcast-hinted build side can hold:
     // frontier rows plus budget rows (only hosts that consumed get one)
     val stateRows = frontierRows + totals.values.map(_.getOrElse("scheduled", 0L)).sum
+    val small = stateRows < SmallStepRows
     val r = Superstep.run(spark, seedMerge.fold(frontierDf)(_.frontier), budgetsDf,
       pagesIdx, robots, projects, now,
-      cfg.copy(collectCounters = false, smallStep = stateRows < SmallStepRows),
+      cfg.copy(collectCounters = false, smallStep = small),
       store.flatMap(_.seenFilter(spark)), seedMerge.map(_.seen), preselected)
     stepNo += 1
     // r.firstResults is the first-writer-wins delta (REPLACE INTO,
     // resultdb.py:52-66): O(step), never an anti-join against history
     val counterRows: Seq[Row] = store match {
       case Some(s) =>
-        // the superstep's upserts win over a seed upsert of the same task
+        // the superstep's upserts win over a seed upsert of the same task;
+        // a small step broadcasts their keys instead of a shuffle anti-join
+        val stepKeys = r.upserts.select("project", "url_hash")
         val upserts = seedMerge.fold(r.upserts)(m => r.upserts.unionByName(m.upserts.join(
-          r.upserts.select("project", "url_hash"), Seq("project", "url_hash"), "left_anti")))
+          if (small) broadcast(stepKeys) else stepKeys, Seq("project", "url_hash"), "left_anti")))
         val freshKeys = seedMerge.fold(r.freshKeys)(m => r.freshKeys.unionByName(m.freshKeys))
         s.writeIncremental(spark, stepNo, now, upserts, freshKeys, r.budgets,
           r.firstResults, r.counters)
@@ -206,8 +209,9 @@ private[graft] final class StepDriver(spark: SparkSession, projects: DataFrame,
 private[graft] object StepDriver {
   /** The small-step broadcast gate: while a step's state stays under this
     * many rows (a few MB), its state-bounded build sides are broadcast at
-    * plan time ([[Superstep.Config.smallStep]]), and so is the store
-    * commit's copy-on-write anti-join key side. A crawl that outgrows it
+    * plan time ([[Superstep.Config.smallStep]]), and so are the store
+    * commit's copy-on-write anti-join key side and the streaming seed
+    * merge's anti-join key side. A crawl that outgrows it
     * switches itself back to shuffle plans. */
   val SmallStepRows = 100000L
 

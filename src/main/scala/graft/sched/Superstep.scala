@@ -135,12 +135,18 @@ object Superstep {
     * per-key-sorting html bytes. The robots side is deduped per host the
     * same way (duplicate robots.txt captures would otherwise fan out the
     * per-host gate join and break the (project, url_hash) identity
-    * invariant downstream). */
+    * invariant downstream).
+    *
+    * F11: a pages table MAY carry the capture's `http_status` + `location`
+    * (Common-Crawl metadata, or a live capture); the index is then built
+    * through the [[resolveRedirects]] walk. Without those columns every row
+    * is terminal, and the index is the deduped content alone: no walk
+    * joins in its plan. Both give the same rows for a table with no
+    * [[isRedirect]] row, so a caller that knows its capture has none (the
+    * live crawler counts them while materializing it) drops the two
+    * columns and skips the walk. */
   def preparePages(spark: SparkSession, pages: DataFrame): (DataFrame, DataFrame) = {
-    // F11: a pages table MAY carry the capture's HTTP status + Location
-    // header (Common-Crawl metadata); absent, every row is a 200
-    val hasRedirects = pages.columns.contains("http_status") &&
-      pages.columns.contains("location")
+    val hasRedirects = carriesRedirects(pages)
     val base0 =
       if (hasRedirects) pages
       else pages.withColumn("http_status", lit(200))
@@ -195,6 +201,17 @@ object Superstep {
     (resolved.repartition(col("page_hash")), robots)
   }
 
+  /** Whether a pages table carries the capture columns the redirect walk
+    * reads (`http_status`, `location`). */
+  private[graft] def carriesRedirects(pages: DataFrame): Boolean =
+    pages.columns.contains("http_status") && pages.columns.contains("location")
+
+  /** A redirect hop: a 3xx status with a Location header. A 3xx without
+    * one is a terminal row, like the reference's response without a
+    * redirect target. */
+  private[graft] val isRedirect: Column =
+    col("http_status").isin(301, 302, 303, 307, 308) && col("location").isNotNull
+
   /**
    * F11 redirect resolution (tornado_fetcher.py:387-403): follow
    * 301/302/303/307(/308) + Location chains up to max_redirects=5 hops —
@@ -205,28 +222,32 @@ object Superstep {
    * 302/303 force-GET applies to the next request's method; in the
    * pages-table model the capture is method-less, so only the final
    * content and hop count are observable.
+   *
+   * The walk is unrolled into 5 join rounds over `content`, so its plan
+   * holds one copy of `content` per round: callers pass a materialized
+   * table (an archived capture, or the live crawler's checkpointed
+   * capture), and a table with no [[isRedirect]] row needs no walk at all
+   * (its rows are all terminal, `redirect_hops` 0; see [[preparePages]]).
    */
   def resolveRedirects(content: DataFrame): DataFrame = {
     val maxRedirects = 5
-    val isRedir = col("http_status").isin(301, 302, 303, 307, 308) &&
-      col("location").isNotNull
     val withLoc = content
       .withColumn("loc_hash",
-        when(isRedir, xxhash64(expr("canonicalize_url(url_resolve(page_url, location))"))))
+        when(isRedirect, xxhash64(expr("canonicalize_url(url_resolve(page_url, location))"))))
     // targets are probed by hash; the chain walk below touches only the
     // redirect subset (typically a small fraction of the table). The FINAL
     // response's conditional-fetch headers travel with the content.
     val targets = withLoc.select(
       col("page_hash").as("t_hash"), col("page_url").as("t_url"),
-      col("html").as("t_html"), isRedir.as("t_redir"), col("loc_hash").as("t_loc"),
+      col("html").as("t_html"), isRedirect.as("t_redir"), col("loc_hash").as("t_loc"),
       col("page_etag").as("t_etag"), col("page_lm").as("t_lm"),
       col("page_ajax").as("t_ajax"))
-    val terminal = withLoc.where(!isRedir)
+    val terminal = withLoc.where(!isRedirect)
       .select(col("page_hash"), col("page_url"), col("html"),
         col("page_etag"), col("page_lm"), col("page_ajax"))
       .withColumn("redirect_hops", lit(0))
 
-    var pending = withLoc.where(isRedir)
+    var pending = withLoc.where(isRedirect)
       .select(col("page_hash"), col("loc_hash").as("next_hash"), lit(1).as("hops"))
     var done = terminal
     (1 to maxRedirects).foreach { _ =>
@@ -318,11 +339,15 @@ object Superstep {
       when(retried === i, lit(d)).otherwise(acc)
     }
 
-  /** The scheduler's selection output: the politeness-selected task slice
-    * plus the budget intermediates `run` reuses for the post-fetch budget
-    * update (same `now` ⇒ same refill arithmetic on both sides). */
-  final case class Selection(selected: DataFrame, budgeted: DataFrame,
-      projRB: DataFrame)
+  /** Left-joins each row's robots rules (`robots_txt`) by host or, when
+    * the robots side carries a `scheme` column, by (host, scheme) of the
+    * row's url: RFC 9309 scopes a robots.txt to one scheme and authority,
+    * and the live crawler caches rules that way. */
+  private[graft] def withRobots(df: DataFrame, robots: DataFrame): DataFrame =
+    if (robots.columns.contains("scheme"))
+      df.withColumn("scheme", lower(expr("parse_url(url, 'PROTOCOL')")))
+        .join(robots, Seq("host", "scheme"), "left_outer").drop("scheme")
+    else df.join(robots, Seq("host"), "left_outer")
 
   /** The projects the lifecycle gate schedules: status RUNNING, or no
     * status column at all. */
@@ -340,9 +365,14 @@ object Superstep {
    * scheduler.py:328-346 → fetcher queue). Deterministic for a given
    * (frontier, budgets, projects, now, cfg) — a caller that pre-computes the
    * slice and then runs [[run]] sees the identical selection inside it.
+   *
+   * Each selected row carries `tokens_avail`: its (project, host) bucket's
+   * tokens refilled to `now` and capped at the burst (a full bucket when
+   * the host has no state row). [[run]]'s budget update subtracts the
+   * step's consumption from it, so it never re-reads the budget state.
    */
   def selectReady(spark: SparkSession, frontier: DataFrame, budgets: DataFrame,
-      projects: DataFrame, now: Double, cfg: Config = Config()): Selection = {
+      projects: DataFrame, now: Double, cfg: Config = Config()): DataFrame = {
     import spark.implicits._
     // Config.smallStep: plan-time broadcast of state-bounded build sides
     def maybeB(df: DataFrame): DataFrame = if (cfg.smallStep) broadcast(df) else df
@@ -387,9 +417,9 @@ object Superstep {
     // ---- W1 (+W5): ranked selection under the budget
     val withBudget = ready
       .join(maybeB(budgeted), Seq("project", "host"), "left_outer")
-      .withColumn("allowed",
-        floor(coalesce($"tokens_avail", $"p_burst")))
-      .drop("tokens_avail", "p_rate", "p_burst")
+      .withColumn("tokens_avail", coalesce($"tokens_avail", $"p_burst"))
+      .withColumn("allowed", floor($"tokens_avail"))
+      .drop("p_rate", "p_burst")
     val useTopK = cfg.topKAggSelection && spark.catalog.functionExists("topk_select")
     var selected =
       if (useTopK) {
@@ -432,7 +462,7 @@ object Superstep {
             .drop("prnk")
         }
     }
-    Selection(selected, budgeted, projGate)
+    selected
   }
 
   /**
@@ -457,35 +487,34 @@ object Superstep {
         * seed keys (merged into the frontier after the index was written);
         * small by construction, applied as a broadcast overlay */
       extraSeen: Option[DataFrame] = None,
-      /** a pre-materialized [[selectReady]].selected for THIS (frontier,
-        * budgets, projects, now, cfg): the live crawler computes the slice
-        * first (it drives the network fetch) and hands it in so the
-        * superstep doesn't recompute the selection jobs — and so the rows
-        * fetched and the rows processed are the same object, not merely
-        * deterministically equal */
+      /** the frame [[selectReady]] returned for THIS (frontier, budgets,
+        * projects, now, cfg), usually materialized: the live crawler
+        * computes the slice first (it drives the network fetch) and hands
+        * it in so the superstep doesn't recompute the selection — and so
+        * the rows fetched and the rows processed are the same object, not
+        * merely deterministically equal. It must come from `selectReady`:
+        * the budget update reads its `tokens_avail` column. */
       preselected: Option[DataFrame] = None): StepResult = {
     import spark.implicits._
     // Config.smallStep: plan-time broadcast of state-bounded build sides
     def maybeB(df: DataFrame): DataFrame = if (cfg.smallStep) broadcast(df) else df
 
-    val sel = selectReady(spark, frontier, budgets, projects, now, cfg)
-    val selected = preselected.getOrElse(sel.selected)
-    val budgeted = sel.budgeted
-    val projRB = sel.projRB
+    val selected = preselected.getOrElse(
+      selectReady(spark, frontier, budgets, projects, now, cfg))
 
     // ---- J2 fetch join + F9 robots gate (checked at fetch time, like the
     // reference: a robots denial consumes the token and fails the fetch)
     val robotsSide = if (cfg.broadcastRobots) broadcast(robots) else robots
     // X6 decode happens HERE, once, and the raw html bytes never enter the
     // persisted frame (one materialization carries decoded text instead)
-    val fetched = selected
+    val paged = selected
       .join(pagesIdx, $"url_hash" === $"page_hash", "left_outer")
       // after redirect resolution (F11) the content lives at the FINAL url:
       // extraction resolves relative links against it (response.url
       // semantics); the task identity stays the ORIGINAL url
       .withColumn("final_url", coalesce($"page_url", $"url"))
       .drop("page_hash", "page_url", "redirect_hops")
-      .join(robotsSide, Seq("host"), "left_outer")
+    val fetched = withRobots(paged, robotsSide)
       .withColumn("robots_ok",
         if (cfg.respectRobots)
           // call_udf, not SQL-string splicing: a user agent containing a
@@ -522,7 +551,7 @@ object Superstep {
       .drop("robots_txt", "html")
       // persist, NOT a plan-truncating lazy localCheckpoint: a checkpointed
       // LogicalRDD keeps its source plan's attribute ids, which still
-      // appear in sibling frames (budgeted, frontier) — downstream joins
+      // appear in sibling frames (the selection, frontier) — downstream joins
       // then hit "conflicting references" the analyzer cannot deduplicate
       // (measured: INTERNAL_ERROR in the streaming batch path)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -724,13 +753,12 @@ object Superstep {
     // refill lazily from their stored last_update to the identical value
     // (and hosts that never consume never enter the state table at all)
     // `fetched` is row-identical to `selected` (left joins on unique keys)
-    // and persisted — aggregating it avoids recomputing the selection chain
-    val consumed = fetched.groupBy($"project", $"host").agg(count(lit(1)).as("consumed"))
-    val touched = consumed
-      .join(maybeB(budgeted), Seq("project", "host"), "left_outer")
-      .join(projRB, Seq("project"), "left_outer")
-      .select($"project", $"host",
-        (coalesce($"tokens_avail", $"p_burst", lit(cfg.defaultBurst)) - $"consumed").as("tokens"),
+    // and persisted — aggregating it avoids recomputing the selection chain.
+    // Every row of a (project, host) carries the same refilled
+    // `tokens_avail` from selectReady, so no budget state is read again
+    val touched = fetched.groupBy($"project", $"host")
+      .agg(max($"tokens_avail").as("tokens_avail"), count(lit(1)).as("consumed"))
+      .select($"project", $"host", ($"tokens_avail" - $"consumed").as("tokens"),
         RuntimeConst.stepConst(now).as("last_update"))
     val nextBudgets = budgets.join(maybeB(touched.select($"project", $"host")),
         Seq("project", "host"), "left_anti")

@@ -82,6 +82,34 @@ class CrawlSpec extends AnyFunSuite {
     assert(counts.sum <= 2.0 * 5 + 3)
   }
 
+  test("A7 budgets table after a step: a partly consumed bucket, a fresh bucket, an untouched host") {
+    // rate 1, burst 3. h0 holds 2 tokens from now0 and has 3 ready tasks: at
+    // now0 + 0.5 it refills to 2.5 and consumes floor(2.5) = 2. h2 has no
+    // state row (a full bucket) and consumes its one task. h1 has a state
+    // row and no ready task: its row is left exactly as stored.
+    def task(id: String, h: Long, host: String, exe: Double) =
+      ("p1", h, s"http://$host/$id", host, TaskStatus.Active, 0, exe,
+        3, 0, -1.0, null: String, false, false, false, s"http://$host/$id", "link", "",
+        0.0, now0, null: String, null: String, false)
+    val frontier = Seq(task("a", 1L, "h0.test", 0.0), task("b", 2L, "h0.test", 0.0),
+        task("c", 3L, "h0.test", 0.0), task("d", 4L, "h1.test", now0 + 100),
+        task("e", 5L, "h2.test", 0.0))
+      .toDF(Superstep.frontierCols: _*)
+    val budgets = Seq(("p1", "h0.test", 2.0, now0), ("p1", "h1.test", 0.5, now0 - 10))
+      .toDF("project", "host", "tokens", "last_update")
+    val (pagesIdx, robots) = emptyPages
+    val now = now0 + 0.5
+    for (small <- Seq(false, true)) {
+      val r = Superstep.run(spark, frontier, budgets, pagesIdx, robots, projectsDf(1.0, 3.0),
+        now, Superstep.Config(respectRobots = false, smallStep = small))
+      assert(r.scheduled == 3)
+      val got = r.budgets.as[(String, String, Double, Double)].collect().sortBy(_._2).toSeq
+      assert(got == Seq(("p1", "h0.test", 0.5, now), ("p1", "h1.test", 0.5, now0 - 10),
+        ("p1", "h2.test", 2.0, now)), s"smallStep=$small")
+      r.unpersistAll()
+    }
+  }
+
   test("W5 fair share caps per-project dispatch (heap aggregate == window fallback)") {
     // mixed priorities so the cap actually ranks (not just truncates)
     val frontier = mkFrontier((1 to 20).map(i => (s"t$i", i.toLong, i % 4, 0.0)))

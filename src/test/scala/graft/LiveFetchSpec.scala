@@ -17,6 +17,13 @@ class LiveFetchSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
 
+  /** Spark jobs of a one-step fixture `LiveCrawler.run`, bootstrap
+    * included: 30 measured. The same crawl ran 44 while the index embedded
+    * the redirect walk, the host schemes were a collect of their own, the
+    * robots rules were checkpointed and the budget update re-joined the
+    * budget state. */
+  private val JobCeiling = 30
+
   /** Start a fixture server on an ephemeral port; returns (server, base). */
   private def fixtureServer(): (HttpServer, String, java.util.concurrent.ConcurrentLinkedQueue[String]) = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -181,11 +188,73 @@ class LiveFetchSpec extends AnyFunSuite {
       val run = graft.fetch.LiveCrawler.run(spark, projects,
         Seq("p1" -> s"$base/start"), maxSteps = 3)
       assert(run.steps == 3)
+      // step 2's capture holds the 302 /redir -> /next: the walk resolves it
+      assert(run.frontier.where($"url" === s"$base/redir" && $"status" === 2).count() == 1)
+      assert(run.results.where($"url" === s"$base/redir").count() == 1)
       val perPath = seen.toArray.map(_.toString.takeWhile(_ != ' ')).toSeq
         .groupBy(identity).map { case (p, ps) => p -> ps.size }
       assert(perPath == Map("/robots.txt" -> 1, "/start" -> 1, "/next" -> 1, "/redir" -> 1),
         s"requests per path: $perPath")
     } finally server.stop(0)
+  }
+
+  test("live pages index: a redirect-free capture has no walk; a 3xx capture is walked once") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val (server, base, seen) = fixtureServer()
+    try {
+      def count(plan: LogicalPlan)(pf: PartialFunction[LogicalPlan, Unit]) =
+        plan.collect(pf).size
+      // no 3xx row: the index is the dedup aggregate over the capture
+      // checkpoint — no Join (the 5-hop walk) and one Aggregate
+      val (_, plain) = graft.fetch.LiveCrawler.pagesIndex(spark,
+        LiveFetch.fetchPages(spark, Seq(s"$base/start", s"$base/next").toDF("url")))
+      val p1 = plain.queryExecution.optimizedPlan
+      assert(count(p1) { case _: Join => } == 0, s"walk joins in a redirect-free index:\n$p1")
+      assert(count(p1) { case _: Aggregate => } == 1, s"aggregates:\n$p1")
+      assert(count(p1) { case _: LogicalRDD => } == 1, s"capture not read from its checkpoint:\n$p1")
+      assert(plain.where($"redirect_hops" === 0).count() == 2)
+
+      // a 3xx row: the walk runs over the capture checkpoint and is
+      // materialized, and it lands /redir on /next's content
+      val (_, walked) = graft.fetch.LiveCrawler.pagesIndex(spark,
+        LiveFetch.fetchPages(spark, Seq(s"$base/redir", s"$base/next").toDF("url")))
+      assert(walked.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+      val redir = walked.where($"page_hash" === xxhash64(expr(s"canonicalize_url('$base/redir')")))
+        .select($"redirect_hops", $"html").as[(Int, Array[Byte])].collect()
+      assert(redir.length == 1 && redir.head._1 == 1 &&
+        new String(redir.head._2, "UTF-8").contains("leaf"))
+      // each page was requested once per capture, however often the index
+      // was read
+      val perPath = seen.toArray.map(_.toString.takeWhile(_ != ' ')).toSeq
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+      assert(perPath == Map("/start" -> 1, "/next" -> 2, "/redir" -> 1), s"requests: $perPath")
+    } finally server.stop(0)
+  }
+
+  test("LiveCrawler: a one-step fixture crawl stays under its Spark job ceiling") {
+    val (server, base, _) = fixtureServer()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.fetch.LiveCrawler.run(spark, projects, Seq("p1" -> s"$base/start"), maxSteps = 1)
+      // drain the async listener bus before reading the count
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(10000L))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      server.stop(0)
+    }
+    // bootstrap, the selection and capture checkpoints, the robots probe
+    // and the fused carry commit, which also computes the redirect-free
+    // pages index
+    assert(jobs.get <= JobCeiling, s"${jobs.get} jobs")
   }
 
   test("live 304 echoes the STORED validators: a weak-form server echo (W/\"v1\") must not break the not_modified compare") {
@@ -283,6 +352,28 @@ class LiveFetchSpec extends AnyFunSuite {
     // /private stays unfetched in the frontier (robots denial -> retry ladder)
     assert(run.frontier.where($"url" === "https://dual.example/private" && $"status" === 2)
       .count() == 0)
+  }
+
+  test("LiveCrawler: robots rules are cached per (scheme, host); each url is gated by its own scheme's rules") {
+    // RFC 9309: http://both.example and https://both.example are two
+    // robots scopes. Their rules differ, and each must gate only its own urls
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val body = "<html><body>x</body></html>".getBytes("UTF-8")
+    val pages = Map(
+      "https://both.example/robots.txt" -> "User-agent: *\nDisallow: /a\n".getBytes("UTF-8"),
+      "http://both.example/robots.txt" -> "User-agent: *\nDisallow: /b\n".getBytes("UTF-8"),
+      "https://both.example/a" -> body, "https://both.example/b" -> body,
+      "http://both.example/a" -> body, "http://both.example/b" -> body)
+    val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
+    val run = graft.fetch.LiveCrawler.run(spark, projects,
+      Seq("https://both.example/a", "https://both.example/b", "http://both.example/a",
+        "http://both.example/b").map("p1" -> _), maxSteps = 1, fetch = fakeFetch(pages, log))
+    val reqs = log.toArray.map(_.toString).toSeq
+    assert(run.robotsFetches == 2)
+    assert(reqs.filterNot(_.endsWith("/robots.txt")).sorted ==
+      Seq("http://both.example/a", "https://both.example/b"), s"requests: $reqs")
+    assert(run.frontier.where($"status" === 2).select("url").as[String].collect().sorted.toSeq ==
+      Seq("http://both.example/a", "https://both.example/b"))
   }
 
   test("LiveCrawler: STOP-ed projects and drained resumes don't burn supersteps (RUNNING gate + initial done-check)") {
