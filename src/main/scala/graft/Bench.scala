@@ -30,8 +30,7 @@ object Bench {
     * vs `m` seen URLs. CPU-bound (codegen'd canonicalizer) + one shuffle per
     * stage — the shape that must scale N -> 4N. */
   def scheduleDedupJob(spark: SparkSession, n: Long, m: Long): Long = {
-    scheduleDedupPlan(spark, n, m,
-      sys.env.getOrElse("SPARK_GRAFT_DEDUP_VARIANT", "unionagg")).count()
+    scheduleDedupPlan(spark, n, m, "unionagg").count()
     n
   }
 
@@ -268,10 +267,8 @@ object Bench {
       pages.count()
       val projects = Seq(("bench", 1e9, 1e9)).toDF("name", "rate", "burst")
       val seeds = (0 until 1000).map(h => "bench" -> s"http://host$h.example.com/page/1")
-      val stepCfg = graft.sched.Superstep.Config(topKAggSelection =
-        sys.env.getOrElse("SPARK_GRAFT_TOPK", "1") != "0")
       val run = Crawler.run(spark0, pages, projects, seeds,
-        Crawler.CrawlConfig(maxSteps = 4, step = stepCfg), store)
+        Crawler.CrawlConfig(maxSteps = 4), store)
       val nRes = run.results.count()
       pages.unpersist()
       (run.totalScheduled, run.totalFresh, nRes, run.stepSeconds)
@@ -323,11 +320,7 @@ object Bench {
             f""""store_urls_per_sec":${rate}%.0f,"store_sec":${sec}%.2f,"store_step_sec":${st._4.map(x => f"$x%.2f").mkString("[", ",", "]")},"store_snapshots":${st._4.size}""")
         }
         // temp store cleanup (snapshots can reach hundreds of MB)
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => }
+        Udfs.deleteDir(dir)
         releaseAll(spark, gc = true)
       }
       // ---- superstep fixed cost: a near-empty graph's steps are ~pure
@@ -361,11 +354,7 @@ object Bench {
         if (crawlJson != "null" && run2.stepSeconds.size >= 2)
           crawlJson = spliceJson(crawlJson,
             f""""store_step_fixed_sec":${run2.stepSeconds.drop(1).min}%.2f""")
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir2).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => }
+        Udfs.deleteDir(dir2)
       } catch { case e: Throwable => System.err.println(s"[bench] fixed-cost probe died: $e") }
     } catch { case e: Throwable => System.err.println(s"[bench] crawl section died: $e") }
     releaseAll(spark, gc = true)
@@ -522,11 +511,7 @@ object Bench {
       val urls = run.totalScheduled + run.totalFresh
       storeLifeJson =
         f"""{"steps":${run.steps},"urls":$urls,"compact_step":$compactStep,"compaction_sec":${stepSecs.lift(compactStep - 1).getOrElse(-1.0)}%.2f,"pre_compact_median_sec":${median(pre)}%.2f,"post_compact_median_sec":${median(post)}%.2f,"snap_dirs_after_gc":$snapDirs,"snaps_committed":${run.steps + 1},"step_sec":${stepSecs.map(x => f"$x%.2f").mkString("[", ",", "]")}}"""
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
+      Udfs.deleteDir(dir)
     } catch { case e: Throwable => System.err.println(s"[bench] storelife section died: $e") }
     releaseAll(spark, gc = true)
 
@@ -549,15 +534,9 @@ object Bench {
       }
       spark.sparkContext.addSparkListener(listener)
       val (_, sec) = time {
-        scheduleDedupPlan(spark, n, n / 2,
-          sys.env.getOrElse("SPARK_GRAFT_DEDUP_VARIANT", "unionagg"),
-          hotHostShare = 0.5).count()
+        scheduleDedupPlan(spark, n, n / 2, "unionagg", hotHostShare = 0.5).count()
       }
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      } catch { case _: Throwable => Thread.sleep(500) }
+      Udfs.drainListenerBus(spark.sparkContext, 10000L)
       spark.sparkContext.removeSparkListener(listener)
       import scala.jdk.CollectionConverters._
       val byStage = recs.asScala.toSeq.groupBy(_.stage).toSeq.sortBy(_._1)

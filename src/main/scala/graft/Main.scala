@@ -10,16 +10,35 @@ import graft.sched.Crawler
  *
  *   runMain graft.Main crawl --pages <parquet dir|gen:H,P> --seeds <csv urls>
  *     [--project p1] [--steps 5] [--checkpoint dir] [--cpus 8]
- *     [--rate 1000] [--burst 1000] [--bloom 0]
+ *     [--rate 1000] [--burst 1000] [--seen-buckets 64]
  *   runMain graft.Main demo        # fixture-graph demo crawl, prints results
+ *
+ * An unknown mode or flag, or a flag without a value, exits with code 2.
  */
 object Main {
-  private def argMap(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
+  private val Flags = Set("pages", "seeds", "project", "steps", "checkpoint", "cpus",
+    "rate", "burst", "seen-buckets")
+
+  /** The `--flag value` pairs after the mode, or the first argument that is
+    * not a known flag followed by a value. */
+  private[graft] def parseArgs(args: Seq[String]): Either[String, Map[String, String]] =
+    args.grouped(2).foldLeft[Either[String, Map[String, String]]](Right(Map.empty)) {
+      case (Right(m), Seq(k, v)) if k.startsWith("--") && Flags(k.drop(2)) =>
+        Right(m + (k.drop(2) -> v))
+      case (Right(_), Seq(k)) if k.startsWith("--") && Flags(k.drop(2)) =>
+        Left(s"missing value for $k")
+      case (Right(_), k +: _) => Left(s"unknown option: $k")
+      case (err, _) => err
+    }
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("demo")
-    val a = argMap(args.drop(1))
+    val a = parseArgs(args.toSeq.drop(1)) match {
+      case Right(m) => m
+      case Left(err) =>
+        System.err.println(s"$err (flags: ${Flags.toSeq.sorted.map("--" + _).mkString(" ")})")
+        sys.exit(2)
+    }
     val cpus = a.getOrElse("cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).toInt
     val spark = Udfs.newSession(s"local[$cpus]", cpus, "graft-crawl")
     import spark.implicits._

@@ -46,11 +46,7 @@ object ScalingRun {
     // p=32 attribute the residue to the shared driver, not executor work
     println("STORE_STEPS " +
       run.stepSeconds.map(x => f"$x%.2f").mkString("[", ",", "]"))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => }
+    Udfs.deleteDir(dir)
     (urls, sec)
   }
 
@@ -230,13 +226,8 @@ object ScalingRun {
       val sec = (System.nanoTime() - t0) / 1e9
       // listener events are posted async — drain the bus deterministically
       // before reading the SHW/SHR deltas (a fixed sleep under-counts on a
-      // loaded VM and bleeds late events into the next rep). waitUntilEmpty
-      // is private[spark] source-side but public bytecode, hence reflection.
-      try {
-        val bus = s.sparkContext.getClass.getMethod("listenerBus").invoke(s.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(5000L))
-      } catch { case _: Throwable => Thread.sleep(200) }
+      // loaded VM and bleeds late events into the next rep)
+      Udfs.drainListenerBus(s.sparkContext, 5000L)
       (sec, shW.get - w0, shR.get - r0, stages.synchronized(stages.slice(i0, stages.size).toList))
     }
     val (best, bw, br, bestStages) = measured.minBy(_._1)

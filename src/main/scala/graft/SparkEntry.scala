@@ -51,7 +51,7 @@ object SparkEntry {
     * rows, 1-4 supersteps): AQE off + one shuffle partition. At this scale
     * every AQE exchange materializes as its own stage-job (~40-50 ms of
     * driver planning/scheduling each; a superstep has ~20 exchanges =
-    * ~1-2 s of pure fixed cost per step — measured with StepProbe), while
+    * ~1-2 s of pure fixed cost per step), while
     * AQE's actual benefits (partition coalescing, skew splitting, join
     * re-planning) need data volumes these oracle fixtures never reach.
     * Guide §1.2: size the configuration to the data. Production-scale paths
@@ -65,7 +65,6 @@ object SparkEntry {
     * conf — a lazily-returned DataFrame evaluates under the restored conf,
     * which only touches the tiny post-crawl projection. */
   private def withFixtureConf[A](s: SparkSession)(f: => A): A = {
-    if (sys.env.getOrElse("SPARK_GRAFT_FIXTURE_CONF", "1") == "0") return f
     val conf = s.conf
     val keys = Seq(
       // AQE OFF for fixture-sized crawls (r06): with the small-step
@@ -74,13 +73,9 @@ object SparkEntry {
       // materialization cadence — measured c5 4.4s -> 3.4s, c3 21.6 -> 13.3
       // with it off. Production-scale paths keep AQE on (this wrapper never
       // touches them).
-      "spark.sql.adaptive.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_FIXTURE_AQE", "false"),
+      "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> "1",
-      "spark.sql.leafNodeDefaultParallelism" -> "1") ++
-      sys.env.get("SPARK_GRAFT_FIXTURE_EXTRA").toSeq
-        .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+      "spark.sql.leafNodeDefaultParallelism" -> "1")
     val prev = keys.map { case (k, _) => k -> conf.getOption(k) }
     keys.foreach { case (k, v) => conf.set(k, v) }
     try f
@@ -184,20 +179,13 @@ object SparkEntry {
       }
       val out = ((f.collect().toSeq, f.schema),
         snap.counterTotals.getOrElse("p1", Map.empty), lineage)
-      deleteDir(rootDir) // everything is collected; the scratch store can go
+      Udfs.deleteDir(rootDir) // everything is collected; the scratch store can go
       out
     })
   }
 
   private val c6Memo =
     new java.util.concurrent.ConcurrentHashMap[Int, RowsAndSchema]()
-
-  private def deleteDir(p: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    } catch { case _: Throwable => }
 
   // ---- shared synthesized inputs (kept textually parallel to the oracle SQL)
   private def urlsFromEvents(ev: DataFrame): DataFrame =
@@ -436,10 +424,9 @@ object SparkEntry {
       val frontier = Crawler.seedFrontierDf(s,
         (0 until 20).map(i => ("p1", s"http://h0.test/p/$i")).toDF("project", "raw_url"), 0.0)
       val projects = Seq(("p1", 1e9, 1e9)).toDF("name", "rate", "burst")
-      // lazy counters + localCheckpoint: one action under the fixture conf
+      // localCheckpoint: one action under the fixture conf
       val r = graft.sched.Superstep.run(s, frontier, Crawler.emptyBudgets(s), idx, robots,
-        projects, 1.0, graft.sched.Superstep.Config(respectRobots = false,
-          collectCounters = false, smallStep = true))
+        projects, 1.0, graft.sched.Superstep.Config(respectRobots = false, smallStep = true))
       r.frontier.selectExpr("url", "status", "method", "data").orderBy("url").localCheckpoint()
     }),
 
@@ -933,11 +920,9 @@ object SparkEntry {
             .when($"i" % 4 === 3, lit("lmx")))
         .drop("i")
       val projects = Seq(("p1", 1e9, 1e9)).toDF("name", "rate", "burst")
-      // lazy counters + localCheckpoint: ONE materialization action under
-      // the fixture conf (was two — the counters collect then the count)
+      // localCheckpoint: ONE materialization action under the fixture conf
       val r = graft.sched.Superstep.run(s, frontier, Crawler.emptyBudgets(s), idx, robots,
-        projects, 1.0, graft.sched.Superstep.Config(respectRobots = false,
-          collectCounters = false, smallStep = true))
+        projects, 1.0, graft.sched.Superstep.Config(respectRobots = false, smallStep = true))
       r.upserts.join(
           r.newResults.select($"project", $"url_hash").withColumn("got_result", lit(true)),
           Seq("project", "url_hash"), "left_outer")
@@ -972,16 +957,15 @@ object SparkEntry {
       val frontier0 = Crawler.seedFrontierDf(s, seeds, 0.0)
         .withColumn("priority", regexp_extract($"url", "/p/([0-9]+)$", 1).cast("int"))
       val projects = Seq(("p1", 2.0, 3.0), ("p2", 1.0, 2.0)).toDF("name", "rate", "burst")
-      // lazy counters: this loop never reads them — one action per step
-      val cfg = graft.sched.Superstep.Config(respectRobots = false,
-        collectCounters = false, smallStep = true)
+      // the counters stay lazy (never read): one action per step
+      val cfg = graft.sched.Superstep.Config(respectRobots = false, smallStep = true)
       var frontier = frontier0
       var budgets = Crawler.emptyBudgets(s)
       (1 to 3).foreach { step =>
         val r = graft.sched.Superstep.run(s, frontier, budgets, idx, robots,
           projects, step.toDouble, cfg)
-        val (f2, b2, _) = Crawler.checkpointCarry(r.frontier, r.budgets,
-          Crawler.emptyResults(s))
+        val (f2, b2, _, _, _) = Crawler.checkpointCarryFused(r.frontier, r.budgets,
+          Crawler.emptyResults(s), None, None)
         frontier = f2; budgets = b2
         r.unpersistAll()
       }
@@ -1009,16 +993,15 @@ object SparkEntry {
         .withColumn("exetime",
           regexp_extract($"url", "/p/([0-9]+)$", 1).cast("double"))
       val projects = Seq(("p1", 1e9, 1e9)).toDF("name", "rate", "burst")
-      // lazy counters: this loop never reads them — one action per step
-      val cfg = graft.sched.Superstep.Config(respectRobots = false,
-        collectCounters = false, smallStep = true)
+      // the counters stay lazy (never read): one action per step
+      val cfg = graft.sched.Superstep.Config(respectRobots = false, smallStep = true)
       var frontier = frontier0
       var budgets = Crawler.emptyBudgets(s)
       (1 to 3).foreach { step =>
         val r = graft.sched.Superstep.run(s, frontier, budgets, idx, robots,
           projects, step.toDouble, cfg)
-        val (f2, b2, _) = Crawler.checkpointCarry(r.frontier, r.budgets,
-          Crawler.emptyResults(s))
+        val (f2, b2, _, _, _) = Crawler.checkpointCarryFused(r.frontier, r.budgets,
+          Crawler.emptyResults(s), None, None)
         frontier = f2; budgets = b2
         r.unpersistAll()
       }
@@ -1043,10 +1026,9 @@ object SparkEntry {
         (p, s"http://h0.test/p/$i")).toDF("project", "raw_url")
       val frontier = Crawler.seedFrontierDf(s, seeds, 0.0)
       val projects = Seq(("known", 1e9, 1e9)).toDF("name", "rate", "burst")
-      // lazy counters + localCheckpoint: one action under the fixture conf
+      // localCheckpoint: one action under the fixture conf
       val r = graft.sched.Superstep.run(s, frontier, Crawler.emptyBudgets(s), idx, robots,
-        projects, 1.0, graft.sched.Superstep.Config(respectRobots = false,
-          collectCounters = false, smallStep = true))
+        projects, 1.0, graft.sched.Superstep.Config(respectRobots = false, smallStep = true))
       r.frontier.selectExpr("project", "url", "status",
           "cast(lastcrawltime as int) as fetched_step")
         .orderBy("project", "url").localCheckpoint()
@@ -1071,9 +1053,9 @@ object SparkEntry {
         .toDF("project", "raw_url")
       val frontier = Crawler.seedFrontierDf(s, seeds, 0.0)
       val projects = Seq(("p1", 1e9, 1e9)).toDF("name", "rate", "burst")
-      // lazy counters + localCheckpoint: one action under the fixture conf
+      // localCheckpoint: one action under the fixture conf
       val r = graft.sched.Superstep.run(s, frontier, Crawler.emptyBudgets(s), idx, robots,
-        projects, 1.0, graft.sched.Superstep.Config(collectCounters = false, smallStep = true))
+        projects, 1.0, graft.sched.Superstep.Config(smallStep = true))
       r.upserts.join(
           r.newResults.select($"project", $"url_hash").withColumn("got_result", lit(true)),
           Seq("project", "url_hash"), "left_outer")
@@ -1143,9 +1125,9 @@ object SparkEntry {
         .toDF("project", "raw_url")
       val frontier = Crawler.seedFrontierDf(s, seeds, 0.0)
       val projects = Seq(("p1", 1e9, 1e9)).toDF("name", "rate", "burst")
-      // lazy counters + localCheckpoint: one action under the fixture conf
+      // localCheckpoint: one action under the fixture conf
       val r = graft.sched.Superstep.run(s, frontier, Crawler.emptyBudgets(s), idx, robots,
-        projects, 1.0, graft.sched.Superstep.Config(collectCounters = false, smallStep = true))
+        projects, 1.0, graft.sched.Superstep.Config(smallStep = true))
       r.upserts.select($"url", $"status", $"retried").orderBy("url").localCheckpoint()
     }),
 
@@ -1184,7 +1166,7 @@ object SparkEntry {
         val f = store.read(s).get.frontier
           .selectExpr("project", "url", "status", "retried").orderBy("url")
         val out = (f.collect().toSeq, f.schema)
-        deleteDir(rootDir)
+        Udfs.deleteDir(rootDir)
         out
       })
       s.createDataFrame(new java.util.ArrayList(scala.jdk.CollectionConverters
@@ -1280,8 +1262,7 @@ object SparkEntry {
       // lazy counters + the packed rows fused into the carry checkpoint:
       // ONE materialization action per superstep (was three — counters
       // collect, packed localCheckpoint, carry)
-      val cfg = graft.sched.Superstep.Config(respectRobots = false,
-        collectCounters = false, smallStep = true)
+      val cfg = graft.sched.Superstep.Config(respectRobots = false, smallStep = true)
       val tick = 43200.0
       var frontier = frontier0
       var budgets = Crawler.emptyBudgets(s)

@@ -149,11 +149,7 @@ object Udfs {
         ls.iterator().forEachRemaining { p =>
           try {
             if (p.getFileName.toString.startsWith("graft-") &&
-                java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff) {
-              import scala.jdk.CollectionConverters._
-              java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-                .foreach(f => java.nio.file.Files.deleteIfExists(f))
-            }
+                java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff) deleteDir(p)
           } catch { case _: Throwable => }
         }
       } finally ls.close()
@@ -161,6 +157,14 @@ object Udfs {
     java.nio.file.Files.createTempDirectory(owned,
       if (prefix.startsWith("graft-")) prefix else s"graft-$prefix")
   }
+
+  /** Best-effort recursive delete of a scratch directory. */
+  def deleteDir(p: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(f => java.nio.file.Files.deleteIfExists(f))
+    } catch { case _: Throwable => }
 
   /** Default heap of a forked JVM: half of RAM (`MemTotal`), clamped to
     * 2-8 GB — the same default build.sbt gives SPARK_DRIVER_MEM. */
@@ -172,6 +176,17 @@ object Udfs {
     }.getOrElse(0L)
     s"${math.min(8L, math.max(2L, kb / 2097152))}g"
   }
+
+  /** Wait up to `timeoutMs` until every posted listener event has been
+    * delivered: events reach listeners asynchronously, so counts read right
+    * after an action can miss its last events. The bus is private[spark] in
+    * source but public in bytecode, hence reflection. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(timeoutMs))
+    } catch { case _: Throwable => Thread.sleep(500) }
 
   /** Session factory used by mains/tests: graft extensions + UDFs + sane
     * local-mode scale defaults (AQE on, shuffle partitions = cores). */
@@ -190,7 +205,7 @@ object Udfs {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Spark 4's runtime row-level bloom filter injection for shuffle joins
       // (SURVEY §4: evaluate before hand-rolling) — complements the explicit
@@ -210,12 +225,13 @@ object Udfs {
       // LOCAL SESSIONS ONLY: on a real multi-tenant cluster, per-session
       // artifact isolation is a correctness/hygiene boundary between
       // sessions sharing executors — re-evaluate before copying this
-      // default into any shared-cluster deployment (env-overridable here).
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
-    // free-form conf passthrough (semicolon-separated k=v) — lets bench
-    // experiments A/B a shuffle codec / memory-mode setting without a
-    // rebuild; empty by default so driver runs are untouched
+      // default into any shared-cluster deployment
+      // (SPARK_GRAFT_CONF=spark.sql.artifact.isolation.enabled=true).
+      .config("spark.sql.artifact.isolation.enabled", "false")
+    // free-form conf passthrough (semicolon-separated k=v), applied last so
+    // it overrides any conf above — lets bench experiments A/B a setting
+    // (AQE, a shuffle codec, artifact isolation) without a rebuild; empty by
+    // default so driver runs are untouched
     val withExtra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .foldLeft(spark) { (b, kv) =>

@@ -47,15 +47,18 @@ object LiveCrawler {
       maxSteps: Int, cfg: Superstep.Config = Superstep.Config(),
       now0: Double = 1700000000.0, tick: Double = 1.0,
       robotsTtlSeconds: Double = 3600.0,
-      /** url-list -> pages-schema capture; swap for a fixture in tests */
-      fetch: (SparkSession, DataFrame) => DataFrame =
-        (s, urls) => LiveFetch.fetchPages(s, urls),
+      /** url-list -> pages-schema capture; swap for a fixture in tests.
+        * null = [[LiveFetch.fetchPages]] sending `cfg.userAgent`, the agent
+        * the robots gate matches rules for */
+      fetch: (SparkSession, DataFrame) => DataFrame = null,
       /** optional COW snapshot store — the live deployment mode: same
         * bootstrap/commit/resume protocol as [[Crawler.run]], so a killed
         * live crawl resumes from the last committed snapshot and the J1
         * seen-probe runs against the bucketed bloom index */
       store: Option[graft.frontier.SnapshotStore] = None): Crawler.CrawlRun = {
     import spark.implicits._
+    val fetchFn: (SparkSession, DataFrame) => DataFrame = Option(fetch).getOrElse(
+      (s, urls) => LiveFetch.fetchPages(s, urls, userAgent = cfg.userAgent))
 
     // (scheme, host) -> (capturedAtVirtualTime, robots bytes | null = allow-all)
     val robotsCache = scala.collection.mutable.Map.empty[(String, String), (Double, Array[Byte])]
@@ -96,7 +99,7 @@ object LiveCrawler {
         val stale = pairs.filter(fresh(_).isEmpty)
         if (stale.nonEmpty) {
           robotsFetches += stale.size
-          val captured = fetch(spark, stale.map { case (s, h) => s"$s://$h/robots.txt" }
+          val captured = fetchFn(spark, stale.map { case (s, h) => s"$s://$h/robots.txt" }
               .toDF("url")).select("url", "html").collect()
             .map(r => robotsKey(r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
           stale.foreach(k => robotsCache(k) = (now, captured.getOrElse(k, null)))
@@ -136,7 +139,7 @@ object LiveCrawler {
 
       // ---- live content capture of the selected, robots-allowed slice
       val (capture, pagesIdx) = pagesIndex(spark,
-        fetch(spark, fetchTargets.select("url", "etag", "last_modified")))
+        fetchFn(spark, fetchTargets.select("url", "etag", "last_modified")))
       driver.step(pagesIdx, rules, cfg, preselected = Some(selected),
         checkpoints = Seq(selected, capture, pagesIdx))
     }

@@ -107,10 +107,12 @@ object LiveFetch {
    * @param urls DataFrame with a `url` column and OPTIONAL `etag` /
    *   `last_modified` columns carrying each task's stored validators (the
    *   frontier's conditional-fetch state) — absent columns mean plain GETs.
+   * @param userAgent sent as `User-Agent`; the robots gate must match rules
+   *   for the same agent (`Superstep.Config.userAgent`)
    */
   def fetchPages(spark: SparkSession, urls: DataFrame,
       timeoutMs: Int = 5000, maxBytes: Int = 4 << 20,
-      userAgent: String = "graft-spider"): DataFrame = {
+      userAgent: String = graft.sched.Superstep.DefaultUserAgent): DataFrame = {
     import spark.implicits._
     val withValidators = urls
       .withColumn("__etag",

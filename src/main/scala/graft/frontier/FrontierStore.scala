@@ -58,12 +58,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
       * existing callers still compile. */
     bloomItemsPerBucket: Long = 1L << 22,
     bloomFpp: Double = 0.01,
-    compactEvery: Int = 32,
-    /** At compaction, drop all rows (and seen keys) of projects whose
-      * ACTIVE set has drained to zero — the reference deletes a FINISHED
-      * project's taskdb (scheduler.py:348-374 delete_project); without this
-      * dead projects accumulate in the frontier forever at 100x scale. */
-    dropDrainedOnCompact: Boolean = true) extends SnapshotStore {
+    compactEvery: Int = 32) extends SnapshotStore {
   private val root: Path = Paths.get(rootDir)
   Files.createDirectories(root)
 
@@ -201,11 +196,11 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
     import scala.concurrent.duration.Duration
     implicit val writeEc: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    // counters may arrive LAZY (Superstep collectCounters=false): collect on
-    // a concurrent future started before any write job, so the counters
+    // the counters arrive as the superstep's lazy aggregate: collect on a
+    // concurrent future started before any write job, so the counters
     // aggregate's driver planning + stage waves overlap the commit's write
     // jobs instead of costing their own serial action. A LocalRelation
-    // counters frame (eager callers, tests) resolves in microseconds here.
+    // counters frame (the bootstrap's empty one) resolves in microseconds.
     val fCounterRows = Future(counters.collect())
     val fBudgets = Future {
       budgets.coalesce(math.max(1, numPartitions / 8))
@@ -312,22 +307,24 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
               .unionByName(up)
         }
         // FINISHED-project cleanup: at compaction a project with zero
-        // ACTIVE rows has drained — drop all its rows. This matches the
-        // reference EXACTLY: when a project's unfinished count reaches 0
-        // the scheduler sets status FINISHED and calls taskdb.drop
-        // (scheduler.py:372-373) — drain IS deletion there too, and a
-        // re-seeded URL after the drop is legitimately brand-new. Projects
-        // with ACTIVE work (incl. STOP-ed ones awaiting re-activation)
-        // keep their full row set.
+        // ACTIVE rows has drained — drop all its rows (and, below, its seen
+        // keys and results). This matches the reference EXACTLY: when a
+        // project's unfinished count reaches 0 the scheduler sets status
+        // FINISHED and calls taskdb.drop (scheduler.py:348-374
+        // delete_project) — drain IS deletion there too, and a re-seeded
+        // URL after the drop is legitimately brand-new; without it dead
+        // projects accumulate in the frontier forever. Projects with ACTIVE
+        // work (incl. STOP-ed ones awaiting re-activation) keep their full
+        // row set.
         val merged1 =
-          if (full && dropDrainedOnCompact)
+          if (full)
             // compaction reads every live bucket; persist so the ACTIVE-
             // project scan and the partitionBy write don't both re-read
             // the whole frontier from parquet
             merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else merged0
         val mergedTouched =
-          if (full && dropDrainedOnCompact) {
+          if (full) {
             val act = merged1.where(col("status") === graft.model.TaskStatus.Active)
               .select("project").distinct()
             keepProjects = Some(act)
@@ -352,25 +349,13 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
         if (!Files.exists(d)) Map.empty
         else {
           import scala.jdk.CollectionConverters._
-          val conf = spark.sessionState.newHadoopConf()
           val ls = Files.list(d)
-          val bucketDirs = try ls.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("bucket=")).toList
-            finally ls.close()
-          bucketDirs.map { bd =>
-            val b = bd.getFileName.toString.stripPrefix("bucket=").toInt
-            val fs = Files.list(bd)
-            val rows = try fs.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .map { f =>
-                val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                  new org.apache.hadoop.fs.Path(f.toUri), conf)
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-                try r.getRecordCount finally r.close()
-              }.sum
-              finally fs.close()
-            b -> rows
-          }.toMap
+          try ls.iterator().asScala
+            .filter(_.getFileName.toString.startsWith("bucket="))
+            .map(bd => bd.getFileName.toString.stripPrefix("bucket=").toInt ->
+              FrontierStore.footerRowCount(spark, bd))
+            .toMap
+          finally ls.close()
         }
       }
     val fFrontier = Future(frontierSection())
@@ -470,8 +455,8 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
       else prev.map(_.resultSnaps).getOrElse(Seq.empty) ++
         (if (hasResults) Seq(id) else Seq.empty)
 
-    // ---- manifest + atomic commit. The counters frame is a LocalRelation
-    // (Superstep collects it once) — sort on the driver instead of paying a
+    // ---- manifest + atomic commit. The counter rows were collected above
+    // (one row per project) — sort on the driver instead of paying a
     // SortExec job per snapshot for a handful of rows.
     val counterRowsC = Await.result(fCounterRows, Duration.Inf)
       .sortBy(_.getAs[String]("project"))

@@ -21,15 +21,12 @@ object Crawler {
       /** deterministic virtual clock: now = now0 + step*tick */
       now0: Double = 1700000000.0,
       tick: Double = 1.0,
-      maxSteps: Int = 10,
-      /** robots gate join is broadcast only while the robots table stays
-        * under this host count; beyond it (web scale: one row per host) it
-        * falls back to a shuffle join keyed by host */
-      broadcastRobotsMaxHosts: Long = 100000L,
-      /** storage level for the prepared pages index (html bytes); DISK_ONLY
-        * keeps a large pages table out of executor heap */
-      pagesStorage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      maxSteps: Int = 10)
+
+  /** The robots gate join is broadcast only while the robots table stays
+    * under this host count; beyond it (web scale: one row per host) it
+    * falls back to a shuffle join keyed by host. */
+  private val BroadcastRobotsMaxHosts = 100000L
 
   final case class CrawlRun(
       steps: Int,
@@ -89,24 +86,9 @@ object Crawler {
       .where($"rn" === 1).drop("rn")
   }
 
-  /** Materialize a step's three carry frames (frontier, budgets, results)
-    * in ONE localCheckpoint job: tag-union into a superset schema, split
-    * back with narrow filters over the checkpointed rows. The three
-    * separate eager checkpoints each paid their own plan + job-submission
-    * round per superstep — pure fixed cost that dominates fixture-sized and
-    * politeness-bound steps (guide §1.2: the per-step constant IS the
-    * bottleneck at small step sizes). Values are unchanged: tags are
-    * disjoint, the split filters recover exactly the input rows, so
-    * determinism (x13) and every oracle hold. */
-  private[graft] def checkpointCarry(frontier: DataFrame, budgets: DataFrame,
-      results: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val (f2, b2, r2, _, _) = checkpointCarryFused(frontier, budgets, results, None, None)
-    (f2, b2, r2)
-  }
-
-  /** The tagged-union plan the fused carry materializes (also read by the
-    * PlanDump dev harness — plan-shape inspection without running it). */
-  private[graft] def carryUnion(frontier: DataFrame, budgets: DataFrame,
+  /** The tagged-union plan the fused carry materializes: one leg per frame,
+    * tagged 0 frontier, 1 budgets, 2 results, 3 counters, 4 packed. */
+  private def carryUnion(frontier: DataFrame, budgets: DataFrame,
       results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame]): DataFrame = {
     val fc = Superstep.frontierCols
     val fSchema = graft.frontier.FrontierStore.frontierSchema
@@ -145,16 +127,22 @@ object Crawler {
     (Seq(fPart, bPart, rPart) ++ cPart ++ pPart).reduce(_ unionByName _)
   }
 
-  /** [[checkpointCarry]] with optional extra legs fused into the SAME
-    * one-job materialization (guide §1.2: at small step sizes every extra
-    * action is a full round of driver planning + AQE stage waves — measured
-    * ~20 stage-jobs for the counters action alone):
-    *  - `counters` (tag 3): the step's LAZY counters aggregate
-    *    (Superstep.Config.collectCounters=false) rides the checkpoint as
+  /** Materialize a step's three carry frames (frontier, budgets, results)
+    * in ONE localCheckpoint job: tag-union into a superset schema, split
+    * back with narrow filters over the checkpointed rows. Separate eager
+    * checkpoints would each pay their own plan + job-submission round per
+    * superstep — pure fixed cost that dominates fixture-sized and
+    * politeness-bound steps (guide §1.2: the per-step constant IS the
+    * bottleneck at small step sizes). Values are unchanged: tags are
+    * disjoint, the split filters recover exactly the input rows, so
+    * determinism (x13) and every oracle hold. Optional extra legs ride the
+    * same job:
+    *  - `counters` (tag 3): the step's lazy counters aggregate
+    *    ([[Superstep.StepResult.counters]]) rides the checkpoint as
     *    (project, counter name -> value in the r_data map slot); the
     *    returned Rows are recovered by name with a narrow filter-collect
-    *    over the already-cached checkpoint RDD — values identical to the
-    *    eager collect (same aggregate plan, same input), only the action
+    *    over the already-cached checkpoint RDD — values identical to a
+    *    separate collect (same aggregate plan, same input), only the action
     *    count changes. A null sum travels as 0.
     *  - `packed` (tag 4): a (step,url,status,retried,exetime) projection
     *    (p7's per-step trajectory rows); `step` travels in the priority
@@ -239,13 +227,14 @@ object Crawler {
       seeds: Seq[(String, String)], cfg: CrawlConfig,
       store: Option[SnapshotStore] = None): CrawlRun = {
     val (pagesIdx, robots) = Superstep.preparePages(spark, pages)
-    pagesIdx.persist(cfg.pagesStorage)
+    // persist() is MEMORY_AND_DISK: html bytes spill instead of recomputing
+    pagesIdx.persist()
     robots.persist()
     // size-gate the robots broadcast ONCE per crawl (robots is persisted, the
     // count is one cheap scan): at web scale (one row per host) an
     // unconditional broadcast would OOM the driver/executors
     val stepCfg = cfg.step.copy(broadcastRobots =
-      cfg.step.broadcastRobots && robots.count() <= cfg.broadcastRobotsMaxHosts)
+      cfg.step.broadcastRobots && robots.count() <= BroadcastRobotsMaxHosts)
     val driver = new StepDriver(spark, projects, store, cfg.now0, cfg.tick, seeds,
       terminates = true)
     while (!driver.done && driver.steps < cfg.maxSteps) driver.step(pagesIdx, robots, stepCfg)

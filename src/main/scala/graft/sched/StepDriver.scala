@@ -125,7 +125,7 @@ private[graft] final class StepDriver(spark: SparkSession, projects: DataFrame,
     val small = stateRows < SmallStepRows
     val r = Superstep.run(spark, seedMerge.fold(frontierDf)(_.frontier), budgetsDf,
       pagesIdx, robots, projects, now,
-      cfg.copy(collectCounters = false, smallStep = small),
+      cfg.copy(smallStep = small),
       store.flatMap(_.seenFilter(spark)), seedMerge.map(_.seen), preselected)
     stepNo += 1
     // r.firstResults is the first-writer-wins delta (REPLACE INTO,

@@ -22,8 +22,12 @@ import graft.model.TaskStatus
  */
 object Superstep {
 
+  /** The crawler's User-Agent: sent with every live request and matched
+    * against robots.txt groups by the F9 gate, so both see one name. */
+  val DefaultUserAgent = "graftbot/1.0"
+
   final case class Config(
-      userAgent: String = "graftbot/1.0",
+      userAgent: String = DefaultUserAgent,
       defaultRate: Double = 1.0,
       defaultBurst: Double = 3.0,
       /** ≤0 disables the per-project fair-share cap (scheduler.py:331). */
@@ -59,17 +63,7 @@ object Superstep {
         * politeness-small live regime — the deployment mode where per-step
         * fixed cost dominates (VERDICT r05) — gets the small plan at any
         * corpus scale. */
-      smallStep: Boolean = false,
-      /** Eagerly collect the step's counters inside [[run]] (one action that
-        * also materializes the persisted intermediates). `false` = the
-        * counters frame stays LAZY and `counterRows`/`scheduled`/`fresh`/
-        * `doneSuccess`/`failed` are NOT populated (0/Nil) — callers fuse the
-        * counters aggregate into their own materialization action instead
-        * (Crawler's carry checkpoint / FrontierStore's commit), because at
-        * small step sizes every extra action is a full round of driver
-        * planning + AQE stage scheduling (guide §1.2: per-step fixed cost is
-        * the bottleneck; measured ~20 stage-jobs per superstep action). */
-      collectCounters: Boolean = true)
+      smallStep: Boolean = false)
 
   final case class StepResult(
       frontier: DataFrame,
@@ -87,24 +81,17 @@ object Superstep {
         * (REPLACE-INTO dedup semantics, resultdb.py:52-66, at O(step)
         * instead of O(history) per superstep). */
       firstResults: DataFrame,
+      /** per-project counters of this step, a LAZY aggregate: the crawl
+        * loops fuse it into their own materialization action (the carry
+        * checkpoint, or the store commit) instead of paying one of its own */
       counters: DataFrame,
-      scheduled: Long,
-      fresh: Long,
-      /** selected tasks that reached terminal SUCCESS this step (excludes
-        * auto_recrawl successes, which stay ACTIVE) */
-      doneSuccess: Long = 0L,
-      /** selected tasks that exhausted retries -> FAILED this step */
-      failed: Long = 0L,
-      /** collected per-project counter rows (same data as `counters`) —
-        * callers fold these directly instead of re-collecting */
-      counterRows: Seq[org.apache.spark.sql.Row] = Nil,
       /** full frontier rows to insert-or-replace (updated selected rows +
         * fresh inserts) — the copy-on-write store's write unit */
-      upserts: DataFrame = null,
+      upserts: DataFrame,
       /** (project, url_hash) of the fresh inserts — seen-index delta */
-      freshKeys: DataFrame = null,
+      freshKeys: DataFrame,
       /** intermediate persisted frames — caller unpersists after materializing */
-      cached: Seq[DataFrame] = Nil) {
+      cached: Seq[DataFrame]) {
     def unpersistAll(): Unit = cached.foreach { df =>
       // lazily-localCheckpointed frames persist their RDD directly (no
       // CacheManager entry) — release the underlying RDD, not the Dataset
@@ -834,33 +821,8 @@ object Superstep {
         counterCols.tail.map(c => sum(col(c)).as(c)): _*)
       .withColumn("deduped", $"candidates" - $"new_tasks")
 
-    // ONE action materializes every persisted intermediate and yields all
-    // step totals (instead of separate count() jobs per metric). When the
-    // caller opts out (collectCounters=false) the counters frame stays lazy
-    // and the caller's own materialization action computes it.
-    if (cfg.collectCounters) {
-      val counterRows = countersDf.collect()
-      // LocalRelation, not parallelize(...,1): every downstream consumer of
-      // the counters frame (store manifest fold, bench step accounting)
-      // collects it again — a LocalRelation collect is driver-only planning,
-      // a parallelized RDD collect is a real 1-task job per step
-      val counters = spark.createDataFrame(
-        java.util.Arrays.asList(counterRows: _*), countersDf.schema)
-      val scheduledCnt = counterRows.map(_.getAs[Long]("scheduled")).sum
-      val freshCnt = counterRows.map(_.getAs[Long]("new_tasks")).sum
-      val doneCnt = counterRows.map(_.getAs[Long]("done_success")).sum
-      val failedCnt = counterRows.map(_.getAs[Long]("failed_now")).sum
-
-      StepResult(merged, nextBudgets, newResults, firstResults, counters, scheduledCnt, freshCnt,
-        doneSuccess = doneCnt, failed = failedCnt,
-        counterRows = counterRows.toIndexedSeq,
-        upserts = updatedFull.unionByName(fresh.select(frontierCols.map(col): _*)),
-        freshKeys = fresh.select($"project", $"url_hash"),
-        cached = Seq(fetched, flagged) ++ stepCached.result())
-    } else
-      StepResult(merged, nextBudgets, newResults, firstResults, countersDf, 0L, 0L,
-        upserts = updatedFull.unionByName(fresh.select(frontierCols.map(col): _*)),
-        freshKeys = fresh.select($"project", $"url_hash"),
-        cached = Seq(fetched, flagged) ++ stepCached.result())
+    StepResult(merged, nextBudgets, newResults, firstResults, countersDf,
+      updatedFull.unionByName(fresh.select(frontierCols.map(col): _*)),
+      fresh.select($"project", $"url_hash"), Seq(fetched, flagged) ++ stepCached.result())
   }
 }

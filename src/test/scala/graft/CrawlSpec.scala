@@ -71,7 +71,7 @@ class CrawlSpec extends AnyFunSuite {
       val now = now0 + s
       val r = Superstep.run(spark, f, budgets, pagesIdx, robots,
         projectsDf(2.0, 3.0), now, Superstep.Config(respectRobots = false))
-      perStep += r.scheduled
+      perStep += StepCounters.total(r, "scheduled")
       f = r.frontier.localCheckpoint(); budgets = r.budgets.localCheckpoint()
       r.unpersistAll()
     }
@@ -102,7 +102,7 @@ class CrawlSpec extends AnyFunSuite {
     for (small <- Seq(false, true)) {
       val r = Superstep.run(spark, frontier, budgets, pagesIdx, robots, projectsDf(1.0, 3.0),
         now, Superstep.Config(respectRobots = false, smallStep = small))
-      assert(r.scheduled == 3)
+      assert(StepCounters.total(r, "scheduled") == 3)
       val got = r.budgets.as[(String, String, Double, Double)].collect().sortBy(_._2).toSeq
       assert(got == Seq(("p1", "h0.test", 0.5, now), ("p1", "h1.test", 0.5, now0 - 10),
         ("p1", "h2.test", 2.0, now)), s"smallStep=$small")
@@ -119,7 +119,7 @@ class CrawlSpec extends AnyFunSuite {
         projectsDf(1000.0, 1000.0), now0 + 1,
         Superstep.Config(respectRobots = false, perProjectLimit = 5,
           topKAggSelection = topK))
-      assert(r.scheduled == 5)
+      assert(StepCounters.total(r, "scheduled") == 5)
       val sel = r.frontier.where($"lastcrawltime" === now0 + 1)
         .select("url_hash").as[Long].collect().sorted.toSeq
       r.unpersistAll(); sel
@@ -267,6 +267,10 @@ class CrawlSpec extends AnyFunSuite {
       now0 = now0, fetch = fixtureFetch, store = Some(new FrontierStore(liveDir, 8,
         seenBuckets = 16)))
     def rows(df: DataFrame) = df.orderBy("project", "url_hash").collect().toSeq
+    // per-step counters travel lazily: through the carry checkpoint without
+    // a store, through the manifest totals with one
+    def perStep(run: Crawler.CrawlRun) =
+      run.countersPerStep.map(_.orderBy("project").collect().map(_.toSeq).toSeq)
     for ((name, run) <- Seq("stored" -> stored, "live" -> liveExact,
         "live+store" -> liveStored)) {
       assert(rows(run.frontier.select(Superstep.frontierCols.map(col): _*)) ==
@@ -274,7 +278,10 @@ class CrawlSpec extends AnyFunSuite {
       assert(rows(run.results) == rows(exact.results), s"$name results")
       assert(run.counterTotals == exact.counterTotals, s"$name counter totals")
       assert(run.finishedProjects == exact.finishedProjects, s"$name finished projects")
+      assert(run.steps == exact.steps, s"$name steps")
+      assert(perStep(run) == perStep(exact), s"$name per-step counters")
     }
+    assert(perStep(exact).size == exact.steps)
     assert(exact.counterTotals("p1")("scheduled") == exact.totalScheduled)
 
     // a no-store crawl releases each step's carry checkpoint one step late:
@@ -324,12 +331,13 @@ class CrawlSpec extends AnyFunSuite {
     val r = Superstep.run(spark, frontier, Crawler.emptyBudgets(spark), pagesIdx, robots,
       projectsDf(1000.0, 1000.0), now0 + 1,
       Superstep.Config(respectRobots = false, inqueueLimit = 3))
-    assert(r.fresh == 2, s"expected 2 admitted of 5 discovered, got ${r.fresh}")
+    val fresh = StepCounters.total(r, "new_tasks")
+    assert(fresh == 2, s"expected 2 admitted of 5 discovered, got $fresh")
     r.unpersistAll()
     // without the limit all 5 are admitted
     val r2 = Superstep.run(spark, frontier, Crawler.emptyBudgets(spark), pagesIdx, robots,
       projectsDf(1000.0, 1000.0), now0 + 1, Superstep.Config(respectRobots = false))
-    assert(r2.fresh == 5)
+    assert(StepCounters.total(r2, "new_tasks") == 5)
     r2.unpersistAll()
   }
 
@@ -341,13 +349,13 @@ class CrawlSpec extends AnyFunSuite {
     // STOP: nothing is scheduled, frontier untouched
     val r1 = Superstep.run(spark, frontier, Crawler.emptyBudgets(spark), pagesIdx, robots,
       stopped, now0 + 1, Superstep.Config(respectRobots = false))
-    assert(r1.scheduled == 0)
+    assert(StepCounters.total(r1, "scheduled") == 0)
     assert(r1.frontier.where($"status" === TaskStatus.Active).count() == 4)
     r1.unpersistAll()
     // re-activation: same frontier, RUNNING -> selection proceeds
     val r2 = Superstep.run(spark, frontier, Crawler.emptyBudgets(spark), pagesIdx, robots,
       running, now0 + 1, Superstep.Config(respectRobots = false))
-    assert(r2.scheduled == 4)
+    assert(StepCounters.total(r2, "scheduled") == 4)
     r2.unpersistAll()
     // FINISHED: a full crawl whose project drains reports it finished
     val cfg = PageGen.Config(nHosts = 2, pagesPerHost = 6, hotHosts = 0, fanout = 2)
@@ -694,7 +702,7 @@ class CrawlSpec extends AnyFunSuite {
     // fetch 1: no stored etag -> full fetch: /next discovered, result emitted, etag v1 stored
     val r1 = Superstep.run(spark, frontier0, Crawler.emptyBudgets(spark), idx1, rb1,
       projects, now0 + 1, cfg)
-    assert(r1.fresh == 1 && r1.newResults.count() == 1)
+    assert(StepCounters.total(r1, "new_tasks") == 1 && r1.newResults.count() == 1)
     // first success: the first-writer-wins delta carries the row too
     assert(r1.firstResults.count() == 1)
     val f1 = r1.frontier.localCheckpoint()
@@ -707,7 +715,7 @@ class CrawlSpec extends AnyFunSuite {
     val r2 = Superstep.run(spark, f1, Crawler.emptyBudgets(spark), idx1, rb1,
       projects, now0 + 2, cfg)
     assert(r2.newResults.count() == 0)
-    val c2 = r2.counterRows.find(_.getAs[String]("project") == "p1").get
+    val c2 = StepCounters.of(r2, "p1")
     assert(c2.getAs[Long]("not_modified") == 1)
     assert(c2.getAs[Long]("candidates") == 0) // extraction skipped entirely
     val f2 = r2.frontier.localCheckpoint()
@@ -723,8 +731,7 @@ class CrawlSpec extends AnyFunSuite {
     // first-writer-wins delta is EMPTY — the crawl loops would not append a
     // duplicate (project, url_hash) to the results table
     assert(r3.firstResults.count() == 0)
-    assert(r3.counterRows.find(_.getAs[String]("project") == "p1").get
-      .getAs[Long]("not_modified") == 0)
+    assert(StepCounters.of(r3, "p1").getAs[Long]("not_modified") == 0)
     assert(r3.frontier.where($"url" === "http://h0.test/start")
       .select("etag").collect().head.getString(0) == "v2")
     val f3 = r3.frontier.localCheckpoint()
@@ -738,8 +745,7 @@ class CrawlSpec extends AnyFunSuite {
     val r4 = Superstep.run(spark, f3, Crawler.emptyBudgets(spark), idx4, rb4,
       projects, now0 + 4, cfg)
     assert(r4.newResults.count() == 1)
-    assert(r4.counterRows.find(_.getAs[String]("project") == "p1").get
-      .getAs[Long]("not_modified") == 0)
+    assert(StepCounters.of(r4, "p1").getAs[Long]("not_modified") == 0)
     assert(r4.frontier.where($"url" === "http://h0.test/start")
       .select("etag").collect().head.getString(0) == null)
     r4.unpersistAll()
@@ -764,8 +770,7 @@ class CrawlSpec extends AnyFunSuite {
     val rA = Superstep.run(spark, frontierWith("v1", "L"), Crawler.emptyBudgets(spark),
       idxA, rbA, projects, now0 + 1, cfg)
     assert(rA.newResults.count() == 1, "etag mismatch + lm match must full-fetch")
-    assert(rA.counterRows.find(_.getAs[String]("project") == "p1").get
-      .getAs[Long]("not_modified") == 0)
+    assert(StepCounters.of(rA, "p1").getAs[Long]("not_modified") == 0)
     rA.unpersistAll()
 
     // both etags present and EQUAL: 304 even though lm differs (the etag
@@ -774,8 +779,7 @@ class CrawlSpec extends AnyFunSuite {
     val rB = Superstep.run(spark, frontierWith("v1", "L1"), Crawler.emptyBudgets(spark),
       idxB, rbB, projects, now0 + 1, cfg)
     assert(rB.newResults.count() == 0, "etag match must 304 regardless of lm")
-    assert(rB.counterRows.find(_.getAs[String]("project") == "p1").get
-      .getAs[Long]("not_modified") == 1)
+    assert(StepCounters.of(rB, "p1").getAs[Long]("not_modified") == 1)
     rB.unpersistAll()
 
     // etag absent on the page side -> fall back to lm: match is a 304

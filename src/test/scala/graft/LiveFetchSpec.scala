@@ -24,8 +24,13 @@ class LiveFetchSpec extends AnyFunSuite {
     * budget state. */
   private val JobCeiling = 30
 
-  /** Start a fixture server on an ephemeral port; returns (server, base). */
-  private def fixtureServer(): (HttpServer, String, java.util.concurrent.ConcurrentLinkedQueue[String]) = {
+  /** Start a fixture server on an ephemeral port serving `robotsTxt`;
+    * returns (server, base, requests). `agents` records (path, User-Agent)
+    * of every request. */
+  private def fixtureServer(robotsTxt: String = "User-agent: *\nDisallow: /private\n",
+      agents: java.util.concurrent.ConcurrentLinkedQueue[(String, String)] =
+        new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]())
+      : (HttpServer, String, java.util.concurrent.ConcurrentLinkedQueue[String]) = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     def respond(ex: HttpExchange, status: Int, body: Array[Byte],
@@ -39,9 +44,10 @@ class LiveFetchSpec extends AnyFunSuite {
       val path = ex.getRequestURI.getPath
       val inm = ex.getRequestHeaders.getFirst("If-None-Match")
       seen.add(s"$path inm=$inm")
+      agents.add((path, ex.getRequestHeaders.getFirst("User-Agent")))
       path match {
         case "/robots.txt" =>
-          respond(ex, 200, "User-agent: *\nDisallow: /private\n".getBytes("UTF-8"))
+          respond(ex, 200, robotsTxt.getBytes("UTF-8"))
         case "/start" =>
           if (inm == "\"v1\"") respond(ex, 304, Array.emptyByteArray, "ETag" -> "\"v1\"")
           else respond(ex, 200,
@@ -138,7 +144,7 @@ class LiveFetchSpec extends AnyFunSuite {
         .withColumn("exetime",
           when($"url" === s"$base/start", lit(0.0)).otherwise($"exetime"))
       val r3 = step(again, now0 + 3)
-      val c3 = r3.counterRows.find(_.getAs[String]("project") == "p1").get
+      val c3 = StepCounters.of(r3, "p1")
       assert(c3.getAs[Long]("not_modified") == 1, "live 304 must take the not_modified path")
       r3.unpersistAll()
       // the server really saw the conditional request
@@ -175,6 +181,26 @@ class LiveFetchSpec extends AnyFunSuite {
       val run2 = graft.fetch.LiveCrawler.run(spark, projects,
         Seq("p1" -> s"$base/start"), maxSteps = 2, robotsTtlSeconds = 0.5)
       assert(run2.robotsFetches == 2, s"expected a robots GET per step, got ${run2.robotsFetches}")
+    } finally server.stop(0)
+  }
+
+  test("LiveCrawler: every request carries cfg.userAgent, and that agent's robots group applies") {
+    val agents = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    // the crawler's own group disallows /next; the default group allows all
+    val (server, base, _) = fixtureServer(
+      "User-agent: *\nDisallow:\n\nUser-agent: graftbot\nDisallow: /next\n", agents)
+    try {
+      val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
+      val run = graft.fetch.LiveCrawler.run(spark, projects,
+        Seq("p1" -> s"$base/start"), maxSteps = 3)
+      val requests = agents.toArray.toSeq.map(_.asInstanceOf[(String, String)])
+      val paths = requests.map(_._1).toSet
+      assert(paths("/robots.txt") && paths("/start") && paths("/private"), s"paths: $paths")
+      val ua = Superstep.Config().userAgent
+      assert(requests.forall(_._2 == ua), s"expected User-Agent $ua on every request: $requests")
+      assert(!paths("/next"), s"/next is disallowed for $ua but was requested")
+      assert(run.frontier.where($"url" === s"$base/next" && $"status" === 1 &&
+        $"retried" === 1).count() == 1)
     } finally server.stop(0)
   }
 
