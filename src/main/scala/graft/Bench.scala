@@ -106,18 +106,10 @@ object Bench {
         merged.join(seen, Seq("url_hash"), "left_anti")
       }
     // ranked politeness selection via the partial-aggregable bounded heap
-    // (TopKSelect) — no per-partition full sort; window fallback otherwise
-    val selected =
-      if (spark.catalog.functionExists("topk_select"))
-        fresh.groupBy("host_hash")
-          .agg(expr("topk_select(50, priority, cast(0.0 as double), url_hash)").as("sel"))
-          .select(explode(col("sel")).as("url_hash"))
-      else
-        fresh.withColumn("rnk", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("host_hash")
-              .orderBy(col("priority").desc, col("url_hash").asc)))
-          .where(col("rnk") <= 50)
-    selected
+    // (TopKSelect) — no per-partition full sort
+    fresh.groupBy("host_hash")
+      .agg(expr("topk_select(50, priority, cast(0.0 as double), url_hash)").as("sel"))
+      .select(explode(col("sel")).as("url_hash"))
   }
 
   // Incrementally-built result state: the shutdown hook prints whatever is

@@ -8,9 +8,11 @@ import graft.url.{CanonicalizeUrl, UrlHost, UrlKeys}
 /**
  * SparkSessionExtensions entry point — registers the engine's native
  * Catalyst expressions so they are callable from SQL and from
- * `functions.call_function`. Activate with
- * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
- * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+ * `functions.call_function`. They are the only implementation of these
+ * names (no UDF stands in for them), so every session that runs the engine
+ * must install this class: [[Udfs.newSession]] sets
+ * `spark.sql.extensions=graft.GraftExtensions`; another Spark program does the
+ * same or calls `SparkSession.builder.withExtensions(new GraftExtensions)`.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -54,67 +54,10 @@ object ScalingRun {
     * canonicalize+hash map work the full job starts with (fused url_keys,
     * both fields consumed so nothing prunes away). */
   def mapOnlyJob(spark: SparkSession, n: Long): Long = {
-    graft.Udfs.register(spark)
     val hosts = 5000
     spark.range(n).selectExpr(
         s"url_keys(concat('HTTP://Host', cast(id % $hosts as string), '.Example.COM:80/p/', cast(id as string), '?b=', cast(id % 7 as string), '&a=1#f')) as k")
       .selectExpr("count(1) as c", "bit_xor(k.url_hash) as s", "bit_xor(k.host_hash) as t").collect()
-    n
-  }
-
-  /** LLM-pipeline pricing tier (BenchExtra): MinHash+LSH near-dup candidate
-    * generation over `n` synthetic docs — signature (k=3 shingles, 64
-    * perms), 16 band keys, band-bucket self-join for candidate pairs
-    * (planted dup every 1000th doc; the corpus is otherwise unique so the
-    * candidate set stays O(dups), the d3 discipline: the band shuffle
-    * carries (doc_id, band) only). Returns n (rows priced). */
-  def minhashJob(spark: SparkSession, n: Long): Long = {
-    graft.Udfs.register(spark)
-    // 20 pseudo-random words per doc from a 50k vocabulary: shingle sets
-    // are effectively unique doc-to-doc, so band keys collide only for the
-    // planted duplicates (every 1000th doc reuses its predecessor's seed).
-    // A near-constant template with one varying token would share ~95% of
-    // shingles corpus-wide and blow the band join up quadratically
-    // (measured: the first attempt ran 19+ minutes at p=8).
-    val docs = spark.range(n).selectExpr(
-      "id as doc_id",
-      "id - id % 1000 + (case when id % 1000 = 0 and id > 0 then -1 else id % 1000 end) as seed")
-      .selectExpr("doc_id",
-        "concat_ws(' ', transform(sequence(0, 19), j -> concat('w', cast(pmod(xxhash64(seed, j), 50000) as string)))) as text")
-    val bands = docs.selectExpr("doc_id",
-      "explode(minhash_bands(minhash_sig(text, 3, 64), 16)) as band")
-    val pairs = bands.as("a").join(bands.as("b"),
-        org.apache.spark.sql.functions.expr("a.band = b.band and a.doc_id < b.doc_id"))
-      .selectExpr("a.doc_id as a_id", "b.doc_id as b_id").distinct()
-    pairs.count()
-    n
-  }
-
-  /** LLM-pipeline pricing tier (BenchExtra): ANN search over `n` synthetic
-    * 32-dim vectors — LSH hyperplane keys (8 planes, multi-probe hamming<=1)
-    * UNION IVF coarse cells (16 cells, nprobe 4) for 64 query vectors, exact
-    * cosine on candidates only, top-3 per query (the v2/v4 scale shapes).
-    * Returns n (rows priced). */
-  def annJob(spark: SparkSession, n: Long): Long = {
-    graft.Udfs.register(spark)
-    import org.apache.spark.sql.functions._
-    val e = spark.range(n).selectExpr("id as vec_id",
-      "transform(sequence(0, 31), j -> cast(pmod(xxhash64(id, j), 1000) / 500.0 - 1.0 as float)) as embedding")
-    val keyed = e.selectExpr("vec_id", "embedding", "lsh_key(embedding, 8, 42) as k")
-    val q = keyed.where("vec_id < 64")
-      .selectExpr("vec_id as qid", "embedding as qe", "explode(lsh_probes(k, 8)) as k")
-    val lshC = q.join(keyed, Seq("k")).where("vec_id != qid")
-      .selectExpr("qid", "vec_id", "cosine_sim(qe, embedding) as sim")
-    val cells = e.selectExpr("vec_id", "embedding", "ivf_cell(embedding, 16, 7) as cell")
-    val qc = cells.where("vec_id < 64")
-      .selectExpr("vec_id as qid", "embedding as qe", "explode(ivf_probes(embedding, 16, 4, 7)) as cell")
-    val ivfC = qc.join(cells, Seq("cell")).where("vec_id != qid")
-      .selectExpr("qid", "vec_id", "cosine_sim(qe, embedding) as sim")
-    val top = lshC.unionByName(ivfC).groupBy("qid", "vec_id").agg(max("sim").as("sim"))
-      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)))
-      .where("rn <= 3")
-    top.count()
     n
   }
 
@@ -206,14 +149,10 @@ object ScalingRun {
     }
     def run1(): Unit = job match {
       case "maponly" => mapOnlyJob(s, n)
-      case "minhash" => minhashJob(s, n)
-      case "ann" => annJob(s, n)
       case _ => Bench.scheduleDedupJob(s, n, n / 2)
     }
     def warmup(): Unit = job match {
       case "maponly" => mapOnlyJob(s, n / 8)
-      case "minhash" => minhashJob(s, n / 8)
-      case "ann" => annJob(s, n / 8)
       case _ => Bench.scheduleDedupJob(s, n / 8, n / 16)
     }
     warmup() // JIT + codegen warmup

@@ -1,23 +1,23 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.udf
 import graft.text.{Encoding, HtmlScanner, Robots, TextStats}
 import graft.dedup.MinHash
 import graft.ann.Vectors
 
 /**
- * Scala-UDF surface of the engine (tier-1 per SURVEY.md §2.11; the URL hot
- * path has codegen'd native expressions instead — graft.url.UrlExpressions).
- * Registered once per session; everything is deterministic.
+ * Scala-UDF surface of the engine (tier-1 per SURVEY.md §2.11) and the
+ * session factory. The per-row kernels with a native twin —
+ * `canonicalize_url`, `url_host`, `url_keys`, `topk_select`, `cosine_sim`,
+ * `extract_follows_rows` — exist only as the Catalyst expressions that
+ * [[GraftExtensions]] injects, so a session must install the extensions;
+ * [[newSession]] does. On a session without them those names fail at
+ * analysis. Registered once per session; everything is deterministic.
  */
 object Udfs {
 
   /** One follow candidate produced by extraction (SURVEY §2.9 P6). */
   final case class Follow(url: String, method: String, data: String, text: String)
-
-  /** Struct shape of the `url_keys` UDF fallback (native: [[graft.url.UrlKeys]]). */
-  final case class UrlKeyPair(url_hash: Long, host_hash: Long)
 
   /** Static page extraction -> follow candidates, already absolutized but NOT
     * yet canonicalized/filtered (same-domain filter F7 happens relationally). */
@@ -31,22 +31,6 @@ object Udfs {
 
   def register(spark: SparkSession): Unit = {
     val u = spark.udf
-    // Native codegen'd expressions arrive via GraftExtensions when the session
-    // was built with spark.sql.extensions=graft.GraftExtensions. On a vanilla
-    // session (e.g. an external driver), fall back to equivalent Scala UDFs
-    // under the same names so every query still resolves.
-    if (!spark.catalog.functionExists("canonicalize_url"))
-      u.register("canonicalize_url", (s: String) => graft.url.UrlCanon.canonicalize(s))
-    if (!spark.catalog.functionExists("url_host"))
-      u.register("url_host", (s: String) => graft.url.UrlCanon.hostOf(s))
-    if (!spark.catalog.functionExists("url_keys"))
-      u.register("url_keys", (s: String) =>
-        if (s == null) null
-        else {
-          val r = graft.url.UrlCanon.urlKeysRow(
-            org.apache.spark.unsafe.types.UTF8String.fromString(s))
-          UrlKeyPair(r.getLong(0), r.getLong(1))
-        })
     u.register("extract_text",
       (html: Array[Byte]) => Encoding.extractText(html, null))
     u.register("extract_text_ct",
@@ -69,11 +53,6 @@ object Udfs {
       (sig: Seq[Long], bands: Int) => MinHash.bandKeys(sig.toArray, bands))
     u.register("ngram_jaccard",
       (a: String, b: String, k: Int) => MinHash.ngramJaccard(a, b, k))
-    // native codegen'd expression when the extensions are installed; the
-    // UDF fallback implements the identical accumulation order
-    if (!spark.catalog.functionExists("cosine_sim"))
-      u.register("cosine_sim",
-        (a: Seq[Float], b: Seq[Float]) => Vectors.cosine(a, b))
     u.register("lsh_key",
       (v: Seq[Float], planes: Int, seed: Long) => Vectors.lshKey(v, planes, seed))
     u.register("lsh_probes",
@@ -188,7 +167,7 @@ object Udfs {
         .invoke(bus, java.lang.Long.valueOf(timeoutMs))
     } catch { case _: Throwable => Thread.sleep(500) }
 
-  /** Session factory used by mains/tests: graft extensions + UDFs + sane
+  /** Session factory used by mains/tests: [[GraftExtensions]] + UDFs + sane
     * local-mode scale defaults (AQE on, shuffle partitions = cores). */
   def newSession(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession = {
     // In this single-box sandbox all "executors" share one disk; tmpfs shuffle

@@ -26,7 +26,17 @@ object Crawler {
   /** The robots gate join is broadcast only while the robots table stays
     * under this host count; beyond it (web scale: one row per host) it
     * falls back to a shuffle join keyed by host. */
-  private val BroadcastRobotsMaxHosts = 100000L
+  private[graft] val BroadcastRobotsMaxHosts = 100000L
+
+  /** `cfg` with the robots broadcast size-gated, decided ONCE per crawl
+    * over the persisted robots side (one cheap count): at web scale (one
+    * row per host) an unconditional broadcast would OOM the driver and
+    * executors. The batch and streaming loops call it after
+    * [[Superstep.preparePages]]. */
+  private[graft] def gateRobotsBroadcast(cfg: Superstep.Config,
+      robots: DataFrame): Superstep.Config =
+    cfg.copy(broadcastRobots =
+      cfg.broadcastRobots && robots.count() <= BroadcastRobotsMaxHosts)
 
   final case class CrawlRun(
       steps: Int,
@@ -207,8 +217,7 @@ object Crawler {
 
   def emptyBudgets(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("project", StringType), StructField("host", StringType),
-        StructField("tokens", DoubleType), StructField("last_update", DoubleType))))
+      graft.frontier.FrontierStore.budgetsSchema)
 
   def emptyResults(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], resultSchema)
@@ -230,11 +239,7 @@ object Crawler {
     // persist() is MEMORY_AND_DISK: html bytes spill instead of recomputing
     pagesIdx.persist()
     robots.persist()
-    // size-gate the robots broadcast ONCE per crawl (robots is persisted, the
-    // count is one cheap scan): at web scale (one row per host) an
-    // unconditional broadcast would OOM the driver/executors
-    val stepCfg = cfg.step.copy(broadcastRobots =
-      cfg.step.broadcastRobots && robots.count() <= BroadcastRobotsMaxHosts)
+    val stepCfg = gateRobotsBroadcast(cfg.step, robots)
     val driver = new StepDriver(spark, projects, store, cfg.now0, cfg.tick, seeds,
       terminates = true)
     while (!driver.done && driver.steps < cfg.maxSteps) driver.step(pagesIdx, robots, stepCfg)

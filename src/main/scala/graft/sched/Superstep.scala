@@ -43,8 +43,8 @@ object Superstep {
       broadcastRobots: Boolean = true,
       /** W1 selection via the partial-aggregable bounded-heap aggregate
         * (TopKSelect) instead of a window sort — the scale path: O(n log k)
-        * per task, map-side combining, hot hosts parallelize. Falls back to
-        * the window when the function is not registered. */
+        * per task, map-side combining, hot hosts parallelize. false selects
+        * with the window, the reference the tests compare it with. */
       topKAggSelection: Boolean = true,
       /** The caller asserts the ENTIRE crawl state this step touches
         * (frontier rows + budget state rows + step size) is small enough to
@@ -407,9 +407,8 @@ object Superstep {
       .withColumn("tokens_avail", coalesce($"tokens_avail", $"p_burst"))
       .withColumn("allowed", floor($"tokens_avail"))
       .drop("p_rate", "p_burst")
-    val useTopK = cfg.topKAggSelection && spark.catalog.functionExists("topk_select")
     var selected =
-      if (useTopK) {
+      if (cfg.topKAggSelection) {
         // aggregate keeps W1's exact order (priority desc, exetime asc,
         // url_hash asc); join back by identity (url_hash is unique per
         // project), left semi — broadcastable when budgets are small
@@ -433,7 +432,7 @@ object Superstep {
       // combines map-side (O(n log k), no per-project full sort); a hot
       // project's rows never serialize through one window partition
       selected =
-        if (useTopK) {
+        if (cfg.topKAggSelection) {
           val capIds = selected
             .groupBy($"project")
             .agg(expr(s"topk_select(${cfg.perProjectLimit}, priority, exetime, url_hash)")
@@ -545,21 +544,12 @@ object Superstep {
 
     // ---- P1/P2/P4/P6: extraction + follow construction. The native
     // Generator (FollowsGenerator via GenerateExec) streams one output row
-    // per follow without materializing an Array[Struct] per page; the
-    // UDF+explode pair is the fallback on vanilla sessions.
-    val follows0 =
-      if (spark.catalog.functionExists("extract_follows_rows"))
-        fetched.where($"fetch_ok" && !$"not_modified")
-          .select($"project", $"url".as("parent_url"), $"host".as("parent_host"),
-            expr("extract_follows_rows(page_text, final_url)"))
-          .select($"project", $"parent_url", $"parent_host",
-            $"url".as("raw_url"), $"method", $"data")
-      else
-        fetched.where($"fetch_ok" && !$"not_modified")
-          .select($"project", $"url".as("parent_url"), $"host".as("parent_host"),
-            explode(expr("extract_follows(page_text, final_url)")).as("f"))
-          .select($"project", $"parent_url", $"parent_host",
-            $"f.url".as("raw_url"), $"f.method".as("method"), $"f.data".as("data"))
+    // per follow without materializing an Array[Struct] per page.
+    val follows0 = fetched.where($"fetch_ok" && !$"not_modified")
+      .select($"project", $"url".as("parent_url"), $"host".as("parent_host"),
+        expr("extract_follows_rows(page_text, final_url)"))
+      .select($"project", $"parent_url", $"parent_host",
+        $"url".as("raw_url"), $"method", $"data")
     // P3 (processor half): ajax requests captured alongside the page become
     // follow candidates exactly like links (processor.py:120-140 builds
     // tasks from details.ajax with method/data); F7 same-domain and the

@@ -38,6 +38,7 @@ object StreamingCrawl {
     val (pagesIdx, robots) = Superstep.preparePages(spark, pages)
     pagesIdx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     robots.persist()
+    val stepCfg = Crawler.gateRobotsBroadcast(cfg, robots)
     // resumes whatever the store holds; after each commit it reads the new
     // snapshot back, so a batch starts from the last committed state
     val driver = new StepDriver(spark, projects, Some(store), now0, tickSeconds, Nil,
@@ -77,7 +78,7 @@ object StreamingCrawl {
         // frontier key set per micro-batch
         // the batch's checkpoints: the merged seeds, and the seed rows
         // under their keys
-        driver.step(pagesIdx, robots, cfg, seedMerge = merge,
+        driver.step(pagesIdx, robots, stepCfg, seedMerge = merge,
           checkpoints = merge.toSeq.flatMap(m => Seq(m.upserts, m.seen)))
       }
 

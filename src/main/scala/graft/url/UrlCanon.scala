@@ -211,15 +211,15 @@ object UrlCanon {
    * percent-encode non-ASCII, sort query params (byte order, duplicates
    * kept), drop empty query tokens. Idempotent.
    *
-   * Hot path at 10^10 rows: `canonFast` handles plain-ASCII http(s) URLs in
-   * one pass with a single StringBuilder (no parse object, no byte array, no
-   * split) and bails to the general parse/rebuild on anything unusual
-   * (non-ASCII, userinfo, dot segments, chars needing percent-encoding).
-   * Equivalence is enforced by the exhaustive sweep in UrlCanonSpec.
+   * One fast path serves every caller: the string's UTF-8 bytes go through
+   * [[canonFastBytes]], the same single pass the codegen'd expressions run,
+   * which bails to the general parse/rebuild on anything unusual
+   * (non-ASCII, userinfo, IPv6, dot segments, chars needing
+   * percent-encoding). Equivalence is enforced by the sweep in UrlCanonSpec.
    */
   def canonicalize(url: String): String = {
-    val fast = canonFast(url)
-    if (fast != null) fast else canonGeneral(url)
+    val fast = canonFastBytes(url.getBytes(StandardCharsets.UTF_8))
+    if (fast != null) new String(fast, StandardCharsets.UTF_8) else canonGeneral(url)
   }
 
   /** Non-hierarchical schemes are OPAQUE: they carry no authority, so the
@@ -233,114 +233,6 @@ object UrlCanon {
     case None => url.trim
     case Some(p) if p.host.isEmpty && OpaqueSchemes(p.scheme) => url.trim
     case Some(p) => rebuild(p, keepFragment = false, sortQuery = true)
-  }
-
-  @inline private def lowerChar(c: Char): Char =
-    if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-
-  @inline private def needsEncoding(c: Char): Boolean =
-    c <= ' ' || c >= 0x7f || c == '"' || c == '<' || c == '>' || c == '`' || c == '\\'
-
-  /** Single-pass canonicalizer for the common case; null = fall back. */
-  def canonFast(url0: String): String = {
-    var start = 0
-    var end = url0.length
-    while (start < end && url0.charAt(start) <= ' ') start += 1
-    while (end > start && url0.charAt(end - 1) <= ' ') end -= 1
-    if (end - start < 8) return null
-    // scheme (letters only on the fast path)
-    var i = start
-    while (i < end && url0.charAt(i) != ':') {
-      val c = url0.charAt(i)
-      if (!((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z'))) return null
-      i += 1
-    }
-    if (i >= end - 2 || url0.charAt(i + 1) != '/' || url0.charAt(i + 2) != '/') return null
-    val schemeEnd = i
-    val sb = new java.lang.StringBuilder(end - start + 1)
-    var j = start
-    while (j < schemeEnd) { sb.append(lowerChar(url0.charAt(j))); j += 1 }
-    val scheme = sb.toString
-    val defPort = scheme match {
-      case "http" | "ws" => 80
-      case "https" | "wss" => 443
-      case "ftp" => 21
-      case _ => -1
-    }
-    sb.append("://")
-    i = schemeEnd + 3
-    // authority
-    val authStart = i
-    while (i < end && { val c = url0.charAt(i); c != '/' && c != '?' && c != '#' }) {
-      val c = url0.charAt(i)
-      if (c == '@' || c == '[' || needsEncoding(c)) return null // userinfo/IPv6/odd -> general
-      i += 1
-    }
-    val authEnd = i
-    var colon = -1
-    j = authEnd - 1
-    while (j >= authStart && colon < 0) { if (url0.charAt(j) == ':') colon = j; j -= 1 }
-    val hostEnd = if (colon >= 0) colon else authEnd
-    if (hostEnd == authStart) return null // empty host
-    j = authStart
-    while (j < hostEnd) { sb.append(lowerChar(url0.charAt(j))); j += 1 }
-    if (colon >= 0 && colon + 1 < authEnd) {
-      var p = 0
-      j = colon + 1
-      while (j < authEnd) {
-        val c = url0.charAt(j)
-        if (c < '0' || c > '9') return null
-        p = p * 10 + (c - '0')
-        if (p > 99999) return null
-        j += 1
-      }
-      if (p != defPort) { sb.append(':'); sb.append(p) }
-    }
-    // path
-    if (i >= end || url0.charAt(i) != '/') sb.append('/')
-    var prev = ' '
-    while (i < end && { val c = url0.charAt(i); c != '?' && c != '#' }) {
-      val c = url0.charAt(i)
-      if (needsEncoding(c)) return null
-      if (c == '.' && prev == '/') return null // possible dot segment -> general
-      sb.append(c)
-      prev = c
-      i += 1
-    }
-    // query: tokens sorted byte-order, empties dropped
-    if (i < end && url0.charAt(i) == '?') {
-      i += 1
-      val qStart = i
-      while (i < end && url0.charAt(i) != '#') {
-        if (needsEncoding(url0.charAt(i))) return null
-        i += 1
-      }
-      if (i > qStart) {
-        var nTok = 0
-        val toks = new java.util.ArrayList[String](4)
-        var ts = qStart
-        var k = qStart
-        while (k <= i) {
-          if (k == i || url0.charAt(k) == '&') {
-            if (k > ts) { toks.add(url0.substring(ts, k)); nTok += 1 }
-            ts = k + 1
-          }
-          k += 1
-        }
-        if (nTok > 0) {
-          if (nTok > 1) java.util.Collections.sort(toks)
-          sb.append('?')
-          var x = 0
-          while (x < nTok) {
-            if (x > 0) sb.append('&')
-            sb.append(toks.get(x))
-            x += 1
-          }
-        }
-      }
-    }
-    // fragment dropped
-    sb.toString
   }
 
   private def rebuild(p: Parsed, keepFragment: Boolean, sortQuery: Boolean): String = {
@@ -405,7 +297,7 @@ object UrlCanon {
         return org.apache.spark.unsafe.types.UTF8String.fromBytes(
           java.util.Arrays.copyOf(out, (packed & MaxFast).toInt))
     }
-    org.apache.spark.unsafe.types.UTF8String.fromString(canonicalize(u.toString))
+    org.apache.spark.unsafe.types.UTF8String.fromString(canonGeneral(u.toString))
   }
 
   /** Fused crawl-identity keys (see [[UrlKeys]]): canonicalize into the
@@ -436,7 +328,7 @@ object UrlCanon {
       }
     }
     if (!done) {
-      val canon = canonicalize(u.toString)
+      val canon = canonGeneral(u.toString)
       val cb = canon.getBytes(StandardCharsets.UTF_8)
       urlHash = XXH64.hashUnsafeBytes(cb, Platform.BYTE_ARRAY_OFFSET, cb.length, 42L)
       val hb = hostOf(canon).getBytes(StandardCharsets.UTF_8)

@@ -15,15 +15,13 @@ class EnvKnobsSpec extends AnyFunSuite {
     "CONF", "CPUS", "LOCAL_DIR", "SCRATCH", "SF_DIR", "SHUFFLE_PARTITIONS",
     // Bench sections, rounds and output
     "SECTIONS", "JSON_PATH", "CRAWL_ROUNDS", "CRAWL_STORE_ROUNDS", "LIFE_STEPS", "SKEW_N",
-    "SPIN_N", "PIPE_N", "STORE_STEP_SEEDS",
+    "SPIN_N",
     // Bench scaling and store-scaling forks
     "SCALING", "SCALE_DECOMP", "SCALE_MEM", "SCALE_N", "SCALE_REPS", "SCALE_ROUNDS",
     "STORE_SCALE_HOSTS", "STORE_SCALE_PPH", "STORE_SCALE_ROUNDS", "STORE_SCALE_SEEDS",
-    "STORE_SCALE_STEPS",
-    // BenchExtra
-    "EXTRA_JSON", "EXTRA_REPS", "EXTRA_SECTIONS").map("SPARK_GRAFT_" + _)
+    "STORE_SCALE_STEPS").map("SPARK_GRAFT_" + _)
 
-  test("the SPARK_GRAFT_* names read under src/main/scala are the pinned 29") {
+  test("the SPARK_GRAFT_* names read under src/main/scala are the pinned set") {
     import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
@@ -33,6 +31,6 @@ class EnvKnobsSpec extends AnyFunSuite {
         .toSet
       finally walk.close()
     assert(found == Pinned, s"new: ${found -- Pinned}; gone: ${Pinned -- found}")
-    assert(Pinned.size == 29)
+    assert(Pinned.size == 24)
   }
 }

@@ -56,6 +56,79 @@ class StreamingCrawlSpec extends AnyFunSuite {
       .where($"count" > 1).count() == 0)
   }
 
+  test("streaming supersteps shuffle-join a robots side larger than the broadcast gate") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = java.nio.file.Files.createTempDirectory("graft-srobots").toString
+    val store = new FrontierStore(dir, 8)
+    val cfg = PageGen.Config(nHosts = 2, pagesPerHost = 6, hotHosts = 0, fanout = 2)
+    // one robots.txt per host: the graph's hosts plus enough others that
+    // the robots side holds one host more than the gate allows
+    val hosts = graft.sched.Crawler.BroadcastRobotsMaxHosts + 1
+    val extraRobots = spark.range(hosts - cfg.nHosts).selectExpr(
+      "concat('http://r', id, '.example.org/robots.txt') as url",
+      "timestamp_seconds(1700000000) as warc_ts",
+      "cast('User-agent: *' as binary) as html", "'User-agent: *' as text", "'en' as lang")
+    val pages = PageGen.pages(spark, cfg).toDF().unionByName(extraRobots)
+    val projects = Seq(("p1", 1000.0, 1000.0)).toDF("name", "rate", "burst")
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case other => other.children.flatMap(nodes)
+    })
+    def carriesRobots(p: SparkPlan): Boolean = p.output.exists(_.name == "robots_txt")
+    @volatile var robotsJoins = 0
+    @volatile var robotsBroadcasts = 0
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val all = nodes(qe.executedPlan)
+        robotsJoins += all.count {
+          case j: BaseJoinExec => j.children.exists(carriesRobots)
+          case _ => false
+        }
+        robotsBroadcasts += all.count {
+          case b: BroadcastExchangeExec => carriesRobots(b)
+          case _ => false
+        }
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // only hints may broadcast: the planner's size-based choice is off
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = thresholds.map(k => k -> spark.conf.getOption(k))
+    thresholds.foreach(spark.conf.set(_, "-1"))
+    implicit val sqlCtx = spark.sqlContext
+    val seeds = MemoryStream[(String, String)]
+    spark.listenerManager.register(listener)
+    val q = StreamingCrawl.start(spark, pages, projects, store,
+      seeds.toDF().toDF("project", "url"))
+    try {
+      seeds.addData(("p1", "http://host0.example.com/page/1"))
+      q.processAllAvailable()
+      seeds.addData()
+      q.processAllAvailable()
+      Udfs.drainListenerBus(spark.sparkContext, 10000L)
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    assert(store.read(spark).get.step == 2)
+    assert(robotsJoins > 0, "no robots gate join was planned")
+    assert(robotsBroadcasts == 0, "the robots side was broadcast above the gate")
+  }
+
   test("streaming J1 shape: the seen-index step probes delta files and adds no full-frontier key join") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sj1").toString
     val store = new FrontierStore(dir, 8)

@@ -159,6 +159,28 @@ class UrlCanonSpec extends AnyFunSuite {
       }
   }
 
+  test("canonicalize equals the general path where char and UTF-8 byte lengths differ") {
+    // non-ASCII only in parts the fast path skips (the fragment) or only
+    // measures (the < 8 length check): the byte path sees more bytes than
+    // the string has chars
+    Seq("a://b#é", "a://b#展", "h://x#éé", "http://h.com/#展示", "http://h.com/p?b=1&a=2#ü",
+      " http://H.com:80/p#展 ", "http://h.com#ß")
+      .foreach { u =>
+        assert(UrlCanon.canonicalize(u) == UrlCanon.canonGeneral(u), s"fast != general for $u")
+      }
+  }
+
+  test("canonicalize equals the codegen'd canonicalize_url, malformed UTF-16 included") {
+    import org.apache.spark.unsafe.types.UTF8String
+    // a lone surrogate encodes to '?', here before a query: one identity
+    // whether the url arrives as a String or as a Spark row value
+    (allUrls.take(200) ++ Seq("a://b#é", "http://h.com/a\uD800b?z=1&a=2", "http://h.com/\uDC00"))
+      .foreach { u =>
+        assert(UrlCanon.canonicalize(u) == UrlCanon.canonUTF8(UTF8String.fromString(u)).toString,
+          s"String != UTF8String path for $u")
+      }
+  }
+
   test("canonicalize strips fragments and sorts queries stably (sweep)") {
     allUrls.foreach { u =>
       val c = UrlCanon.canonicalize(u)
