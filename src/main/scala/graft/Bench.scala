@@ -41,7 +41,6 @@ object Bench {
     * the skew bench's input; 0 = the uniform metric job. */
   def scheduleDedupPlan(spark: SparkSession, n: Long, m: Long,
       variant: String, hotHostShare: Double = 0.0): org.apache.spark.sql.DataFrame = {
-    Udfs.register(spark)
     val hosts = 5000
     // ~4x duplicate discovery per URL (a crawl's follow stream is heavily
     // duplicated — that is what the W4 in-batch merge exists for)

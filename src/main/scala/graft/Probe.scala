@@ -16,9 +16,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
  *
  * Each job prints `JOB <id> <ms> stages=<n> [<stage call sites>]` as it
  * ends; each query and rep prints `PROBE rep=<r> <query> wall=… jobs=…
- * exec=… gap=… rows=…`, where `exec` sums the query's job walls and `gap`
- * is the rest of its wall (driver planning and scheduling between jobs;
- * negative when jobs overlap, as in a store commit).
+ * sql=… exec=… gap=… rows=…`, where `sql` counts the SQL executions
+ * (actions, writes and checkpoints) the rep ran, `exec` sums the query's
+ * job walls and `gap` is the rest of its wall (driver planning and
+ * scheduling between jobs; negative when jobs overlap).
  * The first rep includes JIT and codegen warm-up. With a plan directory,
  * each query writes `<query>_after.txt` in the layout of `plans/r06/`: the
  * formatted plan of the returned frame and of the largest execution the
@@ -33,9 +34,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
  */
 object Probe {
 
-  /** One query run: wall and summed job seconds, jobs ended, rows counted. */
+  /** One query run: wall and summed job seconds, jobs ended, SQL
+    * executions ended, rows counted. */
   final case class Summary(query: String, rep: Int, wall: Double, jobs: Int,
-      exec: Double, rows: Long)
+      sql: Int, exec: Double, rows: Long)
 
   /** Lines of plan text a plan file keeps before its histogram. */
   val PlanLines = 1200
@@ -84,30 +86,36 @@ object Probe {
         }
     }
     @volatile var largest = ""
+    val executions = new AtomicInteger()
     val plans = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        try {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        executions.incrementAndGet()
+        if (planDir.nonEmpty) try {
           val s = qe.explainString(FormattedMode)
           if (s.length > largest.length) largest = s
         } catch { case _: Exception => }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
     }
     val sc = spark.sparkContext
     sc.addSparkListener(clock)
-    planDir.foreach { d => Files.createDirectories(d); spark.listenerManager.register(plans) }
+    spark.listenerManager.register(plans)
+    planDir.foreach(Files.createDirectories(_))
     try for (rep <- 1 to reps; name <- names) yield {
       spark.catalog.clearCache()
       sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       Udfs.drainListenerBus(sc, 10000L)
-      val (j0, ms0) = (jobs.get, jobMs.get)
+      val (j0, ms0, x0) = (jobs.get, jobMs.get, executions.get)
       largest = ""
       val w0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val rows = df.count()
       val wall = (System.nanoTime() - w0) / 1e9
       Udfs.drainListenerBus(sc, 10000L)
-      val s = Summary(name, rep, wall, jobs.get - j0, (jobMs.get - ms0) / 1e3, rows)
-      println(f"PROBE rep=$rep $name%-24s wall=${s.wall}%7.2fs jobs=${s.jobs} " +
+      val s = Summary(name, rep, wall, jobs.get - j0, executions.get - x0,
+        (jobMs.get - ms0) / 1e3, rows)
+      println(f"PROBE rep=$rep $name%-24s wall=${s.wall}%7.2fs jobs=${s.jobs} sql=${s.sql} " +
         f"exec=${s.exec}%7.2fs gap=${s.wall - s.exec}%7.2fs rows=$rows")
       planDir.foreach { d =>
         Files.writeString(d.resolve(s"${name}_after.txt"), planReport(

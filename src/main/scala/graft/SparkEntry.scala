@@ -19,16 +19,13 @@ import graft.sched.Crawler
  */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    Udfs.register(spark)
+  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Flagship: a real mini-crawl of the synthetic web graph on Spark —
     * frontier seeded, scheduled under politeness, fetched from the pages
     * table, extracted, deduped; returns the crawl results. */
   def entry(spark: SparkSession): DataFrame = {
-    Udfs.register(spark)
     import spark.implicits._
     val cfg = PageGen.Config(nHosts = 4, pagesPerHost = 12, hotHosts = 1, hotFactor = 2, fanout = 3)
     val pages = PageGen.pages(spark, cfg).toDF()
@@ -97,7 +94,6 @@ object SparkEntry {
       : (RowsAndSchema, RowsAndSchema, RowsAndSchema) = {
     if (fresh) c1Memo.remove(System.identityHashCode(s))
     c1Memo.computeIfAbsent(System.identityHashCode(s), _ => withFixtureConf(s) {
-      Udfs.register(s)
       import s.implicits._
       val cfg = PageGen.Config(nHosts = 3, pagesPerHost = 10, hotHosts = 1, hotFactor = 2, fanout = 3)
       val pages = PageGen.pages(s, cfg).toDF()
@@ -133,7 +129,6 @@ object SparkEntry {
       : (RowsAndSchema, Map[String, Long], Seq[(Long, Int, Long)]) = {
     if (fresh) c3Memo.remove(System.identityHashCode(s))
     c3Memo.computeIfAbsent(System.identityHashCode(s), _ => withFixtureConf(s) {
-      Udfs.register(s)
       import s.implicits._
       val cfg = PageGen.Config(nHosts = 3, pagesPerHost = 10, hotHosts = 1, hotFactor = 2, fanout = 3)
       val pages = PageGen.pages(s, cfg).toDF()
@@ -407,7 +402,6 @@ object SparkEntry {
       // with the page become follow tasks with their method/data; the
       // cross-domain ajax item is dropped by the same-domain rule. 20 pages,
       // each carrying one same-domain POST ajax and one cross-domain GET.
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>x</body></html>".getBytes("UTF-8")
       val pages = (0 until 20).map(i => (s"http://h0.test/p/$i",
@@ -437,7 +431,6 @@ object SparkEntry {
       // lastcrawltime=now-100 (age restart), force_update id%7, cancel
       // id%11 (restart+cancel -> BAD), id%5==0 receives no incoming
       // (untouched), id%5==4 arrives under a NEW key (insert ACTIVE)
-      Udfs.register(s)
       val now = 1700000100.0
       val ids = t(s, dir, "events").selectExpr("cast(event_id as long) as id").distinct()
       val frontier = ids.selectExpr(
@@ -898,7 +891,6 @@ object SparkEntry {
       //   k=2 no etags, lm match           -> 304 via lm, no result
       //   k=3 task has no etag, lm mismatch-> full fetch
       // All refresh stored headers to the page's on success.
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>x</body></html>".getBytes("UTF-8")
       val ts = new java.sql.Timestamp(0L)
@@ -943,7 +935,6 @@ object SparkEntry {
       // Selection within a host is priority desc, so url i is fetched at
       // the step where its rank (7-i) crosses the cumulative token count —
       // the oracle restates exactly that closed form.
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>no links here</body></html>".getBytes("UTF-8")
       val ts = new java.sql.Timestamp(0L)
@@ -964,9 +955,9 @@ object SparkEntry {
       (1 to 3).foreach { step =>
         val r = graft.sched.Superstep.run(s, frontier, budgets, idx, robots,
           projects, step.toDouble, cfg)
-        val (f2, b2, _, _, _) = Crawler.checkpointCarryFused(r.frontier, r.budgets,
+        val ck = Crawler.checkpointCarryFused(r.frontier, r.budgets,
           Crawler.emptyResults(s), None, None)
-        frontier = f2; budgets = b2
+        frontier = ck.frontier; budgets = ck.budgets
         r.unpersistAll()
       }
       frontier.selectExpr("project", "url", "status",
@@ -980,7 +971,6 @@ object SparkEntry {
       // over 3 supersteps at now = 1,2,3 (unlimited budget): i<=1 fetch at
       // step 1, i=2 at step 2, i=3 at step 3, i in {4,5} stay ACTIVE —
       // and fetched (SUCCESS) rows are never re-selected.
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>t</body></html>".getBytes("UTF-8")
       val ts = new java.sql.Timestamp(0L)
@@ -1000,9 +990,9 @@ object SparkEntry {
       (1 to 3).foreach { step =>
         val r = graft.sched.Superstep.run(s, frontier, budgets, idx, robots,
           projects, step.toDouble, cfg)
-        val (f2, b2, _, _, _) = Crawler.checkpointCarryFused(r.frontier, r.budgets,
+        val ck = Crawler.checkpointCarryFused(r.frontier, r.budgets,
           Crawler.emptyResults(s), None, None)
-        frontier = f2; budgets = b2
+        frontier = ck.frontier; budgets = ck.budgets
         r.unpersistAll()
       }
       frontier.selectExpr("project", "url", "status",
@@ -1015,7 +1005,6 @@ object SparkEntry {
       // in projectdb is never selected — it stays ACTIVE and untouched
       // while known-project tasks proceed. 10 urls across a known and an
       // unknown project; one superstep.
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>v</body></html>".getBytes("UTF-8")
       val ts = new java.sql.Timestamp(0L)
@@ -1040,7 +1029,6 @@ object SparkEntry {
       // — its fetch is the url's own payload, an instant 200 — while http
       // tasks still require the capture (absent page -> retry ladder).
       // 10 data + 10 captured-http + 5 missing-http tasks, one superstep.
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>h</body></html>".getBytes("UTF-8")
       val ts = new java.sql.Timestamp(0L)
@@ -1106,7 +1094,6 @@ object SparkEntry {
       //      /priv/) -> the UA-specific group wins — the default entry
       //      must not shadow it (robotparser order rule): /p/ allowed
       //   h4 "otherbot: Disallow /"        -> no applicable group -> allowed
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>ok</body></html>".getBytes("UTF-8")
       val ts = new java.sql.Timestamp(0L)
@@ -1144,7 +1131,6 @@ object SparkEntry {
       // can never read a memo where a crawl time should be
       c6Memo.remove(System.identityHashCode(s))
       val memo = c6Memo.computeIfAbsent(System.identityHashCode(s), _ => withFixtureConf(s) {
-        Udfs.register(s)
         import s.implicits._
         val cfg = PageGen.Config(nHosts = 3, pagesPerHost = 10, hotHosts = 1, hotFactor = 2, fanout = 3)
         val pages = PageGen.pages(s, cfg).toDF()
@@ -1183,7 +1169,6 @@ object SparkEntry {
       // in DuckDB: same discoveries, same robots denials, same retry
       // ladder, proving the pages-table model and the live loop are the
       // same crawl with a different capture backend.
-      Udfs.register(s)
       import s.implicits._
       val cfg = PageGen.Config(nHosts = 3, pagesPerHost = 10, hotHosts = 1, hotFactor = 2, fanout = 3)
       // the "web server": canonical url -> served content (30 pages +
@@ -1222,7 +1207,6 @@ object SparkEntry {
       // shared crawl; this query re-runs an independent identical crawl and
       // returns the SYMMETRIC DIFFERENCE of the two full frontiers —
       // oracled as the empty set.
-      Udfs.register(s)
       import s.implicits._
       val cfg = PageGen.Config(nHosts = 3, pagesPerHost = 10, hotHosts = 1, hotFactor = 2, fanout = 3)
       val pages = PageGen.pages(s, cfg).toDF()
@@ -1247,7 +1231,6 @@ object SparkEntry {
       // first-attempt successes. 4 missing + 2 captured urls; tick=43200
       // covers every ladder delay (30, 3600, 21600) so each step re-selects
       // the still-ACTIVE failures exactly once.
-      Udfs.register(s)
       import s.implicits._
       val html = "<html><body>ok, no links</body></html>".getBytes("UTF-8")
       val ts = new java.sql.Timestamp(0L)
@@ -1273,11 +1256,11 @@ object SparkEntry {
         val packed0 = r.upserts
           .select(graft.sched.RuntimeConst.stepConstInt(step).as("step"),
             $"url", $"status", $"retried", $"exetime")
-        val (f2, b2, _, _, packedCk) = Crawler.checkpointCarryFused(r.frontier,
+        val ck = Crawler.checkpointCarryFused(r.frontier,
           r.budgets, Crawler.emptyResults(s), None, Some(packed0))
-        frontier = f2; budgets = b2
+        frontier = ck.frontier; budgets = ck.budgets
         r.unpersistAll()
-        packedCk.get
+        ck.packed.get
       }
       perStep.reduce(_ unionByName _).orderBy("step", "url")
     })

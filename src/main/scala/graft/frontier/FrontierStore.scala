@@ -11,9 +11,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
  * The layout keeps Iceberg's contract (snapshots + manifests + per-partition
  * lineage, atomic pointer swap) so `iceberg-spark-runtime` can slot in later.
  *
- * Round-2 storage model: COPY-ON-WRITE OF TOUCHED BUCKETS ONLY. Round 1
- * rewrote the whole frontier every superstep — O(frontier) I/O per step
- * regardless of batch size, the 100 TB scale-killer. Now:
+ * Storage model: copy-on-write of the touched buckets only, so a commit's
+ * I/O follows the step, not the frontier:
  *
  *   root/VERSION                     current snapshot id (atomic swap)
  *   root/snap-N/manifest.json        step, now, per-bucket OWNER lineage
@@ -44,9 +43,12 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
  * count sits slightly above its design rate (its hash count is rounded), and
  * a full 32-bloom chain sized at `bloomFpp / compactEvery` measured 1.01 %
  * false positives at a 1 % budget.
- * Writes stage into `snap-N.tmp/` and commit via atomic directory rename +
- * VERSION pointer swap — a reader never observes a half-written snapshot
- * (resume contract, SURVEY §3.2).
+ * A commit writes its sections one after another into `snap-N.tmp/`:
+ * frontier, seen delta + blooms, results, budgets, then the manifest (a
+ * compaction's seen and results rewrites read the project set its frontier
+ * merge keeps, so the frontier goes first). It commits via atomic directory
+ * rename + VERSION pointer swap — a reader never observes a half-written
+ * snapshot (resume contract, SURVEY §3.2).
  *
  * The frontier buckets by pmod(xxhash64(host, project), P) — the salted
  * host-hash politeness layout (north_rule) — while the seen index buckets
@@ -168,9 +170,12 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
    * Commit one superstep as a new snapshot: copy-on-write of the frontier
    * buckets touched by `upserts`, append-only seen-key + results deltas,
    * one delta bloom per touched seen-bucket. O(touched + step), never
-   * O(frontier) — except on compaction snapshots.
+   * O(frontier) — except on compaction snapshots. The sections run in the
+   * order the header gives; every input is read by the sections that use
+   * it, so a caller passes materialized frames ([[graft.sched.StepDriver]]
+   * passes the splits of its step checkpoint and a local counters frame).
    *
-   * @param upserts   full frontier rows to insert-or-replace (frontierCols)
+   * @param upserts  full frontier rows to insert-or-replace (frontierCols)
    * @param freshKeys (project, url_hash) subset of upserts that are NEW —
    *                  these enter the seen index
    */
@@ -185,317 +190,231 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
     deleteRecursively(tmp)
     Files.createDirectories(tmp)
 
-    // The four payloads (frontier/, seen-delta/+blooms/, budgets/,
-    // results-delta/) commit to INDEPENDENT directories inside the staged
-    // snapshot, so their writes overlap on driver threads (Spark job
-    // submission is thread-safe; the manifest rename below is still the
-    // single atomic commit point). Ordering constraints: a compaction's
-    // seen AND results rewrites consume keepProjects from the frontier
-    // merge, so full snapshots run frontier -> {seen, results} sequentially.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val writeEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    // the counters arrive as the superstep's lazy aggregate: collect on a
-    // concurrent future started before any write job, so the counters
-    // aggregate's driver planning + stage waves overlap the commit's write
-    // jobs instead of costing their own serial action. A LocalRelation
-    // counters frame (the bootstrap's empty one) resolves in microseconds.
-    val fCounterRows = Future(counters.collect())
-    val fBudgets = Future {
+    // Frames this commit persists, released however it ends: a section that
+    // throws stops the commit there, leaving only staged debris in
+    // snap-N.tmp, which the next commit of the same id deletes.
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = {
+      cached += df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    def withSeenKey(keys: DataFrame): DataFrame = keys
+      .withColumn("skey", xxhash64(col("project"), col("url_hash")))
+      .withColumn("bucket", seenBucket(col("skey")))
+    try {
+      val keyCols = Seq("project", "url_hash")
+      val up = persisted(upserts.withColumn("bucket", frontierBucket))
+      val seenKeyedInc: Option[DataFrame] =
+        if (full) None else Some(persisted(withSeenKey(freshKeys.select("project", "url_hash"))))
+      // Incremental steps: ONE stats job covers both per-bucket breakdowns
+      // (frontier buckets touched by upserts + seen buckets of fresh keys),
+      // materializing both persisted frames as it goes.
+      val incStats: Map[(Int, Int), Long] =
+        if (full) Map.empty
+        else up.select(col("bucket"), lit(0).as("kind"))
+          .unionByName(seenKeyedInc.get.select(col("bucket"), lit(1).as("kind")))
+          .groupBy("kind", "bucket").count().collect()
+          .map(r => (r.getAs[Int]("kind"), r.getAs[Int]("bucket")) -> r.getAs[Long]("count"))
+          .toMap
+
+      // ---- 1. frontier: copy-on-write of the touched buckets
+      val touched: Array[Int] =
+        if (full) (0 until numPartitions).toArray
+        else incStats.keys.collect { case (0, b) => b }.toArray.sorted
+      val oldTouched = prev.flatMap { mf =>
+        val paths = touched.collect {
+          case b if mf.frontierOwner(b) != 0L =>
+            snapDir(mf.frontierOwner(b)).resolve(s"frontier/bucket=$b").toString
+        }
+        if (paths.isEmpty) None
+        else Some(spark.read.schema(FrontierStore.frontierSchema).parquet(paths.toIndexedSeq: _*))
+      }
+      // broadcast-hint the step-sized key side of the COW anti-join when
+      // small (known exactly from incStats, no extra job): without the hint
+      // a plan-time SMJ shuffles the touched buckets' full row set every
+      // commit — two materialized exchanges of pure fixed cost at
+      // politeness-small step sizes (same rationale as
+      // Superstep.Config.smallStep; threshold shared)
+      val upRows = incStats.collect { case ((0, _), n) => n }.sum
+      val upKeys0 = up.select(keyCols.map(col): _*)
+      val upKeys =
+        if (!full && upRows < graft.sched.StepDriver.SmallStepRows) broadcast(upKeys0)
+        else upKeys0
+      val merged0 = oldTouched.fold(up)(old =>
+        old.join(upKeys, keyCols, "left_anti").withColumn("bucket", frontierBucket)
+          .unionByName(up))
+      // compaction reads every live bucket; persist so the ACTIVE-project
+      // scan and the partitionBy write don't both re-read the whole
+      // frontier from parquet
+      val merged = if (full && oldTouched.nonEmpty) persisted(merged0) else merged0
+      // FINISHED-project cleanup: at compaction a project with zero ACTIVE
+      // rows has drained — drop all its rows (and, below, its seen keys and
+      // results). This matches the reference EXACTLY: when a project's
+      // unfinished count reaches 0 the scheduler sets status FINISHED and
+      // calls taskdb.drop (scheduler.py:348-374 delete_project) — drain IS
+      // deletion there too, and a re-seeded URL after the drop is
+      // legitimately brand-new; without it dead projects accumulate in the
+      // frontier forever. Projects with ACTIVE work (incl. STOP-ed ones
+      // awaiting re-activation) keep their full row set.
+      val keepProjects: Option[DataFrame] =
+        if (full) Some(merged.where(col("status") === graft.model.TaskStatus.Active)
+          .select("project").distinct())
+        else None
+      def keptOnly(df: DataFrame): DataFrame =
+        keepProjects.fold(df)(k => df.join(broadcast(k), Seq("project"), "left_semi"))
+      // Zero-upsert superstep (retry backoff / politeness lull while ACTIVE
+      // tasks remain): a partitionBy write of an empty frame produces NO
+      // parquet files, so the read-back would throw UNABLE_TO_INFER_SCHEMA.
+      // Skip the frontier write entirely and carry the lineage forward
+      // unchanged — the snapshot still commits budgets/results/manifest.
+      val writtenCounts: Map[Int, Long] =
+        if (!full && touched.isEmpty) Map.empty
+        else {
+          // one writer task per touched bucket: without this, every upstream
+          // task writes into every bucket dir — O(tasks x buckets) tiny files
+          // per snapshot, and the read-back + every later resume pays a
+          // footer-read per file. Bucket = the store's read parallelism unit,
+          // so one file per bucket is the intended layout.
+          keptOnly(merged).repartition(math.max(1, touched.length), col("bucket"))
+            .write.mode(SaveMode.Overwrite)
+            .partitionBy("bucket").parquet(tmp.resolve("frontier").toString)
+          // per-bucket lineage: owner + row count — from the parquet FOOTERS
+          // of the files just written (driver-side metadata reads, a few ms
+          // per touched bucket), NOT a read-back scan job of every touched
+          // bucket per snapshot.
+          val d = tmp.resolve("frontier")
+          if (!Files.exists(d)) Map.empty
+          else {
+            import scala.jdk.CollectionConverters._
+            val ls = Files.list(d)
+            try ls.iterator().asScala
+              .filter(_.getFileName.toString.startsWith("bucket="))
+              .map(bd => bd.getFileName.toString.stripPrefix("bucket=").toInt ->
+                FrontierStore.footerRowCount(spark, bd))
+              .toMap
+            finally ls.close()
+          }
+        }
+
+      // ---- 2. seen index: key delta + delta bloom (append-only; compaction
+      // rewrites the full key set so the chain re-bases)
+      val seenKeyed = seenKeyedInc.getOrElse {
+        // full snapshot: re-base from the whole committed key set + fresh
+        // keys; a dropped (drained) project's seen keys go with it — the
+        // reference forgets a deleted project's taskdb entirely
+        val fresh = freshKeys.select("project", "url_hash")
+        persisted(withSeenKey(keptOnly(prev.fold(fresh)(mf =>
+          SeenFilter(seenBuckets, rootDir, mf.seenChain).keysFor(spark, 0 until seenBuckets)
+            .unionByName(fresh)))))
+      }
+      val keysPerBucket: Map[Int, Long] =
+        if (full)
+          seenKeyed.groupBy("bucket").count().collect()
+            .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("count")).toMap
+        else incStats.collect { case ((1, b), n) => b -> n }
+      val seenTouched: Array[Int] = keysPerBucket.keys.toArray.sorted
+      if (seenTouched.nonEmpty) {
+        seenKeyed.repartition(math.max(1, seenTouched.length), col("bucket"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket").parquet(tmp.resolve("seen-delta").toString)
+        // delta blooms: executors write side-files into the staged snapshot
+        // (shared FS — same contract as any shuffle/output commit), each sized
+        // to its bucket's keys in this snapshot; file names are deterministic
+        // so task retries overwrite identically
+        Files.createDirectories(tmp.resolve("blooms"))
+        val tmpStr = tmp.toString
+        val fpp = bloomFpp / (2 * compactEvery)
+        seenKeyed.select(col("bucket"), col("skey")).as[(Int, Long)](
+            org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaInt,
+              org.apache.spark.sql.Encoders.scalaLong))
+          .repartition(math.max(1, seenTouched.length), col("bucket"))
+          .foreachPartition { (it: Iterator[(Int, Long)]) =>
+            val byBucket = scala.collection.mutable.HashMap
+              .empty[Int, org.apache.spark.util.sketch.BloomFilter]
+            it.foreach { case (b, k) =>
+              byBucket.getOrElseUpdate(b,
+                org.apache.spark.util.sketch.BloomFilter.create(
+                  math.max(keysPerBucket(b), FrontierStore.MinBloomItems), fpp)).putLong(k)
+            }
+            byBucket.foreach { case (b, bloom) =>
+              val out = Files.newOutputStream(Paths.get(s"$tmpStr/blooms/$b.bloom"))
+              try bloom.writeTo(out) finally out.close()
+            }
+          }
+      }
+      val delta = if (seenTouched.nonEmpty) Seq(id -> seenTouched.toSet) else Seq.empty
+      val seenChain = if (full) delta else prev.map(_.seenChain).getOrElse(Seq.empty) ++ delta
+
+      // ---- 3. results: an appended delta; a compaction rewrites the history
+      // without the dropped projects' rows — otherwise a later re-seed of
+      // the same URL starts crawled_ok=false and appends a duplicate
+      // (project, url_hash) the first-writer-wins contract promises never
+      // exists (StepResult.firstResults invariant). Written unconditionally:
+      // emptiness is read from the written files' parquet footers on the
+      // driver (a few ms), not from an `.isEmpty` probe job.
+      val resultsDir = tmp.resolve("results-delta")
+      keptOnly(prev.filter(_ => full).fold(newResults)(mf =>
+          resultsView(spark, mf).unionByName(newResults)))
+        .write.mode(SaveMode.Overwrite).parquet(resultsDir.toString)
+      val hasResults = FrontierStore.footerRowCount(spark, resultsDir) > 0
+      if (!hasResults) deleteRecursively(resultsDir) // keep zero-row dirs out of the view
+      val resultSnaps =
+        (if (full) Seq.empty else prev.map(_.resultSnaps).getOrElse(Seq.empty)) ++
+          (if (hasResults) Seq(id) else Seq.empty)
+
+      // ---- 4. budgets: the whole politeness state, replaced
       budgets.coalesce(math.max(1, numPartitions / 8))
         .write.mode(SaveMode.Overwrite).parquet(tmp.resolve("budgets").toString)
-    }
-    // results are written UNCONDITIONALLY and emptiness is read from the
-    // written files' parquet footers on the driver (a few ms) — the old
-    // `.isEmpty` probe was a full plan + 1-task job per superstep that the
-    // non-empty (common) case paid ON TOP of the write (guide §1.2: fixed
-    // cost per step is the store path's bottleneck, not bytes)
-    def resultsSection(keep: Option[DataFrame]): Boolean = {
-      val resultsSrc0 =
-        if (full && prev.nonEmpty)
-          resultsView(spark, prev.get).unionByName(newResults)
-        else newResults
-      // compaction cleanup (drain IS deletion, matching frontier/seen): a
-      // dropped project's result rows go with it — otherwise a later
-      // re-seed of the same URL starts crawled_ok=false and appends a
-      // duplicate (project, url_hash) the first-writer-wins contract
-      // promises never exists (StepResult.firstResults invariant)
-      val resultsSrc = keep match {
-        case Some(k) if full => resultsSrc0.join(broadcast(k), Seq("project"), "left_semi")
-        case _ => resultsSrc0
-      }
-      val dir = tmp.resolve("results-delta")
-      resultsSrc.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      val has = FrontierStore.footerRowCount(spark, dir) > 0
-      if (!has) deleteRecursively(dir) // keep zero-row dirs out of the view
-      has
-    }
-    // incremental snapshots never drop projects -> results write starts now;
-    // full snapshots defer it until keepProjects exists (below)
-    val fResultsInc: Option[Future[Boolean]] =
-      if (full) None else Some(Future(resultsSection(None)))
 
-    val keyCols = Seq("project", "url_hash")
-    val up = upserts.withColumn("bucket", frontierBucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Incremental steps: ONE stats job covers both per-bucket breakdowns
-    // (frontier buckets touched by upserts + seen buckets of fresh keys),
-    // materializing both persisted frames as it goes — previously two
-    // separate jobs (a distinct().collect() and a groupBy().count()) paid
-    // two plan+schedule rounds per superstep for the same information.
-    val seenKeyedInc: Option[DataFrame] =
-      if (full) None
-      else Some(freshKeys.select("project", "url_hash")
-        .withColumn("skey", xxhash64(col("project"), col("url_hash")))
-        .withColumn("bucket", seenBucket(col("skey")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val incStats: Map[(Int, Int), Long] =
-      if (full) Map.empty
-      else up.select(col("bucket"), lit(0).as("kind"))
-        .unionByName(seenKeyedInc.get.select(col("bucket"), lit(1).as("kind")))
-        .groupBy("kind", "bucket").count().collect()
-        .map(r => (r.getAs[Int]("kind"), r.getAs[Int]("bucket")) -> r.getAs[Long]("count"))
-        .toMap
-
-    // ---- frontier COW
-    val touched: Array[Int] =
-      if (full) (0 until numPartitions).toArray
-      else incStats.keys.collect { case (0, b) => b }.toArray.sorted
-    // Zero-upsert superstep (retry backoff / politeness lull while ACTIVE
-    // tasks remain): a partitionBy write of an empty frame produces NO
-    // parquet files, so the read-back would throw UNABLE_TO_INFER_SCHEMA.
-    // Skip the frontier write entirely and carry the lineage forward
-    // unchanged — the snapshot still commits budgets/results/manifest.
-    val skipFrontierWrite = !full && touched.isEmpty
-    // set when a compaction drops drained (FINISHED) projects — the seen
-    // rewrite below filters those projects' keys with the same frame
-    var keepProjects: Option[DataFrame] = None
-    // compaction-persisted merge frame, released only after the seen
-    // section (keepProjects derives from it)
-    var compactCache: Option[DataFrame] = None
-    def frontierSection(): Map[Int, Long] =
-      if (skipFrontierWrite) Map.empty
-      else {
-        val oldTouched = prev match {
-          case None => None
-          case Some(mf) =>
-            val paths = touched.collect {
-              case b if mf.frontierOwner(b) != 0L =>
-                snapDir(mf.frontierOwner(b)).resolve(s"frontier/bucket=$b").toString
-            }
-            if (paths.isEmpty) None
-            else Some(spark.read.schema(FrontierStore.frontierSchema)
-              .parquet(paths.toIndexedSeq: _*))
-        }
-        // broadcast-hint the step-sized key side of the COW anti-join when
-        // small (known exactly from incStats, no extra job): without the
-        // hint a plan-time SMJ shuffles the touched buckets' full row set
-        // every commit — two materialized exchanges of pure fixed cost at
-        // politeness-small step sizes (same rationale as
-        // Superstep.Config.smallStep; threshold shared)
-        val upRows = incStats.collect { case ((0, _), n) => n }.sum
-        val upKeys0 = up.select(keyCols.map(col): _*)
-        val upKeys =
-          if (!full && upRows < graft.sched.StepDriver.SmallStepRows) broadcast(upKeys0)
-          else upKeys0
-        val merged0 = oldTouched match {
-          case None => up
-          case Some(old) =>
-            old.join(upKeys, keyCols, "left_anti")
-              .withColumn("bucket", frontierBucket)
-              .unionByName(up)
-        }
-        // FINISHED-project cleanup: at compaction a project with zero
-        // ACTIVE rows has drained — drop all its rows (and, below, its seen
-        // keys and results). This matches the reference EXACTLY: when a
-        // project's unfinished count reaches 0 the scheduler sets status
-        // FINISHED and calls taskdb.drop (scheduler.py:348-374
-        // delete_project) — drain IS deletion there too, and a re-seeded
-        // URL after the drop is legitimately brand-new; without it dead
-        // projects accumulate in the frontier forever. Projects with ACTIVE
-        // work (incl. STOP-ed ones awaiting re-activation) keep their full
-        // row set.
-        val merged1 =
-          if (full)
-            // compaction reads every live bucket; persist so the ACTIVE-
-            // project scan and the partitionBy write don't both re-read
-            // the whole frontier from parquet
-            merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else merged0
-        val mergedTouched =
-          if (full) {
-            val act = merged1.where(col("status") === graft.model.TaskStatus.Active)
-              .select("project").distinct()
-            keepProjects = Some(act)
-            merged1.join(broadcast(act), Seq("project"), "left_semi")
-          } else merged1
-        // one writer task per touched bucket: without this, every upstream
-        // task writes into every bucket dir — O(tasks x buckets) tiny files
-        // per snapshot, and the read-back + every later resume pays a
-        // footer-read per file. Bucket = the store's read parallelism unit,
-        // so one file per bucket is the intended layout.
-        mergedTouched.repartition(math.max(1, touched.length), col("bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("bucket").parquet(tmp.resolve("frontier").toString)
-        if (merged1 ne merged0) compactCache = Some(merged1)
-        // per-bucket lineage: owner + row count — from the parquet FOOTERS
-        // of the files just written (driver-side metadata reads, a few ms
-        // per touched bucket), NOT a read-back scan job: the scan was a
-        // full re-read of every touched bucket per snapshot — at the
-        // all-buckets-touched steady state, an extra O(frontier) pass per
-        // step for numbers the footers already hold.
-        val d = tmp.resolve("frontier")
-        if (!Files.exists(d)) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          val ls = Files.list(d)
-          try ls.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("bucket="))
-            .map(bd => bd.getFileName.toString.stripPrefix("bucket=").toInt ->
-              FrontierStore.footerRowCount(spark, bd))
-            .toMap
-          finally ls.close()
-        }
+      val frontierOwner = Array.tabulate(numPartitions) { b =>
+        if (writtenCounts.contains(b)) id
+        // a touched-but-now-empty bucket must NOT keep pointing at an old
+        // snapshot: on a compaction snapshot the old owners are GC'd below
+        else if (full || touched.contains(b)) 0L
+        else prev.map(_.frontierOwner(b)).getOrElse(0L)
       }
-    val fFrontier = Future(frontierSection())
-    // compaction: the frontier merge must complete before the seen and
-    // results rewrites (keepProjects); incremental snapshots overlap all
-    if (full) Await.ready(fFrontier, Duration.Inf)
-    val fResultsFull: Option[Future[Boolean]] =
-      if (full) Some(Future(resultsSection(keepProjects))) else None
-
-    // ---- seen index: key delta + delta bloom (append-only; compaction
-    // rewrites the full key set so the chain re-bases). The whole section
-    // runs as ANOTHER concurrent write future: on incremental snapshots it
-    // is independent of the frontier COW (on full ones keepProjects was
-    // already awaited above), and its jobs' driver-side planning gaps
-    // overlap the frontier write's instead of summing — the superstep
-    // commit path is fixed-cost-bound at small step sizes.
-    def seenSection(): Seq[(Long, Set[Int])] = {
-    val seenKeyed = seenKeyedInc.getOrElse {
-      // full snapshot: re-base from the whole committed key set + fresh keys
-      val seenSrc0 =
-        if (prev.nonEmpty)
-          SeenFilter(seenBuckets, rootDir, prev.get.seenChain)
-            .keysFor(spark, 0 until seenBuckets)
-            .unionByName(freshKeys.select("project", "url_hash"))
-        else freshKeys.select("project", "url_hash")
-      // compaction cleanup: a dropped (drained) project's seen keys go with
-      // it — the reference forgets a deleted project's taskdb entirely
-      val seenSrc = keepProjects match {
-        case Some(keep) => seenSrc0.join(broadcast(keep), Seq("project"), "left_semi")
-        case _ => seenSrc0
+      val rowsPerBucket = Array.tabulate(numPartitions) { b =>
+        if (writtenCounts.contains(b)) writtenCounts(b)
+        else if (full || touched.contains(b)) 0L
+        else prev.map(_.rowsPerBucket(b)).getOrElse(0L)
       }
-      seenSrc
-        .withColumn("skey", xxhash64(col("project"), col("url_hash")))
-        .withColumn("bucket", seenBucket(col("skey")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val keysPerBucket: Map[Int, Long] =
-      if (full)
-        seenKeyed.groupBy("bucket").count().collect()
-          .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("count")).toMap
-      else incStats.collect { case ((1, b), n) => b -> n }
-    val seenTouched: Array[Int] = keysPerBucket.keys.toArray.sorted
-    if (seenTouched.nonEmpty) {
-      seenKeyed.repartition(math.max(1, seenTouched.length), col("bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket").parquet(tmp.resolve("seen-delta").toString)
-      // delta blooms: executors write side-files into the staged snapshot
-      // (shared FS — same contract as any shuffle/output commit), each sized
-      // to its bucket's keys in this snapshot; file names are deterministic
-      // so task retries overwrite identically
-      Files.createDirectories(tmp.resolve("blooms"))
-      val tmpStr = tmp.toString
-      val fpp = bloomFpp / (2 * compactEvery)
-      seenKeyed.select(col("bucket"), col("skey")).as[(Int, Long)](
-          org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaInt,
-            org.apache.spark.sql.Encoders.scalaLong))
-        .repartition(math.max(1, seenTouched.length), col("bucket"))
-        .foreachPartition { (it: Iterator[(Int, Long)]) =>
-          val byBucket = scala.collection.mutable.HashMap
-            .empty[Int, org.apache.spark.util.sketch.BloomFilter]
-          it.foreach { case (b, k) =>
-            byBucket.getOrElseUpdate(b,
-              org.apache.spark.util.sketch.BloomFilter.create(
-                math.max(keysPerBucket(b), FrontierStore.MinBloomItems), fpp)).putLong(k)
+
+      // ---- manifest. The counter rows arrive as a handful of rows (one per
+      // project; the crawl loops pass the rows their step checkpoint
+      // returned as a local frame) — sorted on the driver.
+      val counterRows = counters.collect().sortBy(_.getAs[String]("project"))
+      val perProject = counterRows.map { r =>
+        val fields = r.schema.fieldNames.map { f =>
+          val vs = r.getAs[Any](f) match {
+            case s: String => FrontierStore.jsonStr(s)
+            case other => String.valueOf(other)
           }
-          byBucket.foreach { case (b, bloom) =>
-            val out = Files.newOutputStream(Paths.get(s"$tmpStr/blooms/$b.bloom"))
-            try bloom.writeTo(out) finally out.close()
-          }
-        }
-    }
-    seenKeyed.unpersist(false)
-    val delta = if (seenTouched.nonEmpty) Seq(id -> seenTouched.toSet) else Seq.empty
-    if (full) delta else prev.map(_.seenChain).getOrElse(Seq.empty) ++ delta
-    }
-    val fSeen = Future(seenSection())
-
-    // ---- join the concurrent frontier/budgets/results/seen writes
-    val writtenCounts: Map[Int, Long] = Await.result(fFrontier, Duration.Inf)
-    val seenChain = Await.result(fSeen, Duration.Inf)
-    val frontierOwner = Array.tabulate(numPartitions) { b =>
-      if (writtenCounts.contains(b)) id
-      // a touched-but-now-empty bucket must NOT keep pointing at an old
-      // snapshot: on a compaction snapshot the old owners are GC'd below
-      else if (full || touched.contains(b)) 0L
-      else prev.map(_.frontierOwner(b)).getOrElse(0L)
-    }
-    val rowsPerBucket = Array.tabulate(numPartitions) { b =>
-      if (writtenCounts.contains(b)) writtenCounts(b)
-      else if (full || touched.contains(b)) 0L
-      else prev.map(_.rowsPerBucket(b)).getOrElse(0L)
-    }
-    val hasResults = Await.result(fResultsInc.orElse(fResultsFull).get, Duration.Inf)
-    Await.result(fBudgets, Duration.Inf)
-    val resultSnaps =
-      if (full) (if (hasResults) Seq(id) else Seq.empty)
-      else prev.map(_.resultSnaps).getOrElse(Seq.empty) ++
-        (if (hasResults) Seq(id) else Seq.empty)
-
-    // ---- manifest + atomic commit. The counter rows were collected above
-    // (one row per project) — sort on the driver instead of paying a
-    // SortExec job per snapshot for a handful of rows.
-    val counterRowsC = Await.result(fCounterRows, Duration.Inf)
-      .sortBy(_.getAs[String]("project"))
-    val perProject = counterRowsC.map { r =>
-      val fields = r.schema.fieldNames.map { f =>
-        val v = r.getAs[Any](f)
-        val vs = v match {
-          case s: String => FrontierStore.jsonStr(s)
-          case other => String.valueOf(other)
-        }
-        s"""${FrontierStore.jsonStr(f)}:$vs"""
-      }.mkString(",")
-      s"{$fields}"
-    }.mkString("[", ",", "]")
-    // cumulative per-project totals (reference counter reload semantics):
-    // prev totals + this step's numeric counter fields
-    val counterTotals: Map[String, Map[String, Long]] =
-      counterRowsC.foldLeft(prev.map(_.counterTotals).getOrElse(Map.empty))(
-        FrontierStore.foldCounterRow)
-    val total = rowsPerBucket.sum
-    val lineageJson = touched
-      .map(b => s"""{"partition":$b,"rows":${rowsPerBucket(b)},"owner":$id}""")
-      .mkString("[", ",", "]")
-    val base = if (full) id else prev.get.base
-    val manifest =
-      s"""{"format":${FrontierStore.FormatVersion},
-         |"snapshot":$id,"step":$step,"now":$now,"base":$base,"full":$full,
-         |"num_partitions":$numPartitions,"seen_buckets":$seenBuckets,
-         |"frontier_rows":$total,
-         |"frontier_owner":"${frontierOwner.mkString(",")}",
-         |"rows_per_bucket":"${rowsPerBucket.mkString(",")}",
-         |"seen_chain":"${seenChain.map { case (s, bs) => s"$s:${bs.toSeq.sorted.mkString("|")}" }.mkString(";")}",
-         |"results_snaps":"${resultSnaps.mkString(",")}",
-         |"counter_totals":"${FrontierStore.encodeCounterTotals(counterTotals)}",
-         |"touched_partitions":$lineageJson,
-         |"counters":$perProject}""".stripMargin
-    Files.writeString(tmp.resolve("manifest.json"), manifest)
-    up.unpersist(false)
-    compactCache.foreach(_.unpersist(false))
+          s"""${FrontierStore.jsonStr(f)}:$vs"""
+        }.mkString(",")
+        s"{$fields}"
+      }.mkString("[", ",", "]")
+      // cumulative per-project totals (reference counter reload semantics):
+      // prev totals + this step's numeric counter fields
+      val counterTotals: Map[String, Map[String, Long]] =
+        counterRows.foldLeft(prev.map(_.counterTotals).getOrElse(Map.empty))(
+          FrontierStore.foldCounterRow)
+      val lineageJson = touched
+        .map(b => s"""{"partition":$b,"rows":${rowsPerBucket(b)},"owner":$id}""")
+        .mkString("[", ",", "]")
+      val base = if (full) id else prev.get.base
+      Files.writeString(tmp.resolve("manifest.json"),
+        s"""{"format":${FrontierStore.FormatVersion},
+           |"snapshot":$id,"step":$step,"now":$now,"base":$base,"full":$full,
+           |"num_partitions":$numPartitions,"seen_buckets":$seenBuckets,
+           |"frontier_rows":${rowsPerBucket.sum},
+           |"frontier_owner":"${frontierOwner.mkString(",")}",
+           |"rows_per_bucket":"${rowsPerBucket.mkString(",")}",
+           |"seen_chain":"${seenChain.map { case (s, bs) => s"$s:${bs.toSeq.sorted.mkString("|")}" }.mkString(";")}",
+           |"results_snaps":"${resultSnaps.mkString(",")}",
+           |"counter_totals":"${FrontierStore.encodeCounterTotals(counterTotals)}",
+           |"touched_partitions":$lineageJson,
+           |"counters":$perProject}""".stripMargin)
+    } finally cached.foreach(_.unpersist(false))
 
     val fin = snapDir(id)
     deleteRecursively(fin)

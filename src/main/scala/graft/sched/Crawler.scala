@@ -1,6 +1,7 @@
 package graft.sched
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.frontier.SnapshotStore
@@ -97,70 +98,74 @@ object Crawler {
   }
 
   /** The tagged-union plan the fused carry materializes: one leg per frame,
-    * tagged 0 frontier, 1 budgets, 2 results, 3 counters, 4 packed. */
+    * tagged 0 frontier, 1 budgets, 2 results, 3 counters, 4 packed, 5 fresh
+    * keys. Each leg fills the frontier columns it has and the four extra
+    * slots it uses; every other slot is a typed null. */
   private def carryUnion(frontier: DataFrame, budgets: DataFrame,
-      results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame]): DataFrame = {
-    val fc = Superstep.frontierCols
+      results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame],
+      freshKeys: Option[DataFrame]): DataFrame = {
     val fSchema = graft.frontier.FrontierStore.frontierSchema
-    def fnull(n: String) = lit(null).cast(fSchema(n).dataType).as(n)
-    def nul(t: String, n: String) = lit(null).cast(t).as(n)
-    val fPart = frontier.select((lit(0).as("tag") +: fc.map(col)) ++ Seq(
-      nul("double", "b_tokens"), nul("double", "b_last_update"),
-      nul("string", "r_type"), nul("map<string,string>", "r_data")): _*)
-    val bPart = budgets.select((lit(1).as("tag") +: fc.map {
-      case c @ ("project" | "host") => col(c)
-      case other => fnull(other)
-    }) ++ Seq(col("tokens").as("b_tokens"), col("last_update").as("b_last_update"),
-      nul("string", "r_type"), nul("map<string,string>", "r_data")): _*)
-    val rPart = results.select((lit(2).as("tag") +: fc.map {
-      case c @ ("project" | "url_hash" | "url" | "seed_url" | "updatetime") => col(c)
-      case other => fnull(other)
-    }) ++ Seq(nul("double", "b_tokens"), nul("double", "b_last_update"),
-      col("type").as("r_type"), col("data").as("r_data")): _*)
+    val extras = Seq("b_tokens" -> "double", "b_last_update" -> "double",
+      "r_type" -> "string", "r_data" -> "map<string,string>")
+    def leg(df: DataFrame, tag: Int, cols: PartialFunction[String, Column],
+        extra: Map[String, Column] = Map.empty): DataFrame =
+      df.select((lit(tag).as("tag") +: Superstep.frontierCols.map(n =>
+        cols.applyOrElse(n, (_: String) => lit(null).cast(fSchema(n).dataType)).as(n))) ++
+        extras.map { case (n, t) => extra.getOrElse(n, lit(null).cast(t)).as(n) }: _*)
+    def keep(names: String*): PartialFunction[String, Column] = {
+      case n if names.contains(n) => col(n)
+    }
+    val fPart = leg(frontier, 0, { case n => col(n) })
+    val bPart = leg(budgets, 1, keep("project", "host"),
+      Map("b_tokens" -> col("tokens"), "b_last_update" -> col("last_update")))
+    val rPart = leg(results, 2, keep("project", "url_hash", "url", "seed_url", "updatetime"),
+      Map("r_type" -> col("type"), "r_data" -> col("data")))
     val cPart = counters.map { cdf =>
       val byName = map(cdf.schema.fieldNames.filter(_ != "project").toSeq.flatMap(n =>
         Seq(lit(n), coalesce(col(n).cast("string"), lit("0")))): _*)
-      cdf.select((lit(3).as("tag") +: fc.map {
-        case "project" => col("project")
-        case other => fnull(other)
-      }) ++ Seq(nul("double", "b_tokens"), nul("double", "b_last_update"),
-        nul("string", "r_type"), byName.cast("map<string,string>").as("r_data")): _*)
+      leg(cdf, 3, keep("project"), Map("r_data" -> byName.cast("map<string,string>")))
     }
-    val pPart = packed.map { pdf =>
-      pdf.select((lit(4).as("tag") +: fc.map {
-        case c @ ("url" | "status" | "retried" | "exetime") => col(c)
-        case "priority" => col("step").as("priority")
-        case other => fnull(other)
-      }) ++ Seq(nul("double", "b_tokens"), nul("double", "b_last_update"),
-        nul("string", "r_type"), nul("map<string,string>", "r_data")): _*)
-    }
-    (Seq(fPart, bPart, rPart) ++ cPart ++ pPart).reduce(_ unionByName _)
+    val pPart = packed.map(leg(_, 4,
+      keep("url", "status", "retried", "exetime").orElse { case "priority" => col("step") }))
+    val kPart = freshKeys.map(leg(_, 5, keep("project", "url_hash")))
+    (Seq(fPart, bPart, rPart) ++ cPart ++ pPart ++ kPart).reduce(_ unionByName _)
   }
 
-  /** Materialize a step's three carry frames (frontier, budgets, results)
-    * in ONE localCheckpoint job: tag-union into a superset schema, split
-    * back with narrow filters over the checkpointed rows. Separate eager
-    * checkpoints would each pay their own plan + job-submission round per
+  /** A step's frames as [[checkpointCarryFused]] splits them back out of
+    * its one checkpoint, each conformed to its input schema. */
+  private[graft] final case class Carry(frontier: DataFrame, budgets: DataFrame,
+      results: DataFrame, counterRows: Seq[Row], packed: Option[DataFrame],
+      freshKeys: Option[DataFrame])
+
+  /** Materialize a step's outputs in ONE localCheckpoint job: tag-union
+    * into a superset schema, split back with narrow filters over the
+    * checkpointed rows. Separate actions would each plan the superstep's
+    * lazy output graph again and pay their own job-submission round per
     * superstep — pure fixed cost that dominates fixture-sized and
     * politeness-bound steps (guide §1.2: the per-step constant IS the
     * bottleneck at small step sizes). Values are unchanged: tags are
     * disjoint, the split filters recover exactly the input rows, so
-    * determinism (x13) and every oracle hold. Optional extra legs ride the
-    * same job:
-    *  - `counters` (tag 3): the step's lazy counters aggregate
-    *    ([[Superstep.StepResult.counters]]) rides the checkpoint as
-    *    (project, counter name -> value in the r_data map slot); the
-    *    returned Rows are recovered by name with a narrow filter-collect
-    *    over the already-cached checkpoint RDD — values identical to a
-    *    separate collect (same aggregate plan, same input), only the action
-    *    count changes. A null sum travels as 0.
-    *  - `packed` (tag 4): a (step,url,status,retried,exetime) projection
-    *    (p7's per-step trajectory rows); `step` travels in the priority
-    *    slot. Returned conformed back to its input schema. */
+    * determinism (x13) and every oracle hold. The legs:
+    *  - `frontier` (tag 0): frontier rows — the next frontier without a
+    *    store, the step's upserts with one ([[StepDriver]]);
+    *  - `budgets` (tag 1): the politeness state;
+    *  - `results` (tag 2): result rows — the cumulative table without a
+    *    store, the step's first results with one;
+    *  - `counters` (tag 3, optional): the step's lazy counters aggregate
+    *    ([[Superstep.StepResult.counters]]) as (project, counter name ->
+    *    value in the r_data map slot); the returned Rows are recovered by
+    *    name with a narrow filter-collect over the already-cached
+    *    checkpoint RDD — values identical to a separate collect (same
+    *    aggregate plan, same input), only the action count changes. A null
+    *    sum travels as 0;
+    *  - `packed` (tag 4, optional): a (step,url,status,retried,exetime)
+    *    projection (p7's per-step trajectory rows); `step` travels in the
+    *    priority slot;
+    *  - `freshKeys` (tag 5, optional): the (project, url_hash) keys a store
+    *    commit adds to its seen index. */
   private[graft] def checkpointCarryFused(frontier: DataFrame, budgets: DataFrame,
-      results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame])
-      : (DataFrame, DataFrame, DataFrame,
-        Seq[org.apache.spark.sql.Row], Option[DataFrame]) = {
+      results: DataFrame, counters: Option[DataFrame], packed: Option[DataFrame],
+      freshKeys: Option[DataFrame] = None): Carry = {
     import frontier.sparkSession.implicits._
     val fc = Superstep.frontierCols
     // Bound the checkpoint's partition count with a NARROW coalesce. Under
@@ -170,7 +175,7 @@ object Crawler {
     // an 8-step crawl reached a 40k-task stage). coalesce merges without a
     // shuffle; values and split-back semantics are unchanged.
     val maxParts = math.max(1, frontier.sparkSession.sessionState.conf.numShufflePartitions)
-    val ck = carryUnion(frontier, budgets, results, counters, packed)
+    val ck = carryUnion(frontier, budgets, results, counters, packed, freshKeys)
       .coalesce(maxParts).localCheckpoint()
     // conform each split frame back to its INPUT schema: the tag-union makes
     // every column nullable (other legs supply nulls), but downstream
@@ -178,8 +183,7 @@ object Crawler {
     // frontier byte-compare — expect the original nullability. AssertNotNull
     // is metadata-only here (the split rows ARE the input rows, never null
     // where the input wasn't).
-    def conform(df: org.apache.spark.sql.DataFrame,
-        to: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    def conform(df: DataFrame, to: StructType): DataFrame =
       df.select(to.map { f =>
         if (f.nullable) col(f.name)
         else org.apache.spark.sql.GraftColumnShim.column(
@@ -194,36 +198,37 @@ object Crawler {
     // counter-row recovery: narrow filter + collect over the cached
     // checkpoint RDD — rows were computed by the checkpoint job above, this
     // is driver-side unpacking, not a second pass over the step
-    val counterRows: Seq[org.apache.spark.sql.Row] = counters match {
+    val counterRows: Seq[Row] = counters match {
       case None => Nil
       case Some(cdf) =>
         val schema = cdf.schema
         ck.where($"tag" === 3).select($"project", $"r_data").collect().toIndexedSeq.map { r =>
           val byName = r.getMap[String, String](1)
-          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            schema.fieldNames.map {
-              case "project" => r.getString(0): Any
-              case n =>
-                require(byName.contains(n), s"counter '$n' missing from the carry checkpoint")
-                byName(n).toLong: Any
-            }, schema)
+          new GenericRowWithSchema(schema.fieldNames.map {
+            case "project" => r.getString(0): Any
+            case n =>
+              require(byName.contains(n), s"counter '$n' missing from the carry checkpoint")
+              byName(n).toLong: Any
+          }, schema)
         }
     }
     val p2 = packed.map(pdf => conform(
       ck.where($"tag" === 4).select($"priority".as("step"), $"url", $"status",
         $"retried", $"exetime"), pdf.schema))
-    (f2, b2, r2, counterRows, p2)
+    val k2 = freshKeys.map(kdf =>
+      conform(ck.where($"tag" === 5).select($"project", $"url_hash"), kdf.schema))
+    Carry(f2, b2, r2, counterRows, p2, k2)
   }
 
   def emptyBudgets(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       graft.frontier.FrontierStore.budgetsSchema)
 
   def emptyResults(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], resultSchema)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], resultSchema)
 
   def emptyCounters(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("project", StringType))))
 
   /**

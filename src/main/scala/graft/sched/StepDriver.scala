@@ -1,10 +1,8 @@
 package graft.sched
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.frontier.{FrontierStore, SnapshotStore, StoreSnapshot}
 import graft.model.TaskStatus
 
@@ -13,9 +11,17 @@ import graft.model.TaskStatus
  * reference's one frontier loop (`scheduler.py` run_once: select, dispatch,
  * fold status packs, finish projects). The driver owns bootstrap/resume,
  * the remaining-ACTIVE termination count, the small-step broadcast gate,
- * the superstep with lazy counters, the commit (a store snapshot, or the
- * fused carry checkpoint without a store), the counter fold and the release
- * of the previous step's checkpointed RDDs. Each loop keeps only its own
+ * the superstep with lazy counters, the commit, the counter fold and the
+ * release of the previous step's checkpointed RDDs.
+ *
+ * A commit has one path. One fused carry checkpoint
+ * ([[Crawler.checkpointCarryFused]]) runs the superstep's output graph once
+ * and returns the step's counter rows, which every loop folds. Without a
+ * store the checkpoint's splits are the next frontier, budgets and results.
+ * With one, its legs are the store's inputs (the upserts, the fresh keys,
+ * the budgets and the first results), and the store writes them as a
+ * snapshot with the counter rows as a local frame; the next step reads the
+ * committed snapshot back. Each loop keeps only its own
  * part: [[Crawler.run]] prepares a pages table once,
  * [[graft.fetch.LiveCrawler]] selects, fetches and hands in the
  * preselected slice, [[graft.streaming.StreamingCrawl]] merges each
@@ -128,57 +134,46 @@ private[graft] final class StepDriver(spark: SparkSession, projects: DataFrame,
       cfg.copy(smallStep = small),
       store.flatMap(_.seenFilter(spark)), seedMerge.map(_.seen), preselected)
     stepNo += 1
-    // r.firstResults is the first-writer-wins delta (REPLACE INTO,
-    // resultdb.py:52-66): O(step), never an anti-join against history
-    val counterRows: Seq[Row] = store match {
-      case Some(s) =>
+    // One materialization per step, with or without a store: the carry
+    // checkpoint runs the superstep's output graph once, and whatever the
+    // commit writes is a narrow split of it. r.firstResults is the
+    // first-writer-wins delta (REPLACE INTO, resultdb.py:52-66): O(step),
+    // never an anti-join against history.
+    val ck = store match {
+      case Some(_) =>
         // the superstep's upserts win over a seed upsert of the same task;
         // a small step broadcasts their keys instead of a shuffle anti-join
         val stepKeys = r.upserts.select("project", "url_hash")
         val upserts = seedMerge.fold(r.upserts)(m => r.upserts.unionByName(m.upserts.join(
           if (small) broadcast(stepKeys) else stepKeys, Seq("project", "url_hash"), "left_anti")))
         val freshKeys = seedMerge.fold(r.freshKeys)(m => r.freshKeys.unionByName(m.freshKeys))
-        s.writeIncremental(spark, stepNo, now, upserts, freshKeys, r.budgets,
-          r.firstResults, r.counters)
-        val snap = s.read(spark).get
-        load(snap)
-        counterDeltas(snap.counterTotals, r.counters.schema)
+        Crawler.checkpointCarryFused(upserts, r.budgets, r.firstResults, Some(r.counters),
+          None, Some(freshKeys))
       case None =>
-        // one materialization job for the carry frames and the counters
-        val (f, b, res, rows, _) = Crawler.checkpointCarryFused(r.frontier, r.budgets,
+        Crawler.checkpointCarryFused(r.frontier, r.budgets,
           results.unionByName(r.firstResults), Some(r.counters), None)
-        frontierDf = f; budgetsDf = b; results = res
-        rows
     }
-    counterRows.foreach(fold)
+    val counters = spark.createDataFrame(java.util.Arrays.asList(ck.counterRows: _*),
+      r.counters.schema)
+    store match {
+      case Some(s) =>
+        s.writeIncremental(spark, stepNo, now, ck.frontier, ck.freshKeys.get, ck.budgets,
+          ck.results, counters)
+        load(s.read(spark).get)
+      case None =>
+        frontierDf = ck.frontier; budgetsDf = ck.budgets; results = ck.results
+    }
+    ck.counterRows.foreach(fold)
     r.unpersistAll()
     val sc = spark.sparkContext
     prevCheckpoints.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    // a store-mode frontier is a parquet view: no RDD to track
-    prevCheckpoints = (checkpoints :+ frontierDf).flatMap(ckRddId).toSet
+    prevCheckpoints = (checkpoints :+ ck.frontier).flatMap(ckRddId).toSet
     if (terminates) {
-      countersPerStep += spark.createDataFrame(java.util.Arrays.asList(counterRows: _*),
-        r.counters.schema).withColumn("step", lit(stepNo))
+      countersPerStep += counters.withColumn("step", lit(stepNo))
       stepSecs += (System.nanoTime() - lastMark) / 1e9
     }
     lastMark = System.nanoTime()
   }
-
-  /** This step's per-project counter rows: the committed manifest totals
-    * minus the running ones. The commit collected the lazy counters
-    * alongside its write jobs, so no separate counters action runs. */
-  private def counterDeltas(after: Map[String, Map[String, Long]],
-      schema: StructType): Seq[Row] =
-    after.toSeq.sortBy(_._1).flatMap { case (p, a) =>
-      val before = totals.getOrElse(p, Map.empty[String, Long])
-      val vals = schema.fieldNames.map {
-        case "project" => p: Any
-        case n => (a.getOrElse(n, 0L) - before.getOrElse(n, 0L)): Any
-      }
-      if (vals.exists { case l: Long => l != 0L; case _ => false })
-        Some(new GenericRowWithSchema(vals, schema))
-      else None
-    }
 
   /** Fold one project's counter row: totals, and for a terminating loop the
     * ACTIVE count (fresh inserts are ACTIVE; SUCCESS/FAILED leave it). A

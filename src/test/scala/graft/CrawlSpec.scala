@@ -310,9 +310,9 @@ class CrawlSpec extends AnyFunSuite {
   test("fused carry: counters travel keyed by name; a null counter reads back as 0") {
     val counters = Seq(("p1", Some(3L), Option.empty[Long], Some(7L)))
       .toDF("project", "a", "b", "c")
-    val (_, _, _, rows, _) = Crawler.checkpointCarryFused(
+    val rows = Crawler.checkpointCarryFused(
       mkFrontier(Seq(("x", 1L, 0, 0.0))), Crawler.emptyBudgets(spark),
-      Crawler.emptyResults(spark), Some(counters), None)
+      Crawler.emptyResults(spark), Some(counters), None).counterRows
     assert(rows.map(r => (r.getAs[String]("project"), r.getAs[Long]("a"),
       r.getAs[Long]("b"), r.getAs[Long]("c"))) == Seq(("p1", 3L, 0L, 7L)))
   }

@@ -11,7 +11,7 @@ class ProbeSpec extends AnyFunSuite {
     try {
       val Seq(s) = Probe.run(spark, Seq("c5_politeness_schedule"), 1, Some(dir), "unused")
       assert(s.query == "c5_politeness_schedule" && s.rows == 32)
-      assert(s.jobs >= 1, s.toString)
+      assert(s.jobs >= 1 && s.sql >= 1, s.toString)
       val plan = Files.readString(dir.resolve("c5_politeness_schedule_after.txt"))
       val largest = plan.split("---- largest internal execution").last
       // the carry checkpoint: a tagged union of the frontier, budgets and
