@@ -167,10 +167,8 @@ object SparkEntry {
       val snap = store.read(s).get
       val f = snap.frontier.selectExpr("project", "url", "status", "retried").orderBy("url")
       val lineage = (1L to store.currentId.get).map { id =>
-        val m = store.manifestJson(id)
-        def lf(k: String): Long =
-          ("\"" + k + "\":(\\d+)").r.findFirstMatchIn(m).get.group(1).toLong
-        (lf("snapshot"), lf("step").toInt, lf("frontier_rows"))
+        val m = store.manifest(id)
+        (m.snapshot, m.step, m.frontier_rows)
       }
       val out = ((f.collect().toSeq, f.schema),
         snap.counterTotals.getOrElse("p1", Map.empty), lineage)

@@ -15,8 +15,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
  * I/O follows the step, not the frontier:
  *
  *   root/VERSION                     current snapshot id (atomic swap)
- *   root/snap-N/manifest.json        step, now, per-bucket OWNER lineage
- *                                    (which snapshot last wrote each bucket),
+ *   root/snap-N/manifest.json        [[FrontierStore.Manifest]] as compact
+ *                                    JSON: step, now, the layout's bucket
+ *                                    counts (checked on every read),
+ *                                    per-bucket OWNER lineage (which
+ *                                    snapshot last wrote each bucket),
  *                                    per-bucket row counts, counters
  *   root/snap-N/frontier/bucket=B/   ONLY the buckets this step touched;
  *                                    untouched buckets resolve through the
@@ -80,52 +83,37 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
 
   // ---------------- manifest ----------------
 
-  private final case class Manifest(id: Long, step: Int, now: Double, base: Long,
-      frontierOwner: Array[Long], rowsPerBucket: Array[Long],
-      resultSnaps: Seq[Long], seenChain: Seq[(Long, Set[Int])],
-      /** cumulative per-project counter totals across all steps (reference
-        * reloads counters on restart: scheduler.py:135-137) */
-      counterTotals: Map[String, Map[String, Long]])
-
-  private def field(m: String, key: String): Option[String] =
-    (s""""$key":"([^"]*)"""".r.findFirstMatchIn(m).map(_.group(1)))
-      .orElse(s""""$key":([-0-9.E]+)""".r.findFirstMatchIn(m).map(_.group(1)))
-
-  private def req(m: String, key: String, id: Long): String =
-    field(m, key).getOrElse(throw new IllegalStateException(
-      s"frontier-store manifest for snapshot $id is missing field '$key' — " +
-        s"incompatible or corrupt store at $rootDir (expected format ${FrontierStore.FormatVersion})"))
-
-  private def longs(s: String): Array[Long] =
-    if (s.isEmpty) Array.empty else s.split(",").map(_.toLong)
-
-  private def parseManifest(id: Long): Manifest = {
-    val m = Files.readString(snapDir(id).resolve("manifest.json"))
-    val fmt = field(m, "format").map(_.toInt).getOrElse(0)
+  /** The manifest of committed snapshot `id`. A manifest of another format,
+    * one that cannot be read, or a store written with other bucket counts
+    * than this instance's fails with a descriptive `IllegalStateException`. */
+  def manifest(id: Long): FrontierStore.Manifest = {
+    import org.json4s._
+    implicit val formats: Formats = DefaultFormats
+    def corrupt(e: Exception) = new IllegalStateException(
+      s"frontier-store manifest for snapshot $id cannot be read (${e.getMessage}) — " +
+        s"incompatible or corrupt store at $rootDir (expected format ${FrontierStore.FormatVersion})", e)
+    val json = try org.json4s.jackson.JsonMethods.parse(manifestJson(id))
+      catch { case e: Exception => throw corrupt(e) }
+    val fmt = (json \ "format").extractOpt[Int].getOrElse(0)
     if (fmt != FrontierStore.FormatVersion)
       throw new IllegalStateException(
         s"frontier store at $rootDir has manifest format $fmt but this build " +
           s"reads format ${FrontierStore.FormatVersion}; recreate the store " +
           "(snapshot layouts are not cross-version compatible)")
-    val chain = req(m, "seen_chain", id) match {
-      case "" => Seq.empty[(Long, Set[Int])]
-      case s => s.split(";").toSeq.map { e =>
-        val Array(snap, bs) = e.split(":", 2)
-        (snap.toLong, if (bs.isEmpty) Set.empty[Int] else bs.split("\\|").map(_.toInt).toSet)
-      }
-    }
-    val totals = FrontierStore.parseCounterTotals(m)
-    Manifest(id,
-      req(m, "step", id).toInt, req(m, "now", id).toDouble,
-      req(m, "base", id).toLong,
-      longs(req(m, "frontier_owner", id)), longs(req(m, "rows_per_bucket", id)),
-      longs(req(m, "results_snaps", id)).toSeq, chain, totals)
+    val mf = try json.extract[FrontierStore.Manifest]
+      catch { case e: Exception => throw corrupt(e) }
+    if (mf.num_partitions != numPartitions || mf.seen_buckets != seenBuckets)
+      throw new IllegalStateException(
+        s"frontier store at $rootDir was written with numPartitions = ${mf.num_partitions} " +
+          s"and seenBuckets = ${mf.seen_buckets} but is opened with numPartitions = " +
+          s"$numPartitions and seenBuckets = $seenBuckets; reopen it with the values it was written with")
+    mf
   }
 
   // ---------------- read ----------------
 
-  private def frontierView(spark: SparkSession, mf: Manifest): DataFrame = {
-    val paths = mf.frontierOwner.zipWithIndex.collect {
+  private def frontierView(spark: SparkSession, mf: FrontierStore.Manifest): DataFrame = {
+    val paths = mf.frontier_owner.zipWithIndex.collect {
       case (owner, b) if owner != 0L => snapDir(owner).resolve(s"frontier/bucket=$b").toString
     }
     // explicit schema on every store read: the layout is ours, so paying
@@ -137,8 +125,8 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
       .parquet(paths.toIndexedSeq: _*)
   }
 
-  private def resultsView(spark: SparkSession, mf: Manifest): DataFrame = {
-    val paths = mf.resultSnaps.map(s => snapDir(s).resolve("results-delta").toString)
+  private def resultsView(spark: SparkSession, mf: FrontierStore.Manifest): DataFrame = {
+    val paths = mf.results_snaps.map(s => snapDir(s).resolve("results-delta").toString)
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         graft.sched.Crawler.resultSchema)
@@ -149,19 +137,17 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
     graft.sched.Crawler.seedFrontier(spark, Seq.empty, 0.0)
 
   def read(spark: SparkSession): Option[StoreSnapshot] = currentId.map { id =>
-    val mf = parseManifest(id)
+    val mf = manifest(id)
     StoreSnapshot(id, mf.step, mf.now, frontierView(spark, mf),
       spark.read.schema(FrontierStore.budgetsSchema)
         .parquet(snapDir(id).resolve("budgets").toString),
-      resultsView(spark, mf), mf.counterTotals,
-      frontierRows = mf.rowsPerBucket.sum)
+      resultsView(spark, mf), mf.counter_totals, frontierRows = mf.frontier_rows)
   }
 
   /** The distributed URL-seen probe for the current snapshot (None before
     * the first write). */
   def seenFilter(spark: SparkSession): Option[SeenFilter] = currentId.map { id =>
-    val mf = parseManifest(id)
-    SeenFilter(seenBuckets, rootDir, mf.seenChain)
+    SeenFilter(seenBuckets, rootDir, manifest(id).deltaChain)
   }
 
   // ---------------- write ----------------
@@ -183,7 +169,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
       upserts: DataFrame, freshKeys: DataFrame,
       budgets: DataFrame, newResults: DataFrame, counters: DataFrame): Long = {
     val prevId = currentId.getOrElse(0L)
-    val prev = if (prevId == 0) None else Some(parseManifest(prevId))
+    val prev = if (prevId == 0) None else Some(manifest(prevId))
     val id = prevId + 1
     val full = prev.isEmpty || (id - prev.get.base) >= compactEvery
     val tmp = root.resolve(FrontierStore.snapName(id) + ".tmp")
@@ -223,8 +209,8 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
         else incStats.keys.collect { case (0, b) => b }.toArray.sorted
       val oldTouched = prev.flatMap { mf =>
         val paths = touched.collect {
-          case b if mf.frontierOwner(b) != 0L =>
-            snapDir(mf.frontierOwner(b)).resolve(s"frontier/bucket=$b").toString
+          case b if mf.frontier_owner(b) != 0L =>
+            snapDir(mf.frontier_owner(b)).resolve(s"frontier/bucket=$b").toString
         }
         if (paths.isEmpty) None
         else Some(spark.read.schema(FrontierStore.frontierSchema).parquet(paths.toIndexedSeq: _*))
@@ -304,7 +290,7 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
         // reference forgets a deleted project's taskdb entirely
         val fresh = freshKeys.select("project", "url_hash")
         persisted(withSeenKey(keptOnly(prev.fold(fresh)(mf =>
-          SeenFilter(seenBuckets, rootDir, mf.seenChain).keysFor(spark, 0 until seenBuckets)
+          SeenFilter(seenBuckets, rootDir, mf.deltaChain).keysFor(spark, 0 until seenBuckets)
             .unionByName(fresh)))))
       }
       val keysPerBucket: Map[Int, Long] =
@@ -342,8 +328,9 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
             }
           }
       }
-      val delta = if (seenTouched.nonEmpty) Seq(id -> seenTouched.toSet) else Seq.empty
-      val seenChain = if (full) delta else prev.map(_.seenChain).getOrElse(Seq.empty) ++ delta
+      val delta =
+        if (seenTouched.nonEmpty) Seq(FrontierStore.SeenDelta(id, seenTouched.toSeq)) else Seq.empty
+      val seenChain = if (full) delta else prev.map(_.seen_chain).getOrElse(Seq.empty) ++ delta
 
       // ---- 3. results: an appended delta; a compaction rewrites the history
       // without the dropped projects' rows — otherwise a later re-seed of
@@ -359,61 +346,45 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
       val hasResults = FrontierStore.footerRowCount(spark, resultsDir) > 0
       if (!hasResults) deleteRecursively(resultsDir) // keep zero-row dirs out of the view
       val resultSnaps =
-        (if (full) Seq.empty else prev.map(_.resultSnaps).getOrElse(Seq.empty)) ++
+        (if (full) Seq.empty else prev.map(_.results_snaps).getOrElse(Seq.empty)) ++
           (if (hasResults) Seq(id) else Seq.empty)
 
       // ---- 4. budgets: the whole politeness state, replaced
       budgets.coalesce(math.max(1, numPartitions / 8))
         .write.mode(SaveMode.Overwrite).parquet(tmp.resolve("budgets").toString)
 
-      val frontierOwner = Array.tabulate(numPartitions) { b =>
+      val frontierOwner = Vector.tabulate(numPartitions) { b =>
         if (writtenCounts.contains(b)) id
         // a touched-but-now-empty bucket must NOT keep pointing at an old
         // snapshot: on a compaction snapshot the old owners are GC'd below
         else if (full || touched.contains(b)) 0L
-        else prev.map(_.frontierOwner(b)).getOrElse(0L)
+        else prev.map(_.frontier_owner(b)).getOrElse(0L)
       }
-      val rowsPerBucket = Array.tabulate(numPartitions) { b =>
+      val rowsPerBucket = Vector.tabulate(numPartitions) { b =>
         if (writtenCounts.contains(b)) writtenCounts(b)
         else if (full || touched.contains(b)) 0L
-        else prev.map(_.rowsPerBucket(b)).getOrElse(0L)
+        else prev.map(_.rows_per_bucket(b)).getOrElse(0L)
       }
 
       // ---- manifest. The counter rows arrive as a handful of rows (one per
       // project; the crawl loops pass the rows their step checkpoint
-      // returned as a local frame) — sorted on the driver.
-      val counterRows = counters.collect().sortBy(_.getAs[String]("project"))
-      val perProject = counterRows.map { r =>
-        val fields = r.schema.fieldNames.map { f =>
-          val vs = r.getAs[Any](f) match {
-            case s: String => FrontierStore.jsonStr(s)
-            case other => String.valueOf(other)
-          }
-          s"""${FrontierStore.jsonStr(f)}:$vs"""
-        }.mkString(",")
-        s"{$fields}"
-      }.mkString("[", ",", "]")
-      // cumulative per-project totals (reference counter reload semantics):
-      // prev totals + this step's numeric counter fields
-      val counterTotals: Map[String, Map[String, Long]] =
-        counterRows.foldLeft(prev.map(_.counterTotals).getOrElse(Map.empty))(
-          FrontierStore.foldCounterRow)
-      val lineageJson = touched
-        .map(b => s"""{"partition":$b,"rows":${rowsPerBucket(b)},"owner":$id}""")
-        .mkString("[", ",", "]")
-      val base = if (full) id else prev.get.base
+      // returned as a local frame). This step's counters and the cumulative
+      // totals (reference counter reload semantics) share one shape.
+      val counterRows = counters.collect().map(r => r.getAs[String]("project") -> r)
+      val prevTotals = prev.map(_.counter_totals).getOrElse(Map.empty)
+      val mf = FrontierStore.Manifest(FrontierStore.FormatVersion, id, step, now,
+        base = if (full) id else prev.get.base, full = full,
+        num_partitions = numPartitions, seen_buckets = seenBuckets,
+        frontier_rows = rowsPerBucket.sum, frontier_owner = frontierOwner,
+        rows_per_bucket = rowsPerBucket, seen_chain = seenChain,
+        results_snaps = resultSnaps,
+        counter_totals = prevTotals ++ counterRows.map { case (p, r) =>
+          p -> FrontierStore.foldCounterRowOne(prevTotals.getOrElse(p, Map.empty), r) },
+        touched_partitions = touched.toSeq,
+        counters = counterRows.map { case (p, r) =>
+          p -> FrontierStore.foldCounterRowOne(Map.empty, r) }.toMap)
       Files.writeString(tmp.resolve("manifest.json"),
-        s"""{"format":${FrontierStore.FormatVersion},
-           |"snapshot":$id,"step":$step,"now":$now,"base":$base,"full":$full,
-           |"num_partitions":$numPartitions,"seen_buckets":$seenBuckets,
-           |"frontier_rows":${rowsPerBucket.sum},
-           |"frontier_owner":"${frontierOwner.mkString(",")}",
-           |"rows_per_bucket":"${rowsPerBucket.mkString(",")}",
-           |"seen_chain":"${seenChain.map { case (s, bs) => s"$s:${bs.toSeq.sorted.mkString("|")}" }.mkString(";")}",
-           |"results_snaps":"${resultSnaps.mkString(",")}",
-           |"counter_totals":"${FrontierStore.encodeCounterTotals(counterTotals)}",
-           |"touched_partitions":$lineageJson,
-           |"counters":$perProject}""".stripMargin)
+        org.json4s.jackson.Serialization.write(mf)(org.json4s.DefaultFormats))
     } finally cached.foreach(_.unpersist(false))
 
     val fin = snapDir(id)
@@ -440,12 +411,41 @@ final class FrontierStore(rootDir: String, numPartitions: Int,
 
 object FrontierStore {
   /** Bumped whenever the snapshot/manifest layout changes — a mismatched
-    * store fails fast with a descriptive error instead of a regex NPE.
+    * store fails fast with a descriptive error.
     * v4: frontier rows carry `crawled_ok` (first-writer-wins result dedup
     * without an O(history) anti-join).
     * v5: the seen index is one lineage, `seen_chain`, of per-snapshot key
-    * deltas and delta blooms (no `seen_owner`/`seen_rows`/`seen_cap`). */
-  val FormatVersion = 5
+    * deltas and delta blooms (no `seen_owner`/`seen_rows`/`seen_cap`).
+    * v6: the manifest is [[Manifest]] as plain JSON: lists are arrays,
+    * counters are project → name → value objects. */
+  val FormatVersion = 6
+
+  /** One snapshot's `manifest.json`, written and read by json4s with its
+    * default formats; the field names are the JSON keys.
+    *
+    * @param frontier_owner per frontier bucket, the snapshot that last
+    *                       wrote it (0 = empty bucket)
+    * @param seen_chain     which snapshots added keys to which seen buckets,
+    *                       oldest first — the lineage of key deltas and blooms
+    * @param results_snaps  snapshots holding a results delta, oldest first
+    * @param counter_totals cumulative project → counter → value over every
+    *                       committed step (the reference reloads its counters
+    *                       on restart: scheduler.py:135-137)
+    * @param counters       this step's counters, in the same shape
+    */
+  final case class Manifest(format: Int, snapshot: Long, step: Int, now: Double,
+      base: Long, full: Boolean, num_partitions: Int, seen_buckets: Int,
+      frontier_rows: Long, frontier_owner: Vector[Long], rows_per_bucket: Vector[Long],
+      seen_chain: Seq[SeenDelta], results_snaps: Seq[Long],
+      counter_totals: Map[String, Map[String, Long]],
+      touched_partitions: Seq[Int],
+      counters: Map[String, Map[String, Long]]) {
+    /** `seen_chain` in [[SeenFilter]]'s form. */
+    def deltaChain: Seq[(Long, Set[Int])] = seen_chain.map(d => d.snapshot -> d.buckets.toSet)
+  }
+
+  /** One `seen_chain` entry: `snapshot` added keys to these seen buckets. */
+  final case class SeenDelta(snapshot: Long, buckets: Seq[Int])
 
   /** Smallest key count a delta bloom is built for. Spark's bloom indexes
     * its bits by double hashing modulo the bit count, which degenerates in
@@ -492,18 +492,10 @@ object FrontierStore {
     finally walk.close()
   }
 
-  /** Fold one per-project counter Row's Long fields into running totals —
-    * ONE implementation shared by the store's persisted manifest totals and
-    * Crawler's in-memory totals, so the two can never silently diverge. */
-  def foldCounterRow(acc: Map[String, Map[String, Long]],
-      row: org.apache.spark.sql.Row): Map[String, Map[String, Long]] = {
-    val p = row.getAs[String]("project")
-    acc.updated(p, foldCounterRowOne(acc.getOrElse(p, Map.empty[String, Long]), row))
-  }
-
-  /** Single-project fold: this row's Long fields into that project's running
-    * entry only — the per-row form Crawler uses so updating one project is
-    * O(fields), not an O(projects) snapshot of the whole accumulator. */
+  /** The one counter fold: a project's counter row, its Long fields added
+    * into that project's running entry. The manifest's step counters and
+    * totals and [[graft.sched.StepDriver]]'s in-memory totals all use it, so
+    * they cannot diverge. */
   def foldCounterRowOne(prevForProject: Map[String, Long],
       row: org.apache.spark.sql.Row): Map[String, Long] =
     row.schema.fields.collect {
@@ -512,42 +504,4 @@ object FrontierStore {
     }.foldLeft(prevForProject) {
       case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v)
     }
-
-  /** Minimal JSON string escaping (quote, backslash, control chars). */
-  def jsonStr(s: String): String = {
-    val sb = new StringBuilder(s.length + 2); sb.append('"')
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"'); sb.toString
-  }
-
-  /** Counter totals travel inside a JSON string field; project names are
-    * URL-encoded so the payload stays regex-parseable regardless of what
-    * characters a project name contains. */
-  def encodeCounterTotals(t: Map[String, Map[String, Long]]): String =
-    t.toSeq.sortBy(_._1).map { case (p, m) =>
-      val enc = java.net.URLEncoder.encode(p, "UTF-8")
-      s"$enc=" + m.toSeq.sorted.map { case (k, v) => s"$k~$v" }.mkString("|")
-    }.mkString(";")
-
-  def parseCounterTotals(manifest: String): Map[String, Map[String, Long]] = {
-    val raw = """"counter_totals":"([^"]*)"""".r
-      .findFirstMatchIn(manifest).map(_.group(1)).getOrElse("")
-    if (raw.isEmpty) Map.empty
-    else raw.split(";").map { e =>
-      val Array(p, ms) = e.split("=", 2)
-      val m = if (ms.isEmpty) Map.empty[String, Long]
-        else ms.split("\\|").map { kv =>
-          val Array(k, v) = kv.split("~", 2); k -> v.toLong
-        }.toMap
-      java.net.URLDecoder.decode(p, "UTF-8") -> m
-    }.toMap
-  }
 }

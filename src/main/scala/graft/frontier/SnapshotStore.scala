@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One committed snapshot of crawl state, as read back from a store. */
 final case class StoreSnapshot(id: Long, step: Int, now: Double,
     frontier: DataFrame, budgets: DataFrame, results: DataFrame,
-    /** cumulative per-project counter totals across all committed steps */
+    /** cumulative project → counter → value totals across all committed
+      * steps ([[FrontierStore]] keeps them in its manifest) */
     counterTotals: Map[String, Map[String, Long]] = Map.empty,
     /** total frontier rows in this snapshot (from lineage metadata; -1 =
       * unknown). Crawl loops use it to size-gate the small-step broadcast
@@ -33,6 +34,9 @@ final case class StoreSnapshot(id: Long, step: Int, now: Double,
  *  - a zero-upsert commit (scheduling lull) still commits and carries the
  *    frontier forward unchanged
  *  - `seenFilter` covers exactly the freshKeys of every committed snapshot
+ *  - a store written in another format, or opened with another layout than
+ *    it was written with, fails with a descriptive `IllegalStateException`
+ *    instead of reading back wrong state
  *  - cost: a commit is O(touched state + step size), never O(frontier) —
  *    except on designated compaction snapshots, which re-base lineage and
  *    garbage-collect (the suite checks equivalence across that boundary, the

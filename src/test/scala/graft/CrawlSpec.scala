@@ -225,9 +225,7 @@ class CrawlSpec extends AnyFunSuite {
       Crawler.CrawlConfig(maxSteps = 5, now0 = now0), Some(store))
     val id = store.currentId.get
     assert(id >= 5)
-    val m = store.manifestJson(id)
-    val owners = "\"frontier_owner\":\"([^\"]*)\"".r.findFirstMatchIn(m).get.group(1)
-      .split(",").map(_.toLong)
+    val owners = store.manifest(id).frontier_owner
     // later steps touch only the buckets holding host0's rows: at least one
     // bucket written by an older snapshot is still current via lineage, and
     // the final snapshot wrote only a subset of buckets
@@ -267,8 +265,8 @@ class CrawlSpec extends AnyFunSuite {
       now0 = now0, fetch = fixtureFetch, store = Some(new FrontierStore(liveDir, 8,
         seenBuckets = 16)))
     def rows(df: DataFrame) = df.orderBy("project", "url_hash").collect().toSeq
-    // per-step counters travel lazily: through the carry checkpoint without
-    // a store, through the manifest totals with one
+    // per-step counters travel lazily, in the carry checkpoint with or
+    // without a store
     def perStep(run: Crawler.CrawlRun) =
       run.countersPerStep.map(_.orderBy("project").collect().map(_.toSeq).toSeq)
     for ((name, run) <- Seq("stored" -> stored, "live" -> liveExact,
@@ -499,6 +497,34 @@ class CrawlSpec extends AnyFunSuite {
       FrontierStore.FormatVersion, "\"format\":1"))
     val e = intercept[IllegalStateException](store.read(spark))
     assert(e.getMessage.contains("manifest format"))
+  }
+
+  test("store manifest: a truncated manifest or a reopen with another layout fails with the store's error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout")
+    val sf = Crawler.seedFrontier(spark, Seq("p1" -> "http://h0.test/a"), now0)
+    def commit(store: FrontierStore, step: Int): Long =
+      store.writeIncremental(spark, step, now0, sf, sf.select("project", "url_hash"),
+        Crawler.emptyBudgets(spark), Crawler.emptyResults(spark), Crawler.emptyCounters(spark))
+    val id = commit(new FrontierStore(dir.toString, 8), 1)
+    // compact JSON: a compaction shows as this exact substring
+    assert(new FrontierStore(dir.toString, 8).manifestJson(id).contains("\"full\":true"))
+    // fewer partitions would drop the owners of buckets 4-7, more would
+    // index past the owner list, other seen buckets probe the wrong blooms
+    for ((parts, seen) <- Seq((4, 64), (16, 64), (8, 32))) {
+      val e = intercept[IllegalStateException](
+        commit(new FrontierStore(dir.toString, parts, seenBuckets = seen), 2))
+      for (named <- Seq("numPartitions = 8", "seenBuckets = 64",
+          s"numPartitions = $parts", s"seenBuckets = $seen"))
+        assert(e.getMessage.contains(named), e.getMessage)
+    }
+    val store = new FrontierStore(dir.toString, 8)
+    assert(store.currentId.contains(id) && store.read(spark).get.frontierRows == 1)
+    // a truncated manifest never surfaces as a raw JSON exception
+    val mPath = dir.resolve(FrontierStore.snapName(id)).resolve("manifest.json")
+    val m = java.nio.file.Files.readString(mPath)
+    java.nio.file.Files.writeString(mPath, m.take(m.length / 2))
+    val e = intercept[IllegalStateException](store.read(spark))
+    assert(e.getMessage.contains("corrupt store"), e.getMessage)
   }
 
   private def seedBatch(lo: Int, n: Int): DataFrame = Crawler.seedFrontier(spark,
